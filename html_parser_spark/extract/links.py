@@ -23,6 +23,8 @@ from pyspark.sql.types import (
     BooleanType, StringType, StructField, StructType,
 )
 
+from .._worker import prepare_worker
+
 __all__ = ["links_of", "extract_links", "host_link_graph", "host_rank",
            "LINKS_SCHEMA"]
 
@@ -62,6 +64,7 @@ def links_of(html: str) -> list[dict]:
 
 
 def _links_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    prepare_worker()
     from ..htmlkit.charset import sniff_decode
     for b in batches:
         out = {f.name: [] for f in LINKS_SCHEMA.fields}

@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
+from .._worker import prepare_worker
+
 __all__ = ["MEDIA_FEATURES_SCHEMA", "MEDIA_DECODE_SCHEMA",
            "MEDIA_META_SCHEMA", "media_meta_features", "media_metadata",
            "mp3_metadata", "mp4_metadata", "wav_metadata",
@@ -1894,6 +1896,10 @@ def wav_metadata(raw: bytes) -> dict:
         pos += 8 + clen + (clen & 1)
     if sr is None or data_len is None:
         raise ValueError("WAV fmt/data chunk missing")
+    if nch == 0 or sr == 0:
+        raise ValueError("WAV fmt chunk declares 0 channels or 0 Hz")
+    if bits < 8:
+        raise ValueError(f"WAV bits_per_sample {bits} < 8")
     n_frames = data_len // (nch * (bits // 8))
     return {"format": "wav", "duration_ms": n_frames * 1000.0 / sr,
             "sample_rate": sr, "channels": nch,
@@ -2018,6 +2024,7 @@ def resize_image(payload: bytes, width: int, height: int) -> bytes:
 
 
 def _features_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    prepare_worker()
     for b in batches:
         ids = b["media_id"].tolist()
         kinds = b["kind"].tolist()
@@ -2066,6 +2073,7 @@ def _channel_means(img: dict) -> tuple:
 
 
 def _decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    prepare_worker()
     import numpy as np
     for b in batches:
         out = {k.name: [] for k in MEDIA_DECODE_SCHEMA.fields}
@@ -2134,6 +2142,7 @@ _META_NULLS = ("fmt", "duration_ms", "bitrate_kbps", "sample_rate",
 
 
 def _meta_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    prepare_worker()
     for b in batches:
         out = {k.name: [] for k in MEDIA_META_SCHEMA.fields}
         for mid, p in zip(b["media_id"].tolist(), b["payload"].tolist()):
@@ -2191,6 +2200,7 @@ def thumbnail_features(media: DataFrame, width: int = 8,
     status='error:<type>' — never a dropped image, never a failed job
     (matching decode_media_features' contract for the same payload)."""
     def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_worker()
         import numpy as np
         for b in batches:
             out = {k.name: [] for k in THUMBNAIL_SCHEMA.fields}

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .._worker import prepare_worker
+
 __all__ = ["dot", "l2_norm", "cosine", "dot_unrolled", "l2_norm_unrolled",
            "brute_force_topk", "lsh_bucket", "ivf_topk", "kmeans_cells",
            "near_dup_pairs", "lsh_bucketed_topk"]
@@ -148,6 +150,7 @@ def near_dup_pairs(corpus: DataFrame, threshold: float = 0.9,
         F.col("x.rows").alias("rows_a"), F.col("y.rows").alias("rows_b"))
 
     def _block_cos(batches):
+        prepare_worker()
         import numpy as np
         import pandas as pd
         for pdf in batches:
@@ -222,6 +225,7 @@ def _assign_buckets(df: DataFrame, n_bits: int, id_col: str, vec_col: str,
     import numpy as np
 
     def fn(batches):
+        prepare_worker()
         import pandas as pd
         for pdf in batches:
             if pdf.empty:
@@ -370,6 +374,7 @@ def _assign_cells(corpus: DataFrame, cents: list[list[float]],
     Cn = C / np.linalg.norm(C, axis=1)[:, None]
 
     def fn(batches):
+        prepare_worker()
         import pandas as pd
         for pdf in batches:
             if pdf.empty:
@@ -420,6 +425,7 @@ def kmeans_cells(corpus: DataFrame, n_cells: int = 16, n_iter: int = 2,
         Cn = C / np.linalg.norm(C, axis=1)[:, None]
 
         def partials(batches):
+            prepare_worker()
             import pandas as pd
             for pdf in batches:
                 if pdf.empty:
@@ -495,6 +501,7 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     k_probe = min(n_probe, n_found)
 
     def probe(batches):
+        prepare_worker()
         import pandas as pd
         for pdf in batches:
             if pdf.empty:

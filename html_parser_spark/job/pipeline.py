@@ -16,6 +16,21 @@ Scale notes: per-row Python objects never escape the UDF; batches are capped
 by ``spark.sql.execution.arrow.maxRecordsPerBatch`` (pages are 0.4–1.8 MB —
 we set 256 rows/batch by default so a batch stays ≲0.5 GB); errors never fail
 the job (per-row status, error rows land in metrics — SURVEY.md §2.8).
+
+Python worker per-task cost: PySpark reuses a Python worker across tasks
+but charges each one a fixed set-up — ``importlib.invalidate_caches()``
+before it, which on Python < 3.12 makes each of ~16 zip importers (over
+``pyspark.zip``, py4j and the spark-core jar) re-read its archive's
+central directory, and the daemon's ``gc.collect()`` after it, which
+walks the ~74k-object import-time heap.
+That was ~0.23 CPU-s per task on a 4-CPU x86 VM (an identity
+``mapInArrow`` over 4 rows in 4 partitions). Every kernel therefore calls
+``_worker.prepare_worker()`` first: a stat-guarded ``invalidate_caches``
+(a no-op on Python ≥ 3.12, which re-reads lazily) plus one
+``gc.collect(); gc.freeze()``. A reused worker's later tasks now cost
+~0.017 CPU-s. perfbench ``rel_docs_per_cpu_s``, before → after (medians
+of seeds 1-3, same window): warc_links 0.213 → 0.372 (16 Python tasks
+per pass), product_pages 0.355 → 0.481, crawl_extract 0.451 → 0.538.
 """
 
 from __future__ import annotations
@@ -32,6 +47,8 @@ from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
     StructType, TimestampType,
 )
+
+from .._worker import prepare_worker
 
 __all__ = [
     "PAGES_SCHEMA", "EXTRACT_SCHEMA", "synthesize_pages", "extract_pages",
@@ -93,6 +110,7 @@ def synthesize_pages(spark: SparkSession, n: int,
     """Deterministic pages table of n rows, generated inside executors."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_worker()
         from ..sources import synth
         for b in batches:
             recs = [synth.page_record(int(i), filler=filler) for i in b["id"]]
@@ -177,24 +195,6 @@ def _extract_one_inner(url: str, html_bytes: Optional[bytes]) -> dict:
     return out
 
 
-def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas-compatible kernel (kept for tests/tools on pandas input)."""
-    cols = [f.name for f in EXTRACT_SCHEMA.fields]
-    for b in batches:
-        rows = []
-        urls = b["url"].tolist()
-        htmls = b["html"].tolist()
-        ts = b["warc_ts"].tolist()
-        langs = b["lang"].tolist() if "lang" in b else [None] * len(urls)
-        for url, h, t, lg in zip(urls, htmls, ts, langs):
-            rec = _extract_one(url, h)
-            rec["url"] = url
-            rec["warc_ts"] = t
-            rec["lang"] = lg
-            rows.append(rec)
-        yield pd.DataFrame(rows, columns=cols)
-
-
 # Output columns the Arrow kernel assembles, beyond the 3 pass-throughs.
 _STR_FIELDS = ("profile", "status", "envelope", "name", "brand")
 _TAIL_STR_FIELDS = ("text", "main_text")
@@ -203,12 +203,13 @@ _TAIL_STR_FIELDS = ("text", "main_text")
 def extract_batch_arrow(batches: "Iterator[pa.RecordBatch]"):
     """mapInArrow kernel — the production path.
 
-    Builds output columns directly as Arrow arrays from Python lists:
-    measured ~2× the mapInPandas variant end-to-end, because pandas
-    object-dtype round-trips (arrow→object Series→arrow) on ~25 KB string
-    columns dominate otherwise. The pass-through columns (url, warc_ts,
-    lang) are never materialized into Python at all except url.
+    Builds output columns directly as Arrow arrays from Python lists,
+    never through pandas: object-dtype round-trips (arrow→object
+    Series→arrow) on ~25 KB string columns made a ``mapInPandas`` version
+    of this kernel ~2× slower end-to-end. The pass-through columns (url,
+    warc_ts, lang) are never materialized into Python at all except url.
     """
+    prepare_worker()
     import pyarrow as pa
 
     for b in batches:

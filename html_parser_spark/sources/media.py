@@ -22,6 +22,8 @@ from pyspark.sql.types import (
     BinaryType, LongType, StringType, StructField, StructType,
 )
 
+from .._worker import prepare_worker
+
 __all__ = ["MEDIA_KINDS", "media_from_documents", "media_payloads",
            "media_meta_payloads", "PAYLOADS_SCHEMA"]
 
@@ -68,6 +70,7 @@ PAYLOADS_SCHEMA = StructType([
 
 
 def _payloads_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    prepare_worker()
     from html_parser_spark.functions.mediaops import (
         encode_bmp, encode_gif, encode_jpeg, encode_jpeg_progressive,
         encode_png, encode_wav)
@@ -118,6 +121,7 @@ def _payloads_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def _meta_payloads_batch(batches: Iterator[pd.DataFrame]
                          ) -> Iterator[pd.DataFrame]:
+    prepare_worker()
     from html_parser_spark.functions.mediaops import (
         _MP3_BITRATES, encode_mp3, encode_mp4, encode_wav)
     for b in batches:

@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
+from .._worker import prepare_worker
+
 __all__ = ["write_warc_record", "write_warc", "iter_warc_records",
            "pages_from_warc_blobs", "warc_blobs_from_pages",
     "WARC_PAGES_SCHEMA"]
@@ -138,6 +140,8 @@ def iter_warc_records(raw: bytes) -> Iterator[dict]:
                 clen = int(headers["content-length"])
             except (KeyError, ValueError):
                 raise ValueError("WARC record missing Content-Length")
+            if clen < 0:
+                raise ValueError(f"negative WARC Content-Length {clen}")
             content = chunk[hdr_end + 4:hdr_end + 4 + clen]
             if len(content) < clen:
                 raise ValueError("truncated WARC record content")
@@ -187,6 +191,7 @@ def warc_blobs_from_pages(pages: DataFrame) -> DataFrame:
     blob_id is the batch's first url hash so output is deterministic per
     partitioning."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_worker()
         for b in batches:
             if b.empty:
                 continue
@@ -203,10 +208,12 @@ def warc_blobs_from_pages(pages: DataFrame) -> DataFrame:
 def pages_from_warc_blobs(blobs: DataFrame,
                           blob_col: str = "warc") -> DataFrame:
     """WARC blobs → page rows (url, warc_date, http_status, content_type,
-    html). Map-only Arrow-batched parse; a malformed blob yields one
-    error row (url='', http_status=-1) rather than failing the job —
-    same never-fail contract as the extract kernel."""
+    html). Map-only Arrow-batched parse. A blob that turns out to be
+    malformed keeps the page rows of the records read before the bad one
+    and adds one error row (url='', http_status=-1, html NULL) instead of
+    failing the job — same never-fail contract as the extract kernel."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_worker()
         for b in batches:
             out = {f.name: [] for f in WARC_PAGES_SCHEMA.fields}
             for blob in b[blob_col]:

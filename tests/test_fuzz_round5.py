@@ -6,7 +6,10 @@ arbitrary text."""
 
 from __future__ import annotations
 
+import signal
 from struct import error as struct_error
+
+import pytest
 
 from hypothesis import given, settings, strategies as st
 
@@ -39,6 +42,23 @@ def test_warc_parse_typed_errors_only(raw):
         list(iter_warc_records(raw))
     except ValueError:
         pass  # the one allowed failure type (kernel degrades it)
+
+
+def test_warc_negative_content_length_raises_not_hangs():
+    """A negative Content-Length once moved the parse offset backwards
+    and looped forever; it must raise ValueError within the timeout."""
+    def hung(signum, frame):
+        raise TimeoutError("iter_warc_records hung")
+
+    old = signal.signal(signal.SIGALRM, hung)
+    signal.setitimer(signal.ITIMER_REAL, 5.0)
+    try:
+        with pytest.raises(ValueError, match="Content-Length"):
+            list(iter_warc_records(
+                b"WARC/1.0\r\nContent-Length: -33\r\n\r\n"))
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, old)
 
 
 @settings(max_examples=200, deadline=None)

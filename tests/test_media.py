@@ -297,6 +297,20 @@ def test_mp4_metadata_version1_boxes():
     assert (m["width"], m["height"]) == (320, 240)
 
 
+def _patched_wav(offset: int, fmt: str, value: int) -> bytes:
+    """A valid 16-bit mono WAV with one fmt-chunk field overwritten."""
+    import struct
+    from html_parser_spark.functions import mediaops as M
+    raw = bytearray(M.encode_wav([5] * 16, sample_rate=16000))
+    struct.pack_into(fmt, raw, offset, value)
+    return bytes(raw)
+
+
+ZERO_CHANNEL_WAV = _patched_wav(22, "<H", 0)
+FOUR_BIT_WAV = _patched_wav(34, "<H", 4)
+ZERO_RATE_WAV = _patched_wav(24, "<I", 0)
+
+
 def test_media_meta_kernel_never_fails(spark):
     """Junk/truncated/unknown payloads must land as error rows."""
     from html_parser_spark.functions import mediaops as M
@@ -307,6 +321,9 @@ def test_media_meta_kernel_never_fails(spark):
         (3, b"\x00\x01junkjunkjunk"),               # unknown magic
         (4, M.encode_mp4(64, 64, 1000)[:20]),       # truncated mp4
         (5, None),                                   # NULL payload
+        (6, ZERO_CHANNEL_WAV),
+        (7, FOUR_BIT_WAV),
+        (8, ZERO_RATE_WAV),
     ]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
     got = {r.media_id: r for r in M.media_meta_features(df).collect()}
@@ -316,6 +333,9 @@ def test_media_meta_kernel_never_fails(spark):
     assert got[3].status == "error:NotImplementedError"
     assert got[4].status.startswith("error:")
     assert got[5].status.startswith("error:")
+    assert got[6].status == "error:ValueError"
+    assert got[7].status == "error:ValueError"
+    assert got[8].status == "error:ValueError"
 
 
 def test_mp4_corrupt_largesize_raises_not_hangs():
