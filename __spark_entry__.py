@@ -661,7 +661,7 @@ def _q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     stat from doc_id alone, so a broken Huffman table, PNG filter, or WAV
     framing shows up as a value-hash mismatch — codec correctness is
     driver-gated, not only pytest-gated. Both stages are map-only
-    mapInPandas: payload bytes never enter an Exchange."""
+    mapInArrow row kernels: payload bytes never enter an Exchange."""
     docs = _t(spark, sf_dir, "documents")
     return mediaops.decode_media_features(media_payloads(docs))
 
@@ -699,8 +699,8 @@ def _q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the full WARC/HTTP reader (sources/warc.py) and emit per-record
     facts the DuckDB twin recomputes — a Content-Length slip, gzip
     member-boundary bug, or header-split error is a value-hash mismatch.
-    Both stages map-only mapInPandas; blob bytes never enter an
-    Exchange."""
+    Both stages map-only (mapInPandas write, mapInArrow row-kernel
+    parse); blob bytes never enter an Exchange."""
     from html_parser_spark.sources import warc as warcmod
     docs = _t(spark, sf_dir, "documents")
     did = F.col("doc_id")

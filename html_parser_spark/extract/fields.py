@@ -1,9 +1,7 @@
 """Shared scalar / fragment transforms (SURVEY.md §2.5, §2.7).
 
 Each helper names the reference operator it re-expresses. These run inside
-the Arrow-batched UDF; the same semantics exist as native Spark columns in
-``html_parser_spark.functions.native`` for values that already live in
-DataFrame columns.
+the extract kernel, called from ``rules/profiles.py`` on one page's values.
 """
 
 from __future__ import annotations

@@ -90,6 +90,7 @@ def extract_links(pages: DataFrame) -> DataFrame:
     contributes no link rows rather than failing the job — a missing
     page's outlinks are exactly what a real frontier loses when a fetch
     is corrupt."""
+    # Stays on mapInPandas: perfbench's traced runs measure that boundary here.
     return pages.select("url", "html").mapInPandas(
         _links_batch, LINKS_SCHEMA)
 
@@ -125,11 +126,12 @@ def host_rank(graph: DataFrame, iterations: int = 10,
 
     Plan shape per iteration (the crawl-scale contract): one keyed join
     of edges to current ranks + one combinable groupBy on dst — rank
-    rows are (host, double) pairs, never wider; edge weights are
+    rows are (host, dangling flag, double), never wider; edge weights are
     link-count proportional (a host linking another 100× counts 100×,
     normalized by its total outgoing count). Dangling mass (hosts with
     no outlinks) is redistributed uniformly each round via one scalar
-    aggregate, so ranks stay a probability distribution. Ranks are
+    aggregate, cross-joined into the round's plan (no driver round trip),
+    so ranks stay a probability distribution. Ranks are
     ``localCheckpoint``-ed per round (plan stays O(1) deep — same
     pattern as ``dedup_clusters``); on a real cluster swap in
     ``.checkpoint()`` for executor-loss-safe truncation."""
@@ -143,32 +145,36 @@ def host_rank(graph: DataFrame, iterations: int = 10,
              .select("src_host", "dst_host",
                      (F.col("w") / F.col("out_w")).alias("p"))
              .localCheckpoint())
-    hosts = (edges.select(F.col("src_host").alias("host"))
-             .unionByName(edges.select(F.col("dst_host").alias("host")))
-             .distinct().localCheckpoint())
+    # dangling = no outgoing edge; min() is False for any host seen as a src
+    hosts = (edges.select(F.col("src_host").alias("host"),
+                          F.lit(False).alias("dangling"))
+             .unionByName(edges.select(F.col("dst_host").alias("host"),
+                                       F.lit(True).alias("dangling")))
+             .groupBy("host").agg(F.min("dangling").alias("dangling"))
+             .localCheckpoint())
     n = hosts.count()
     if n == 0:
-        return hosts.withColumn("rank", F.lit(0.0))
+        return hosts.select("host", F.lit(0.0).alias("rank"))
     ranks = hosts.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
-    src_set = trans.select(F.col("src_host").alias("host")).distinct()
     for _ in range(iterations):
-        # mass sitting on dangling hosts (no outgoing edges) this round
-        dangling = (ranks.join(src_set, "host", "left_anti")
-                    .agg(F.sum("rank")).collect()[0][0]) or 0.0
-        contrib = (trans.join(ranks.withColumnRenamed("host", "src_host"),
-                              "src_host")
+        # mass sitting on dangling hosts this round: a 1-row aggregate
+        # joined into the round's plan, not collected to the driver
+        dangling = ranks.where("dangling").agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass"))
+        contrib = (trans.join(ranks.select(F.col("host").alias("src_host"),
+                                           "rank"), "src_host")
                    .groupBy("dst_host")
                    .agg(F.sum(F.col("p") * F.col("rank")).alias("inflow"))
                    .withColumnRenamed("dst_host", "host"))
-        base = (1.0 - damping) / n + damping * dangling / n
+        rank = (F.lit((1.0 - damping) / n)
+                + F.lit(damping) * F.col("mass") / F.lit(float(n))
+                + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)))
         new_ranks = (hosts.join(contrib, "host", "left")
-                     .select("host",
-                             (F.lit(base) + F.lit(damping)
-                              * F.coalesce("inflow", F.lit(0.0)))
-                             .alias("rank"))
+                     .crossJoin(dangling)
+                     .select("host", "dangling", rank.alias("rank"))
                      .localCheckpoint())
         cacheutil.release_local_checkpoint(ranks)
         ranks = new_ranks
     cacheutil.release_local_checkpoint(trans)
     cacheutil.release_local_checkpoint(hosts)
-    return ranks
+    return ranks.select("host", "rank")

@@ -1,8 +1,8 @@
 """Multimodal decode / feature-extract kernels over opaque binary columns.
 
-Spark-side plumbing is real (Arrow-batched ``mapInPandas`` over ``binary``,
-stable output schema, map-only plan — no shuffle of payload bytes); the
-codec layer is swappable:
+Spark-side plumbing is real (each pass is one ``mapInArrow`` row kernel
+over ``binary``, built by ``_worker.row_kernel``: stable output schema,
+map-only plan — no shuffle of payload bytes); the codec layer is swappable:
 
 - ``_decode_real``: PIL / soundfile / ffmpeg path — **stubbed**: those libs
   are not in this container, so it raises ``NotImplementedError`` with a
@@ -31,16 +31,13 @@ input row, so Spark can pipeline batches without buffering a partition.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
-from .._worker import prepare_worker
+from .._worker import row_kernel
 
 __all__ = ["MEDIA_FEATURES_SCHEMA", "MEDIA_DECODE_SCHEMA",
            "MEDIA_META_SCHEMA", "media_meta_features", "media_metadata",
@@ -1896,8 +1893,10 @@ def wav_metadata(raw: bytes) -> dict:
         pos += 8 + clen + (clen & 1)
     if sr is None or data_len is None:
         raise ValueError("WAV fmt/data chunk missing")
-    if nch == 0 or sr == 0:
-        raise ValueError("WAV fmt chunk declares 0 channels or 0 Hz")
+    if nch == 0 or not 0 < sr < 2 ** 31:
+        # sample_rate is a Spark int column: a uint32 rate of 2^31 Hz or
+        # more is corrupt, not audio.
+        raise ValueError(f"WAV fmt chunk declares {nch} channels at {sr} Hz")
     if bits < 8:
         raise ValueError(f"WAV bits_per_sample {bits} < 8")
     n_frames = data_len // (nch * (bits // 8))
@@ -2023,23 +2022,11 @@ def resize_image(payload: bytes, width: int, height: int) -> bytes:
     return encode_gif([[tuple(px) for px in row] for row in out.tolist()])
 
 
-def _features_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    prepare_worker()
-    for b in batches:
-        ids = b["media_id"].tolist()
-        kinds = b["kind"].tolist()
-        payloads = b["payload"].tolist()
-        widths = b["width"].tolist()
-        heights = b["height"].tolist()
-        rows = {"media_id": ids, "kind": kinds,
-                "n_bytes": [], "header": [], "checksum": [],
-                "width": widths, "height": heights}
-        for p in payloads:
-            raw = bytes(p) if p is not None else b""
-            rows["n_bytes"].append(len(raw))
-            rows["header"].append(raw[:8].decode("utf-8", errors="replace"))
-            rows["checksum"].append(hashlib.md5(raw).hexdigest())
-        yield pd.DataFrame(rows)
+def _features_row(media_id, kind, payload, width, height):
+    raw = payload or b""
+    return [(media_id, kind, len(raw),
+             raw[:8].decode("utf-8", errors="replace"),
+             hashlib.md5(raw).hexdigest(), width, height)]
 
 
 MEDIA_DECODE_SCHEMA = StructType([
@@ -2056,9 +2043,6 @@ MEDIA_DECODE_SCHEMA = StructType([
     StructField("duration_ms", DoubleType()),
 ])
 
-_DECODE_NULLS = ["fmt", "width", "height", "mean_r", "mean_g", "mean_b",
-                 "peak", "rms", "duration_ms"]
-
 
 def _channel_means(img: dict) -> tuple:
     """Per-channel means of a decoded array. Grayscale has ONE channel —
@@ -2072,48 +2056,31 @@ def _channel_means(img: dict) -> tuple:
             float(px[..., 2].mean()))
 
 
-def _decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    prepare_worker()
-    import numpy as np
-    for b in batches:
-        out = {k.name: [] for k in MEDIA_DECODE_SCHEMA.fields}
-        for mid, p in zip(b["media_id"].tolist(), b["payload"].tolist()):
-            raw = bytes(p) if p is not None else b""
-            out["media_id"].append(int(mid))
-            # Error tolerance is the same contract as extract_pages: one
-            # corrupt payload in 10^12 rows must yield a status row, never
-            # a failed job. NotImplementedError (unknown/unsupported
-            # codec) and ValueError (malformed bytes) both degrade.
-            try:
-                if raw[:4] == b"RIFF":
-                    a = decode_wav(raw)
-                    vals = {"fmt": "wav", "width": None, "height": None,
-                            "mean_r": None, "mean_g": None, "mean_b": None,
-                            "peak": a["peak"], "rms": a["rms"],
-                            "duration_ms": a["duration_ms"]}
-                else:
-                    img = _decode_image_array(raw)
-                    fmt = image_dimensions(raw)["format"]
-                    mr, mg, mb = _channel_means(img)
-                    vals = {"fmt": fmt, "width": img["width"],
-                            "height": img["height"],
-                            "mean_r": mr, "mean_g": mg, "mean_b": mb,
-                            "peak": None, "rms": None, "duration_ms": None}
-                out["status"].append("ok")
-                for k in _DECODE_NULLS:
-                    out[k].append(vals[k])
-            except Exception as e:  # noqa: BLE001 — never-fail contract
-                out["status"].append(f"error:{type(e).__name__}")
-                for k in _DECODE_NULLS:
-                    out[k].append(None)
-        yield pd.DataFrame(out)
+def _decode_row(media_id, payload):
+    raw = payload or b""
+    # Error tolerance is the same contract as extract_pages: one
+    # corrupt payload in 10^12 rows must yield a status row, never
+    # a failed job. NotImplementedError (unknown/unsupported
+    # codec) and ValueError (malformed bytes) both degrade.
+    try:
+        if raw[:4] == b"RIFF":
+            a = decode_wav(raw)
+            return [(media_id, "ok", "wav", None, None, None, None, None,
+                     a["peak"], a["rms"], a["duration_ms"])]
+        img = _decode_image_array(raw)
+        fmt = image_dimensions(raw)["format"]
+        return [(media_id, "ok", fmt, img["width"], img["height"],
+                 *_channel_means(img), None, None, None)]
+    except Exception as e:  # noqa: BLE001 — never-fail contract
+        return [(media_id, f"error:{type(e).__name__}") + (None,) * 9]
 
 
 def decode_media_features(media: DataFrame) -> DataFrame:
-    """REAL media decode over the binary column (map-only, Arrow-batched):
-    sniff the container magic, run the actual codec (BMP / PNG / baseline
-    JPEG pixels, PCM WAV samples) and emit typed decode stats — image
-    dimensions + per-channel means, audio peak/RMS/duration. Unlike
+    """REAL media decode over the binary column (map-only ``mapInArrow``
+    row kernel): sniff the container magic, run the actual codec (BMP /
+    PNG / baseline JPEG pixels, PCM WAV samples) and emit typed decode
+    stats — image dimensions + per-channel means, audio
+    peak/RMS/duration. Unlike
     :func:`extract_media_features` (byte-level, codec-free), a wrong
     Huffman table or filter here produces wrong numbers, so the driver's
     SQL oracle (closed-form content from sources/media.media_payloads)
@@ -2121,8 +2088,8 @@ def decode_media_features(media: DataFrame) -> DataFrame:
 
     100 TB shape: identical to the features pass — payload bytes never
     enter an Exchange; the scan is pruned to (media_id, payload)."""
-    return media.select("media_id", "payload").mapInPandas(
-        _decode_batch, MEDIA_DECODE_SCHEMA)
+    return media.select("media_id", "payload").mapInArrow(
+        row_kernel(_decode_row, MEDIA_DECODE_SCHEMA), MEDIA_DECODE_SCHEMA)
 
 
 MEDIA_META_SCHEMA = StructType([
@@ -2137,42 +2104,33 @@ MEDIA_META_SCHEMA = StructType([
     StructField("height", IntegerType()),
 ])
 
-_META_NULLS = ("fmt", "duration_ms", "bitrate_kbps", "sample_rate",
-               "channels", "width", "height")
+_META_FIELDS = ("fmt", "duration_ms", "bitrate_kbps", "sample_rate",
+                "channels", "width", "height")
 
 
-def _meta_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    prepare_worker()
-    for b in batches:
-        out = {k.name: [] for k in MEDIA_META_SCHEMA.fields}
-        for mid, p in zip(b["media_id"].tolist(), b["payload"].tolist()):
-            raw = bytes(p) if p is not None else b""
-            out["media_id"].append(int(mid))
-            try:
-                m = media_metadata(raw)
-                m["fmt"] = m.pop("format")
-                out["status"].append("ok")
-                for k in _META_NULLS:
-                    out[k].append(m.get(k))
-            except Exception as e:  # noqa: BLE001 — never-fail contract
-                out["status"].append(f"error:{type(e).__name__}")
-                for k in _META_NULLS:
-                    out[k].append(None)
-        yield pd.DataFrame(out)
+def _meta_row(media_id, payload):
+    raw = payload or b""
+    try:
+        m = media_metadata(raw)
+        m["fmt"] = m.pop("format")
+        return [(media_id, "ok", *(m.get(k) for k in _META_FIELDS))]
+    except Exception as e:  # noqa: BLE001 — never-fail contract
+        return [(media_id, f"error:{type(e).__name__}")
+                + (None,) * len(_META_FIELDS)]
 
 
 def media_meta_features(media: DataFrame) -> DataFrame:
-    """Header-only metadata triage over the binary column (map-only,
-    Arrow-batched): MP3 frame-header walk, MP4 moov/mvhd/tkhd box walk,
-    WAV fmt/data headers — duration / bitrate / sample rate / dims
-    WITHOUT decoding any audio or video essence. This is the first pass
-    a 100 TB media pipeline runs (triage + shard planning) and it covers
-    exactly the formats whose full decode stays honestly stubbed
-    (ffmpeg-class). Same never-fail contract and plan shape as
-    :func:`decode_media_features`: payload bytes never enter an
+    """Header-only metadata triage over the binary column (map-only
+    ``mapInArrow`` row kernel): MP3 frame-header walk, MP4
+    moov/mvhd/tkhd box walk, WAV fmt/data headers — duration / bitrate /
+    sample rate / dims WITHOUT decoding any audio or video essence. This
+    is the first pass a 100 TB media pipeline runs (triage + shard
+    planning) and it covers exactly the formats whose full decode stays
+    honestly stubbed (ffmpeg-class). Same never-fail contract and plan
+    shape as :func:`decode_media_features`: payload bytes never enter an
     Exchange."""
-    return media.select("media_id", "payload").mapInPandas(
-        _meta_batch, MEDIA_META_SCHEMA)
+    return media.select("media_id", "payload").mapInArrow(
+        row_kernel(_meta_row, MEDIA_META_SCHEMA), MEDIA_META_SCHEMA)
 
 
 THUMBNAIL_SCHEMA = StructType([
@@ -2189,61 +2147,41 @@ THUMBNAIL_SCHEMA = StructType([
 
 def thumbnail_features(media: DataFrame, width: int = 8,
                        height: int = 8) -> DataFrame:
-    """Thumbnail pass over image payloads (map-only, Arrow-batched):
-    ``resize_image`` each binary to width x height IN ITS OWN CONTAINER
-    (decode → numpy resample → re-encode), then decode the thumbnail and
-    emit its dims + channel means — the decode→resize→encode→decode chain
-    a vision-training prep job runs, with every codec on both sides of
-    the resize. Rows whose payload has no image MAGIC are dropped (audio/
-    video/unknown); rows that lead with an image signature but whose
-    header or body fails to sniff/decode/re-encode degrade to
-    status='error:<type>' — never a dropped image, never a failed job
-    (matching decode_media_features' contract for the same payload)."""
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_worker()
-        import numpy as np
-        for b in batches:
-            out = {k.name: [] for k in THUMBNAIL_SCHEMA.fields}
-            for mid, p in zip(b["media_id"].tolist(),
-                              b["payload"].tolist()):
-                raw = bytes(p) if p is not None else b""
-                try:
-                    fmt = image_dimensions(raw)["format"]
-                except (NotImplementedError, ValueError) as e:
-                    if not has_image_magic(raw):
-                        continue  # audio/video/unknown rows: not an image
-                    # Image magic with a corrupt/truncated header: an
-                    # error row, same as a corrupt body downstream.
-                    out["media_id"].append(int(mid))
-                    out["status"].append(f"error:{type(e).__name__}")
-                    for k in THUMBNAIL_SCHEMA.fields:
-                        if k.name not in ("media_id", "status"):
-                            out[k.name].append(None)
-                    continue
-                try:
-                    thumb = resize_image(raw, width, height)
-                    img = _decode_image_array(thumb)
-                    mr, mg, mb = _channel_means(img)
-                    vals = {"fmt": fmt, "width": img["width"],
-                            "height": img["height"],
-                            "mean_r": mr, "mean_g": mg, "mean_b": mb}
-                    status = "ok"
-                except Exception as e:  # noqa: BLE001 — never-fail
-                    vals = {k.name: None for k in THUMBNAIL_SCHEMA.fields
-                            if k.name not in ("media_id", "status")}
-                    status = f"error:{type(e).__name__}"
-                out["media_id"].append(int(mid))
-                out["status"].append(status)
-                for k, v in vals.items():
-                    out[k].append(v)
-            yield pd.DataFrame(out)
+    """Thumbnail pass over image payloads (map-only ``mapInArrow`` row
+    kernel): ``resize_image`` each binary to width x height IN ITS OWN
+    CONTAINER (decode → numpy resample → re-encode), then decode the
+    thumbnail and emit its dims + channel means — the
+    decode→resize→encode→decode chain a vision-training prep job runs,
+    with every codec on both sides of the resize. Rows whose payload has
+    no image MAGIC are dropped (audio/video/unknown); rows that lead with
+    an image signature but whose header or body fails to
+    sniff/decode/re-encode degrade to status='error:<type>' — never a
+    dropped image, never a failed job (matching decode_media_features'
+    contract for the same payload)."""
+    def thumb(media_id, payload):
+        raw = payload or b""
+        try:
+            fmt = image_dimensions(raw)["format"]
+        except (NotImplementedError, ValueError) as e:
+            if not has_image_magic(raw):
+                return []  # audio/video/unknown rows: not an image
+            # Image magic with a corrupt/truncated header: an
+            # error row, same as a corrupt body downstream.
+            return [(media_id, f"error:{type(e).__name__}") + (None,) * 6]
+        try:
+            img = _decode_image_array(resize_image(raw, width, height))
+            return [(media_id, "ok", fmt, img["width"], img["height"],
+                     *_channel_means(img))]
+        except Exception as e:  # noqa: BLE001 — never-fail
+            return [(media_id, f"error:{type(e).__name__}") + (None,) * 6]
 
-    return media.select("media_id", "payload").mapInPandas(
-        batch, THUMBNAIL_SCHEMA)
+    return media.select("media_id", "payload").mapInArrow(
+        row_kernel(thumb, THUMBNAIL_SCHEMA), THUMBNAIL_SCHEMA)
 
 
 def extract_media_features(media: DataFrame) -> DataFrame:
-    """Byte-level feature extraction (map-only, Arrow-batched).
+    """Byte-level feature extraction (map-only ``mapInArrow`` row
+    kernel).
 
     Projects the payload plus the typed metadata the kernel passes through;
     column pruning upstream means a 2-column consumer never pays for the
@@ -2254,4 +2192,5 @@ def extract_media_features(media: DataFrame) -> DataFrame:
         media["meta.width"].alias("width"),
         media["meta.height"].alias("height"),
     )
-    return pruned.mapInPandas(_features_batch, MEDIA_FEATURES_SCHEMA)
+    return pruned.mapInArrow(row_kernel(_features_row, MEDIA_FEATURES_SCHEMA),
+                             MEDIA_FEATURES_SCHEMA)

@@ -25,7 +25,8 @@ central directory, and the daemon's ``gc.collect()`` after it, which
 walks the ~74k-object import-time heap.
 That was ~0.23 CPU-s per task on a 4-CPU x86 VM (an identity
 ``mapInArrow`` over 4 rows in 4 partitions). Every kernel therefore calls
-``_worker.prepare_worker()`` first: a stat-guarded ``invalidate_caches``
+``_worker.prepare_worker()`` first (the per-row ones through
+``_worker.row_kernel``): a stat-guarded ``invalidate_caches``
 (a no-op on Python ≥ 3.12, which re-reads lazily) plus one
 ``gc.collect(); gc.freeze()``. A reused worker's later tasks now cost
 ~0.017 CPU-s. perfbench ``rel_docs_per_cpu_s``, before → after (medians
@@ -38,9 +39,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Iterable, Iterator, Optional
-
-import pandas as pd
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -48,7 +47,7 @@ from pyspark.sql.types import (
     StructType, TimestampType,
 )
 
-from .._worker import prepare_worker
+from .._worker import row_kernel
 
 __all__ = [
     "PAGES_SCHEMA", "EXTRACT_SCHEMA", "synthesize_pages", "extract_pages",
@@ -109,21 +108,14 @@ def synthesize_pages(spark: SparkSession, n: int,
                      filler: int = 0) -> DataFrame:
     """Deterministic pages table of n rows, generated inside executors."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_worker()
+    def page(i: int):
         from ..sources import synth
-        for b in batches:
-            recs = [synth.page_record(int(i), filler=filler) for i in b["id"]]
-            yield pd.DataFrame({
-                "url": [r["url"] for r in recs],
-                "warc_ts": [r["warc_ts"] for r in recs],
-                "html": [r["html"] for r in recs],
-                "text": [r["text"] for r in recs],
-                "lang": [r["lang"] for r in recs],
-            })
+        r = synth.page_record(i, filler=filler)
+        return [tuple(r[f] for f in PAGES_SCHEMA.fieldNames())]
 
     parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, PAGES_SCHEMA)
+    return spark.range(0, n, numPartitions=parts).mapInArrow(
+        row_kernel(page, PAGES_SCHEMA), PAGES_SCHEMA)
 
 
 # -- the extraction operator -------------------------------------------------
@@ -195,49 +187,23 @@ def _extract_one_inner(url: str, html_bytes: Optional[bytes]) -> dict:
     return out
 
 
-# Output columns the Arrow kernel assembles, beyond the 3 pass-throughs.
-_STR_FIELDS = ("profile", "status", "envelope", "name", "brand")
-_TAIL_STR_FIELDS = ("text", "main_text")
+# Output columns _extract_one fills, after the pass-throughs (url, warc_ts,
+# lang).
+_EXTRACTED = EXTRACT_SCHEMA.fieldNames()[3:]
 
 
-def extract_batch_arrow(batches: "Iterator[pa.RecordBatch]"):
-    """mapInArrow kernel — the production path.
+def _extract_row(url, warc_ts, html, lang):
+    # _extract_one is looked up at call time, so it can be swapped for a
+    # wrapped version (e.g. by a tracer) after this module is imported.
+    out = _extract_one(url, html)
+    return [(url, warc_ts, lang, *(out[f] for f in _EXTRACTED))]
 
-    Builds output columns directly as Arrow arrays from Python lists,
-    never through pandas: object-dtype round-trips (arrow→object
-    Series→arrow) on ~25 KB string columns made a ``mapInPandas`` version
-    of this kernel ~2× slower end-to-end. The pass-through columns (url,
-    warc_ts, lang) are never materialized into Python at all except url.
-    """
-    prepare_worker()
-    import pyarrow as pa
 
-    for b in batches:
-        urls = b.column("url").to_pylist()
-        htmls = b.column("html").to_pylist()
-        recs = [_extract_one(u, h) for u, h in zip(urls, htmls)]
-        arrays = [
-            pa.array(urls, pa.string()),
-            b.column("warc_ts").cast(pa.timestamp("us")),
-            b.column("lang").cast(pa.string()),
-        ]
-        names = ["url", "warc_ts", "lang"]
-        for f in _STR_FIELDS:
-            arrays.append(pa.array([r[f] for r in recs], pa.string()))
-            names.append(f)
-        for f in ("price", "rating"):
-            arrays.append(pa.array([r[f] for r in recs], pa.float64()))
-            names.append(f)
-        for f in _TAIL_STR_FIELDS:
-            arrays.append(pa.array([r[f] for r in recs], pa.string()))
-            names.append(f)
-        arrays.append(pa.array([r["n_nodes"] for r in recs], pa.int32()))
-        names.append("n_nodes")
-        arrays.append(pa.array([r["error"] for r in recs], pa.string()))
-        names.append("error")
-        arrays.append(pa.array([r["elapsed_us"] for r in recs], pa.int64()))
-        names.append("elapsed_us")
-        yield pa.RecordBatch.from_arrays(arrays, names)
+# mapInArrow kernel — the production path: batches of (url, warc_ts, html,
+# lang) → EXTRACT_SCHEMA. Arrow arrays are built straight from Python
+# lists, never through pandas: object-dtype round-trips on ~25 KB string
+# columns made a mapInPandas version of this kernel ~2× slower end-to-end.
+extract_batch_arrow = row_kernel(_extract_row, EXTRACT_SCHEMA)
 
 
 def extract_pages(pages: DataFrame, partitions: Optional[int] = None,

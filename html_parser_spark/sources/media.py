@@ -13,16 +13,15 @@ touching the plan.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType, LongType, StringType, StructField, StructType,
 )
 
-from .._worker import prepare_worker
+from .._worker import row_kernel
+from ..functions.mediaops import (
+    _MP3_BITRATES, encode_bmp, encode_gif, encode_jpeg,
+    encode_jpeg_progressive, encode_mp3, encode_mp4, encode_png, encode_wav)
 
 __all__ = ["MEDIA_KINDS", "media_from_documents", "media_payloads",
            "media_meta_payloads", "PAYLOADS_SCHEMA"]
@@ -69,89 +68,55 @@ PAYLOADS_SCHEMA = StructType([
 ])
 
 
-def _payloads_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    prepare_worker()
-    from html_parser_spark.functions.mediaops import (
-        encode_bmp, encode_gif, encode_jpeg, encode_jpeg_progressive,
-        encode_png, encode_wav)
-    for b in batches:
-        ids, fmts, payloads = [], [], []
-        for did in b["doc_id"].tolist():
-            did = int(did)
-            ids.append(did)
-            if did % 4 == 3:
-                a = did % 1000
-                fmts.append("wav")
-                payloads.append(encode_wav([a] * 160, sample_rate=16000))
-                continue
-            w = 8 * (did % 8 + 1)
-            h = 8 * (did % 6 + 1)
-            color = (did % 256, (did * 7) % 256, (did * 13) % 256)
-            pixels = [[color] * w for _ in range(h)]
-            # (did % 8) // 2 rotates all four image codecs across the
-            # image rows (did % 4 == 3 is audio, so did % 3 would skip
-            # a residue class).
-            f = (did % 8) // 2
-            if f == 0:
-                fmts.append("bmp")
-                payloads.append(encode_bmp(pixels))
-            elif f == 1:
-                fmts.append("png")
-                payloads.append(encode_png(pixels))
-            elif f == 2:
-                fmts.append("jpeg")
-                # quality 95 keeps the DC quantization step at 2, so a
-                # solid block's round-trip error is < 0.5 and the decoded
-                # color is bit-exact (test_codecs.py pins the property).
-                # Half the JPEG rows (did % 8 == 5) are PROGRESSIVE
-                # (SOF2) — real crawls are majority-progressive, and the
-                # two encoders share quantized coefficients so the
-                # oracle's closed-form stats are unchanged.
-                if did % 8 == 5:
-                    payloads.append(
-                        encode_jpeg_progressive(pixels, quality=95))
-                else:
-                    payloads.append(encode_jpeg(pixels, quality=95))
-            else:
-                fmts.append("gif")
-                payloads.append(encode_gif(pixels))
-        yield pd.DataFrame({"media_id": ids, "fmt": fmts,
-                            "payload": payloads})
+def _payload_row(did: int):
+    if did % 4 == 3:
+        a = did % 1000
+        return [(did, "wav", encode_wav([a] * 160, sample_rate=16000))]
+    w = 8 * (did % 8 + 1)
+    h = 8 * (did % 6 + 1)
+    color = (did % 256, (did * 7) % 256, (did * 13) % 256)
+    pixels = [[color] * w for _ in range(h)]
+    # (did % 8) // 2 rotates all four image codecs across the
+    # image rows (did % 4 == 3 is audio, so did % 3 would skip
+    # a residue class).
+    f = (did % 8) // 2
+    if f == 0:
+        return [(did, "bmp", encode_bmp(pixels))]
+    if f == 1:
+        return [(did, "png", encode_png(pixels))]
+    if f == 2:
+        # quality 95 keeps the DC quantization step at 2, so a
+        # solid block's round-trip error is < 0.5 and the decoded
+        # color is bit-exact (test_codecs.py pins the property).
+        # Half the JPEG rows (did % 8 == 5) are PROGRESSIVE
+        # (SOF2) — real crawls are majority-progressive, and the
+        # two encoders share quantized coefficients so the
+        # oracle's closed-form stats are unchanged.
+        if did % 8 == 5:
+            return [(did, "jpeg",
+                     encode_jpeg_progressive(pixels, quality=95))]
+        return [(did, "jpeg", encode_jpeg(pixels, quality=95))]
+    return [(did, "gif", encode_gif(pixels))]
 
 
-def _meta_payloads_batch(batches: Iterator[pd.DataFrame]
-                         ) -> Iterator[pd.DataFrame]:
-    prepare_worker()
-    from html_parser_spark.functions.mediaops import (
-        _MP3_BITRATES, encode_mp3, encode_mp4, encode_wav)
-    for b in batches:
-        ids, fmts, payloads = [], [], []
-        for did in b["doc_id"].tolist():
-            did = int(did)
-            ids.append(did)
-            r = did % 3
-            if r == 0:
-                fmts.append("mp3")
-                payloads.append(encode_mp3(
-                    n_frames=1 + did % 8,
-                    bitrate_kbps=_MP3_BITRATES[1 + did % 14],
-                    sample_rate=44100,
-                    # Half the MP3 rows carry an ID3v2 tag the header
-                    # walk must skip; the tag size varies but never
-                    # reaches the oracle (metadata is tag-independent).
-                    id3_size=(did % 100 + 10) if did % 2 == 0 else 0))
-            elif r == 1:
-                fmts.append("mp4")
-                payloads.append(encode_mp4(
-                    width=16 * (did % 64 + 1),
-                    height=16 * (did % 48 + 1),
-                    duration_ms=250 * (did % 240 + 1)))
-            else:
-                fmts.append("wav")
-                payloads.append(encode_wav([did % 1000] * 160,
-                                           sample_rate=16000))
-        yield pd.DataFrame({"media_id": ids, "fmt": fmts,
-                            "payload": payloads})
+def _meta_payload_row(did: int):
+    r = did % 3
+    if r == 0:
+        return [(did, "mp3", encode_mp3(
+            n_frames=1 + did % 8,
+            bitrate_kbps=_MP3_BITRATES[1 + did % 14],
+            sample_rate=44100,
+            # Half the MP3 rows carry an ID3v2 tag the header
+            # walk must skip; the tag size varies but never
+            # reaches the oracle (metadata is tag-independent).
+            id3_size=(did % 100 + 10) if did % 2 == 0 else 0))]
+    if r == 1:
+        return [(did, "mp4", encode_mp4(
+            width=16 * (did % 64 + 1),
+            height=16 * (did % 48 + 1),
+            duration_ms=250 * (did % 240 + 1)))]
+    return [(did, "wav",
+             encode_wav([did % 1000] * 160, sample_rate=16000))]
 
 
 def media_meta_payloads(docs: DataFrame) -> DataFrame:
@@ -161,8 +126,8 @@ def media_meta_payloads(docs: DataFrame) -> DataFrame:
     field a closed form of ``doc_id`` so the DuckDB oracle recomputes
     duration/bitrate/dims/sample-rate that a correct header walk must
     yield. Map-only, same shape as :func:`media_payloads`."""
-    return docs.select("doc_id").mapInPandas(
-        _meta_payloads_batch, PAYLOADS_SCHEMA)
+    return docs.select("doc_id").mapInArrow(
+        row_kernel(_meta_payload_row, PAYLOADS_SCHEMA), PAYLOADS_SCHEMA)
 
 
 def media_payloads(docs: DataFrame) -> DataFrame:
@@ -174,10 +139,10 @@ def media_payloads(docs: DataFrame) -> DataFrame:
     the honest upgrade of :func:`media_from_documents`'s md5 fakes: the
     bytes now must survive an actual codec, not just a checksum.
 
-    Map-only (Arrow-batched mapInPandas over the pruned doc_id column);
+    Map-only (a ``mapInArrow`` row kernel over the pruned doc_id column);
     at 100 TB the generator is replaced by a WARC/object-store scan and
     the decode side (functions/mediaops.decode_media_features) is
     unchanged.
     """
-    return docs.select("doc_id").mapInPandas(
-        _payloads_batch, PAYLOADS_SCHEMA)
+    return docs.select("doc_id").mapInArrow(
+        row_kernel(_payload_row, PAYLOADS_SCHEMA), PAYLOADS_SCHEMA)

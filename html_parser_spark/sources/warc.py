@@ -16,7 +16,9 @@ output. Two halves, both pure stdlib:
   kernel degrades them to error rows, never a failed job).
 
 Spark integration is the usual shape: payload bytes ride Arrow batches
-through ``mapInPandas`` and never enter an Exchange. At 100 TB the blob
+and never enter an Exchange. The parse is a ``mapInArrow`` row kernel
+(``_worker.row_kernel``); the write side packs a whole batch into one blob,
+so it keeps its own ``mapInPandas`` batch loop. At 100 TB the blob
 source becomes ``spark.read.format("binaryFile")`` over the crawl bucket
 (or a custom datasource that seeks gzip members); the parse kernel is
 unchanged.
@@ -41,7 +43,7 @@ from pyspark.sql.types import (
     BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
-from .._worker import prepare_worker
+from .._worker import prepare_worker, row_kernel
 
 __all__ = ["write_warc_record", "write_warc", "iter_warc_records",
            "pages_from_warc_blobs", "warc_blobs_from_pages",
@@ -152,10 +154,12 @@ def iter_warc_records(raw: bytes) -> Iterator[dict]:
             if http_end < 0:
                 raise ValueError("WARC response without HTTP header block")
             http_lines = content[:http_end].split(b"\r\n")
-            try:
-                status = int(http_lines[0].split()[1])
-            except (IndexError, ValueError):
+            # A status code is three digits (RFC 9110 §15); anything else
+            # would also not fit the int http_status column.
+            code = http_lines[0].split()[1:2]
+            if not (code and len(code[0]) == 3 and code[0].isdigit()):
                 raise ValueError("malformed HTTP status line in WARC")
+            status = int(code[0])
             ctype = ""
             for line in http_lines[1:]:
                 k, _, v = line.partition(b":")
@@ -205,31 +209,27 @@ def warc_blobs_from_pages(pages: DataFrame) -> DataFrame:
     return pages.select("url", "html").mapInPandas(fn, _BLOB_SCHEMA)
 
 
+def _blob_pages(blob) -> Iterator[tuple]:
+    """One blob's page rows. A malformed blob keeps the rows read before
+    the bad record and ends with one error row; a NULL blob is one error
+    row."""
+    try:
+        if blob is None:
+            raise ValueError("NULL WARC blob")
+        for rec in iter_warc_records(blob):
+            yield (rec["url"], rec["warc_date"], rec["http_status"],
+                   rec["content_type"], rec["body"])
+    except ValueError:
+        yield ("", "", -1, "", None)
+
+
 def pages_from_warc_blobs(blobs: DataFrame,
                           blob_col: str = "warc") -> DataFrame:
     """WARC blobs → page rows (url, warc_date, http_status, content_type,
     html). Map-only Arrow-batched parse. A blob that turns out to be
     malformed keeps the page rows of the records read before the bad one
     and adds one error row (url='', http_status=-1, html NULL) instead of
-    failing the job — same never-fail contract as the extract kernel."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_worker()
-        for b in batches:
-            out = {f.name: [] for f in WARC_PAGES_SCHEMA.fields}
-            for blob in b[blob_col]:
-                try:
-                    for rec in iter_warc_records(bytes(blob)):
-                        out["url"].append(rec["url"])
-                        out["warc_date"].append(rec["warc_date"])
-                        out["http_status"].append(rec["http_status"])
-                        out["content_type"].append(rec["content_type"])
-                        out["html"].append(rec["body"])
-                except ValueError:
-                    out["url"].append("")
-                    out["warc_date"].append("")
-                    out["http_status"].append(-1)
-                    out["content_type"].append("")
-                    out["html"].append(None)
-            yield pd.DataFrame(out)
-
-    return blobs.select(blob_col).mapInPandas(fn, WARC_PAGES_SCHEMA)
+    failing the job — same never-fail contract as the extract kernel. A
+    NULL blob is one error row."""
+    return blobs.select(blob_col).mapInArrow(
+        row_kernel(_blob_pages, WARC_PAGES_SCHEMA), WARC_PAGES_SCHEMA)

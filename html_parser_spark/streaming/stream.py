@@ -42,6 +42,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .._worker import prepare_worker
 from ..job.pipeline import PAGES_SCHEMA, extract_pages, write_snapshot
 
 __all__ = ["stream_extract", "windowed_event_counts", "sessionize",
@@ -171,6 +172,7 @@ def _session_fn(key: Tuple, pdfs: Iterable[pd.DataFrame],
     flushed on state timeout). Batch-mode tests drive it via
     ``applyInPandasWithState`` on a bounded stream.
     """
+    prepare_worker()
     import pandas as pd  # local: runs in the worker
 
     (user_id,) = key

@@ -114,6 +114,31 @@ def test_host_rank_matches_reference_power_iteration(spark):
     assert got["c"] == max(got.values())
 
 
+def test_host_rank_rounds_need_no_driver_round_trip(spark):
+    """Each extra round starts fewer Spark jobs than the 12 it started
+    when the dangling mass was collected to the driver every round (same
+    session config); the mass is now a 1-row aggregate in the plan."""
+    import uuid
+    g = spark.createDataFrame(
+        [("a", "b", 2), ("a", "c", 1), ("b", "c", 1), ("c", "a", 1),
+         ("d", "c", 3), ("c", "e", 1)],
+        "src_host string, dst_host string, n_links long")
+    sc = spark.sparkContext
+
+    def jobs(iterations):
+        group = f"host-rank-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            host_rank(g, iterations=iterations)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one, two, three = jobs(1), jobs(2), jobs(3)
+    assert two - one == three - two, (one, two, three)
+    assert three - two <= 11, (one, two, three)
+
+
 def test_host_rank_empty_graph(spark):
     g = spark.createDataFrame(
         [], "src_host string, dst_host string, n_links long")

@@ -309,6 +309,7 @@ def _patched_wav(offset: int, fmt: str, value: int) -> bytes:
 ZERO_CHANNEL_WAV = _patched_wav(22, "<H", 0)
 FOUR_BIT_WAV = _patched_wav(34, "<H", 4)
 ZERO_RATE_WAV = _patched_wav(24, "<I", 0)
+HUGE_RATE_WAV = _patched_wav(24, "<I", 2 ** 31)  # overflows sample_rate int
 
 
 def test_media_meta_kernel_never_fails(spark):
@@ -324,6 +325,7 @@ def test_media_meta_kernel_never_fails(spark):
         (6, ZERO_CHANNEL_WAV),
         (7, FOUR_BIT_WAV),
         (8, ZERO_RATE_WAV),
+        (9, HUGE_RATE_WAV),
     ]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
     got = {r.media_id: r for r in M.media_meta_features(df).collect()}
@@ -336,6 +338,7 @@ def test_media_meta_kernel_never_fails(spark):
     assert got[6].status == "error:ValueError"
     assert got[7].status == "error:ValueError"
     assert got[8].status == "error:ValueError"
+    assert got[9].status == "error:ValueError"
 
 
 def test_mp4_corrupt_largesize_raises_not_hangs():

@@ -382,7 +382,7 @@ def test_quality_tiers_window_is_per_language(spark):
 
 
 def test_media_decode_is_map_only_and_pruned(spark):
-    """Generate-then-decode real media payloads: both mapInPandas stages
+    """Generate-then-decode real media payloads: both mapInArrow stages
     must fuse into a shuffle-free plan (payload bytes never enter an
     Exchange) and the documents scan must read only doc_id — a media
     decode pass over 100 TB is embarrassingly parallel by construction."""

@@ -226,7 +226,7 @@ def test_stream_near_dedup_collapses_token_set_clones(spark, tmp_path):
 
 def test_stream_media_decode_available_now(spark, tmp_path):
     """The media decode kernel composes with Structured Streaming
-    unchanged: mapInPandas over a readStream of binary payloads (the
+    unchanged: mapInArrow over a readStream of binary payloads (the
     shape of a continuously-landing WARC media feed), AvailableNow drain,
     same closed-form stats as the batch path — including an error row."""
     from html_parser_spark.functions.mediaops import (

@@ -55,17 +55,24 @@ def test_malformed_raises_valueerror():
     gz = W.write_warc_record(*RECS[0])
     with pytest.raises(ValueError):
         list(W.iter_warc_records(gz[: len(gz) // 2]))
+    # a status code is three digits; a longer one would also overflow the
+    # int http_status column and fail the job instead of one row
+    for status in (b"99999999999", b"-1", b"2000", b"2x0"):
+        bad = ok.replace(b" 200 OK", b" " + status + b" OK")
+        with pytest.raises(ValueError, match="HTTP status"):
+            list(W.iter_warc_records(bad))
 
 
 def test_blob_kernel_never_fails(spark):
     rows = [(0, W.write_warc(RECS)),
             (1, b"\x00junk not a warc blob at all"),
-            (2, W.write_warc(RECS)[: 30])]
+            (2, W.write_warc(RECS)[: 30]),
+            (3, None)]
     df = spark.createDataFrame(rows, "blob_id long, warc binary")
     got = W.pages_from_warc_blobs(df).collect()
     ok = [r for r in got if r.http_status == 200]
     bad = [r for r in got if r.http_status == -1]
-    assert len(ok) == len(RECS) and len(bad) == 2
+    assert len(ok) == len(RECS) and len(bad) == 3
     assert all(r.url == "" and r.html is None for r in bad)
 
 
