@@ -2,7 +2,7 @@
 """Benchmark harness — prints ONE JSON line for the driver.
 
 Headline metric: extraction throughput over a *materialized* pages corpus —
-parquet on disk, read → mapInPandas extract → count — the same plan shape as
+parquet on disk, read → mapInArrow extract → count — the same plan shape as
 the production job (scan → map-only UDF; no shuffle of page bytes). Corpus
 synthesis is untimed setup, written once and reused.
 
@@ -10,16 +10,22 @@ Each query gets one untimed warm pass (JIT/codegen/python-worker spin-up)
 then a timed pass: steady-state engine throughput is what projects to a
 long-running 100 TB job, not first-query JVM warm-up.
 
+Scaling (the north rule's N → 4N efficiency) is worked out from the host:
+with ``cpus`` the CPUs this process may run on, N = cpus // 4 and the levels
+are N and 4N, each pinned to the first N (4N) CPUs of that set. Each level is
+a fresh child process that first times the Spark-free kernel
+(``scripts/mp_bandwidth_control.run_level``) at N processes, then the Spark
+pass at ``local[N]``, on the same page count and filler, and reports
+``spark_vs_kernel``: host contention hits both runs in the same window, so
+the ratio prices the engine (boundary, scheduling) apart from the kernel.
+Three pair runs, medians quoted. The headline and the query suite run at
+4N cores. With fewer than 4 CPUs there is one level and no efficiency.
+
 Usage:
-    python bench.py                 # driver mode: one JSON line
-    python bench.py --scaling       # also run pinned 2/8/32-CPU levels on
-                                    # the same corpus (capped at the host's
-                                    # CPU count) and report N-to-4N scaling
-                                    # efficiency (north_rule two-cluster-
-                                    # size evidence)
+    python bench.py
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32), BENCH_PAGES, BENCH_FILLER, BENCH_DIR.
+     BENCH_PAGES, BENCH_FILLER, BENCH_DIR.
 """
 
 from __future__ import annotations
@@ -30,13 +36,15 @@ import subprocess
 import shutil
 import sys
 import time
+import zlib
 
+HERE = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_PAGES = int(os.environ.get("BENCH_PAGES", "20000"))
 FILLER = int(os.environ.get("BENCH_FILLER", "30"))
 BENCH_DIR = os.environ.get("BENCH_DIR", "/tmp/html_parser_spark_bench")
 CORPUS_FILES = 128  # fixed file count → identical splits at every core level
+SUBSET_MOD = 4      # scaling levels time a deterministic 1/4 of the corpus
 
 
 def _session(cores: int):
@@ -55,68 +63,20 @@ def _session(cores: int):
     )
 
 
-# Pinned idle-box single-thread kernel rate (docs/s) for the in-JSON
-# contention control — re-pin when the kernel or corpus renderer changes
-# (VERDICT r2 task 1; measured best-of-3 on 200 filler-30 pages).
-# Re-pinned for round 4: the costco/overstock deep-parity work changed
-# both the renderer payloads and the extractor paths; median of 5 idle-box
-# trials 369.8-384.3.
-CONTROL_REF = float(os.environ.get("BENCH_CONTROL_REF", "375"))
-
-# Pinned idle-box 8-process kernel rate for the MULTI-CORE control: host
-# contention can collapse aggregate memory bandwidth 2-4x while leaving
-# single-thread rates untouched (observed: control_ratio 0.996 alongside a
-# 4x suite collapse), so the single-thread control alone cannot clear an
-# artifact. Band is wider (30%) than the single-thread one: multi-core
-# trial noise is ~±10% even idle, and the signal this catches is 2-4x.
-# Re-pinned for round 4 with the single-thread ref (same renderer/kernel
-# change); median of 5 idle-box trials 2633.8-3065.3 — 0.89 of 8x the
-# single-thread rate, consistent with the known host bandwidth cap.
-CONTROL8_REF = float(os.environ.get("BENCH_CONTROL8_REF", "2660"))
+def scaling_levels(affinity) -> list[list[int]]:
+    """CPU sets of the scaling levels for an affinity set: the first N and
+    the first 4N of its CPUs, N = len // 4; one level of all of them when
+    there are fewer than 4."""
+    cpus = sorted(affinity)
+    n = len(cpus) // 4
+    return [cpus[:n], cpus[:4 * n]] if n else [cpus]
 
 
-def multicore_control() -> float:
-    """8-process pinned kernel rate (docs/s), Spark-free, best-of-3 passes
-    inside one warm pool — scripts/mp_bandwidth_control.py run as a
-    subprocess (spawn-safe; ~2-3 s). Run BEFORE any JVM exists."""
-    out = subprocess.run(
-        [sys.executable,
-         os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                      "scripts", "mp_bandwidth_control.py"),
-         "--pages", "480", "--procs", "8", "--filler", str(FILLER),
-         "--repeats", "3"],
-        capture_output=True, text=True, check=True)
-    return float(json.loads(out.stdout.strip().splitlines()[-1])
-                 ["levels"]["8"])
-
-
-def single_thread_control(n: int = 200) -> float:
-    """Spark-free single-thread extraction rate on freshly rendered pages.
-
-    The same kernel the Spark UDF runs, no JVM, no IPC — its rate moves
-    only with host/VM contention, so a suite number recorded while this
-    control deviates from its pinned idle-box value is flagged in-JSON
-    instead of needing a judged re-run (BENCH_r02 post-mortem: the driver
-    artifact understated the engine 2.6× and only an idle-box re-run could
-    defend it)."""
-    from html_parser_spark.job.pipeline import _extract_one
-    from html_parser_spark.sources import synth
-    pages = [(synth.url_for(i), synth.render_page(i, filler=FILLER))
-             for i in range(n)]
-    for u, h in pages[:20]:
-        _extract_one(u, h)
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        for u, h in pages:
-            _extract_one(u, h)
-        best = min(best, time.perf_counter() - t0)
-    return round(n / best, 1)
-
-
-def F_sum_length():
-    from pyspark.sql import functions as F
-    return F.sum(F.length("html"))
+def _in_subset(url: str) -> bool:
+    """Python twin of the level runs' Spark predicate
+    ``crc32(url) % SUBSET_MOD == 0``, so a level can size its kernel run
+    before any JVM exists."""
+    return zlib.crc32(url.encode()) % SUBSET_MOD == 0
 
 
 def _timed(df_factory, repeats: int = 2) -> float:
@@ -153,24 +113,23 @@ def ensure_corpus(spark) -> str:
 
 
 def run_extract(spark, path: str, repeats: int = 2,
-                subset_mod: int | None = None) -> tuple[float, int]:
+                subset: bool = False) -> tuple[float, int]:
     """Timed: scan parquet pages → map-only extract → count.
 
     One warm pass, then best-of-``repeats`` — min is the standard
     noise-robust throughput estimator on a shared box (GC, page cache and
     turbo transitions only ever make a run slower, not faster).
 
-    ``subset_mod``: keep only pages with ``xxhash64(url) % mod == 0`` — a
-    deterministic 1/mod sample used by the default-run north pair (same
-    input at both core levels is what the efficiency ratio needs, not the
-    full corpus)."""
+    ``subset``: keep only the pages ``_in_subset`` keeps — the same input
+    at every scaling level is what the efficiency ratio needs, not the
+    full corpus."""
     from html_parser_spark.job import pipeline as P
 
     def job():
         from pyspark.sql import functions as F
         df = spark.read.parquet(path)
-        if subset_mod:
-            df = df.where(F.pmod(F.xxhash64("url"), subset_mod) == 0)
+        if subset:
+            df = df.where(F.crc32("url") % SUBSET_MOD == 0)
         return P.extract_pages(df).where("status = 'ok'")
 
     n_ok = job().count()                       # warm pass
@@ -183,36 +142,32 @@ def run_extract(spark, path: str, repeats: int = 2,
 
 
 def _level_child() -> None:
-    """Child process for one scaling level: pin this process (and the JVM
-    it spawns) to its own N-CPU set, so every level emulates a machine that
-    fully owns N cores — the cluster-faithful N vs 4N proxy. Unpinned, a
-    small level borrows the idle box's cache/bandwidth headroom and the
-    comparison under-reports real multi-node scaling."""
-    cores = int(sys.argv[sys.argv.index("--level") + 1])
-    subset_mod = (int(sys.argv[sys.argv.index("--subset-mod") + 1])
-                  if "--subset-mod" in sys.argv else None)
-    repeats = (int(sys.argv[sys.argv.index("--repeats") + 1])
-               if "--repeats" in sys.argv else 3)
-    os.sched_setaffinity(0, set(range(cores)))
-    spark = _session(cores)
+    """Child process for one scaling level: pin this process (and the
+    kernel workers and JVM it spawns) to its CPU set, so every level
+    emulates a machine that fully owns N cores. The kernel runs first,
+    while no JVM exists; then the Spark pass, one warm and one timed."""
+    import pyarrow.parquet as pq
+    sys.path.insert(0, os.path.join(HERE, "scripts"))
+    from mp_bandwidth_control import run_level
+
+    cpus = [int(c) for c in sys.argv[sys.argv.index("--level") + 1].split(",")]
+    os.sched_setaffinity(0, cpus)
+    urls = pq.read_table(corpus_path(), columns=["url"]).column("url")
+    n_in = sum(map(_in_subset, urls.to_pylist()))
+    kernel = run_level(n_in, len(cpus), FILLER)
+    spark = _session(len(cpus))
     spark.sparkContext.setLogLevel("ERROR")
-    if subset_mod:
-        from pyspark.sql import functions as F
-        n_in = (spark.read.parquet(corpus_path())
-                .where(F.pmod(F.xxhash64("url"), subset_mod) == 0).count())
-    else:
-        n_in = N_PAGES
-    dt, n_ok = run_extract(spark, corpus_path(), repeats=repeats,
-                           subset_mod=subset_mod)
-    print(json.dumps({"sec": round(dt, 3),
-                      "docs_per_sec": round(n_in / dt, 1),
-                      "n_pages": n_in,
-                      "n_ok": n_ok}))
+    dt, n_ok = run_extract(spark, corpus_path(), repeats=1, subset=True)
     spark.stop()
+    print(json.dumps({"cpus": cpus, "n_pages": n_in, "n_ok": n_ok,
+                      "sec": round(dt, 3),
+                      "spark_docs_per_s": round(n_in / dt, 1),
+                      "kernel_docs_per_s": round(kernel, 1),
+                      "spark_vs_kernel": round(n_in / dt / kernel, 3)}))
 
 
 def _ensure_corpus_child() -> None:
-    s0 = _session(CPUS)
+    s0 = _session(len(os.sched_getaffinity(0)))
     s0.sparkContext.setLogLevel("ERROR")
     ensure_corpus(s0)
     s0.stop()
@@ -221,90 +176,55 @@ def _ensure_corpus_child() -> None:
 def _child(args: list) -> str:
     """Run a bench subprocess; stderr passes through so failures are
     diagnosable, stdout (the JSON line) is captured."""
-    import subprocess
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__)] + args,
         stdout=subprocess.PIPE, text=True, check=True)
     return out.stdout
 
 
-def _run_scaling_levels() -> dict:
-    """Run the pinned levels (capped at the host CPU count), each in a
-    subprocess with NO other JVM alive (a lingering stopped-session JVM
-    measurably slows the 32-core leg: 3119 → 1751 docs/s observed)."""
-    n_cpus = os.cpu_count() or 2
-    levels = {}
-    for cores in (c for c in (2, 8, 32) if c <= n_cpus):
-        out = _child(["--level", str(cores)])
-        levels[str(cores)] = json.loads(out.strip().splitlines()[-1])
-    result = {
-        "levels": levels,
-        "protocol": "per-level subprocess pinned to its own N-CPU set, "
-                    "fresh JVM, no other JVM alive, one warm pass then "
-                    "best-of-3",
-    }
-    for lo, hi in ((2, 8), (8, 32)):
-        if str(lo) in levels and str(hi) in levels:
-            result[f"efficiency_{lo}_to_{hi}"] = round(
-                levels[str(hi)]["docs_per_sec"]
-                / (4 * levels[str(lo)]["docs_per_sec"]), 3)
-    return result
-
-
-def _run_north_pair() -> dict:
-    """Reduced N→4N evidence for the DEFAULT artifact: the north rule's
-    two-parallelism criterion (same input, 2 vs 8 pinned cores) must be
-    visible in every recorded bench JSON, not only in manual --scaling
-    runs. Uses a deterministic 1/4 url-hash subset of the corpus and
-    best-of-2 per level (~1 min added); the full 2/8/32 protocol with
-    best-of-3 over the whole corpus stays behind --scaling. The 2→8 pair
-    is the representative proxy — this VM's host-capped memory bandwidth
-    flattens any 32-core leg (BASELINE.md), which added machines would
-    not share.
-
-    Three independent pair runs, medians quoted: a single pair reading
-    moves ±10% with host noise (three rounds of BASELINE.md prose carried
-    the 3-run medians; VERDICT r3 task 2 wants them in the artifact
-    itself). Each run is its own pinned subprocess pair, so the median is
-    over whole fresh-JVM measurements, not within-JVM repeats."""
-    n_cpus = os.cpu_count() or 2
-    cores_set = [c for c in (2, 8) if c <= n_cpus]
-    runs: list[dict] = []
+def _run_scaling(levels: list[list[int]]) -> dict:
+    """Three independent pair runs over ``levels``, each level its own
+    pinned fresh-JVM child (see ``_level_child``), medians quoted: a single
+    pair reading moves ±10% with host noise. Run before the parent JVM
+    exists — a lingering JVM measurably slows a level."""
+    names = [str(len(c)) for c in levels]
+    runs = []
     for _ in range(3):
-        levels = {}
-        for cores in cores_set:
-            out = _child(["--level", str(cores), "--subset-mod", "4",
-                          "--repeats", "1"])
-            levels[str(cores)] = json.loads(out.strip().splitlines()[-1])
-        run = {"levels": levels}
-        if "2" in levels and "8" in levels:
-            run["efficiency_2_to_8"] = round(
-                levels["8"]["docs_per_sec"]
-                / (4 * levels["2"]["docs_per_sec"]), 3)
+        run = {}
+        for name, cpus in zip(names, levels):
+            out = _child(["--level", ",".join(map(str, cpus))])
+            run[name] = json.loads(out.strip().splitlines()[-1])
         runs.append(run)
 
     def _median(xs: list[float]) -> float:
-        xs = sorted(xs)
-        return xs[len(xs) // 2]
+        return sorted(xs)[len(xs) // 2]
 
     result = {
+        "levels": {name: {k: _median([r[name][k] for r in runs]) for k in
+                          ("spark_docs_per_s", "kernel_docs_per_s",
+                           "spark_vs_kernel")} for name in names},
         "runs": runs,
-        "median_docs_per_sec": {
-            str(c): _median([r["levels"][str(c)]["docs_per_sec"]
-                             for r in runs]) for c in cores_set},
-        "protocol": "3 independent pair runs, each level its own "
-                    "subprocess pinned to its own N-CPU set, fresh JVM, "
-                    "no other JVM alive; deterministic 1/4 url-hash "
-                    "corpus subset, one warm pass then one timed; "
-                    "medians quoted; full-corpus 2/8/32 via --scaling",
+        "protocol": "3 independent pair runs; each level a child pinned to "
+                    "the first N CPUs of this process's affinity set: the "
+                    "Spark-free kernel at N processes, then a fresh JVM at "
+                    "local[N], one warm pass then one timed, on the "
+                    f"crc32(url) % {SUBSET_MOD} == 0 corpus subset; medians "
+                    "quoted",
     }
-    if len(cores_set) == 2:
-        # Efficiency of medians (the quotable number) plus the per-run
-        # spread so the artifact shows its own variance.
-        result["efficiency_2_to_8"] = round(
-            result["median_docs_per_sec"]["8"]
-            / (4 * result["median_docs_per_sec"]["2"]), 3)
-        result["efficiency_runs"] = [r["efficiency_2_to_8"] for r in runs]
+    if len(levels) == 1:
+        result["efficiency"] = None
+        result["efficiency_reason"] = (
+            f"{names[0]} CPUs in the affinity set, fewer than 4: no N to 4N "
+            "pair, one level at all of them")
+        return result
+    lo, hi = names
+    key = f"efficiency_{lo}_to_{hi}"
+    for r in runs:
+        r[key] = round(r[hi]["spark_docs_per_s"]
+                       / (4 * r[lo]["spark_docs_per_s"]), 3)
+    result[key] = round(result["levels"][hi]["spark_docs_per_s"]
+                        / (4 * result["levels"][lo]["spark_docs_per_s"]), 3)
+    result["efficiency_runs"] = [r[key] for r in runs]
     return result
 
 
@@ -315,8 +235,8 @@ def main() -> None:
     if "--ensure-corpus" in sys.argv:
         _ensure_corpus_child()
         return
-    scaling = "--scaling" in sys.argv
     import __spark_entry__ as E
+    from pyspark.sql import functions as F
 
     # Corpus generation is heavy (20k rendered pages); do it in a throwaway
     # subprocess so the timed session starts with a clean JVM heap —
@@ -325,39 +245,13 @@ def main() -> None:
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         _child(["--ensure-corpus"])
 
-    # Contention control BEFORE any JVM exists: pure-Python kernel rate on
-    # the idle process, compared against the pinned idle-box reference.
-    # The controls are cheap (~8 s) and the host's contention windows are
-    # transient, so a flagged reading retries after a backoff instead of
-    # recording a not-comparable-at-face-value artifact (VERDICT r3 task 2:
-    # the per-round BENCH must itself be a clean-window run). If the box
-    # never goes quiet the last reading is kept and the flag stays true —
-    # the retry makes a clean window likely, never fakes one.
-    control_attempts = 0
-    for attempt in range(5):
-        control_attempts = attempt + 1
-        control = single_thread_control()
-        control_ratio = round(control / CONTROL_REF, 3)
-        control8 = multicore_control()
-        control8_ratio = round(control8 / CONTROL8_REF, 3)
-        if (abs(control_ratio - 1.0) <= 0.2
-                and abs(control8_ratio - 1.0) <= 0.3):
-            break
-        if attempt == 4:
-            break  # out of retries: keep the flagged reading, no sleep
-        print(f"bench: controls out of band (1T {control_ratio}, "
-              f"8P {control8_ratio}), retry {attempt + 1}/4 in 20 s",
-              file=sys.stderr)
-        time.sleep(20)
+    levels = scaling_levels(os.sched_getaffinity(0))
+    scaling = _run_scaling(levels)
 
-    # Scaling levels BEFORE the parent JVM exists (see _run_scaling_levels).
-    # The default run carries the reduced north pair so BENCH_r{N}.json is
-    # self-contained on the two-parallelism criterion; --scaling replaces
-    # it with the full protocol.
-    scaling_result = _run_scaling_levels() if scaling else None
-    north_pair = None if scaling else _run_north_pair()
-
-    spark = _session(CPUS)
+    # Headline and query suite at 4N cores, on the 4N level's CPU set.
+    cores = len(levels[-1])
+    os.sched_setaffinity(0, levels[-1])
+    spark = _session(cores)
     spark.sparkContext.setLogLevel("ERROR")
     queries: dict[str, float] = {}
 
@@ -371,7 +265,7 @@ def main() -> None:
     # comparable across rounds; MB/s is.
     corpus_bytes = int(
         spark.read.parquet(path)
-        .select(F_sum_length()).collect()[0][0])
+        .select(F.sum(F.length("html"))).collect()[0][0])
     mb_per_sec = round(corpus_bytes / 1e6 / ext_dt, 1)
 
     # Every registered query except the two extraction-corpus ones (the
@@ -387,14 +281,7 @@ def main() -> None:
     for name in sorted(set(qmap) - skip):
         queries[name] = _timed(lambda n=name: qmap[n](spark, SF_DIR))
 
-    # Closing control: contention that starts mid-suite would pass the
-    # opening gate, so the window is only claimed clean if the kernel rate
-    # still holds after the last timed query. (Runs beside the live JVM —
-    # idle at this point — so it shares the 20% band.)
-    control_post = single_thread_control()
-    control_post_ratio = round(control_post / CONTROL_REF, 3)
-
-    result = {
+    _emit({
         # value = total wall seconds of the whole query suite (per-query
         # map below); extraction throughput itself is docs_per_sec.
         "metric": "query_suite_seconds",
@@ -405,81 +292,44 @@ def main() -> None:
         "docs_per_sec": docs_per_sec,
         "n_pages": N_PAGES,
         "filler_blocks": FILLER,
-        "cores": CPUS,
+        "cores": cores,
         "ok_rate": round(n_ok / N_PAGES, 4),
         "corpus_bytes": corpus_bytes,
         "mb_per_sec": mb_per_sec,
-        # Contention evidence (see single_thread_control): the Spark-free
-        # kernel rate at record time vs the pinned idle-box reference.
-        # |ratio - 1| > 0.2 flags the artifact as contention-skewed —
-        # interpret docs_per_sec relative to the control, not at face value.
-        "control_docs_per_sec": control,
-        "control_ref": CONTROL_REF,
-        "control_ratio": control_ratio,
-        "control8_docs_per_sec": control8,
-        "control8_ref": CONTROL8_REF,
-        "control8_ratio": control8_ratio,
-        "control_attempts": control_attempts,
-        "control_post_docs_per_sec": control_post,
-        "control_post_ratio": control_post_ratio,
-        # Flags when ANY control deviates: single-thread (20% band)
-        # catches per-core slowdowns; 8-process (30% band) catches the
-        # aggregate-bandwidth collapses that leave 1-thread rates intact;
-        # the post-suite re-check (20% band) catches contention that
-        # started after the opening gate.
-        "contention_flag": (abs(control_ratio - 1.0) > 0.2
-                            or abs(control8_ratio - 1.0) > 0.3
-                            or abs(control_post_ratio - 1.0) > 0.2),
-    }
-
-    if scaling_result is not None:
-        # Two N-to-4N pairs documented in BASELINE.md; see
-        # _run_scaling_levels for the pinned-subprocess protocol.
-        result["scaling"] = scaling_result
-    if north_pair is not None:
-        result["scaling_north_pair"] = north_pair
-    _emit(result)
+        "scaling": scaling,
+    })
 
 
-def _emit(result: dict) -> None:
+def _emit(result: dict,
+          path: str = os.path.join(HERE, "bench_last.json")) -> None:
     """Record the artifact durably, then print a parseable final line.
 
     The driver keeps only the LAST ~2000 chars of stdout and parses the
     final JSON line; BENCH_r04.json lost most per-query timings because
     the r4 line outgrew that window (VERDICT r4 "What's wrong" #1). So:
-    the FULL result always lands in bench_last.json next to this script,
-    and the printed line is slimmed until it fits the window — dropping
-    first the verbose scaling sub-blocks (medians survive), then, only
-    if still oversize, the per-query dict (which then lives solely in
-    bench_last.json, flagged via "queries_file")."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "bench_last.json"), "w") as fh:
+    the FULL result always lands in ``path``, and the printed line leaves
+    out the scaling block's per-run readings and protocol text (medians
+    survive); only if still oversize it keeps the ten slowest queries
+    (the full dict then lives solely in ``path``, flagged via
+    "queries_file")."""
+    with open(path, "w") as fh:
         json.dump(result, fh, indent=2, sort_keys=True)
         fh.write("\n")
 
     line_budget = 1900  # driver window is 2000; leave margin
     compact = dict(result)
     compact["queries"] = {k: round(v, 2) for k, v in result["queries"].items()}
+    compact["scaling"] = {k: v for k, v in result["scaling"].items()
+                          if k not in ("runs", "protocol")}
 
     def _dump(d: dict) -> str:
         return json.dumps(d, separators=(",", ":"))
 
-    if len(_dump(compact)) > line_budget and "scaling_north_pair" in compact:
-        np_full = compact["scaling_north_pair"]
-        compact["scaling_north_pair"] = {
-            k: np_full[k] for k in
-            ("median_docs_per_sec", "efficiency_2_to_8", "efficiency_runs")
-            if k in np_full}
-    if len(_dump(compact)) > line_budget and "scaling" in compact:
-        sc_full = compact["scaling"]
-        compact["scaling"] = {k: v for k, v in sc_full.items()
-                              if not isinstance(v, (list, dict))
-                              or k in ("levels_docs_per_sec", "efficiency")}
     if len(_dump(compact)) > line_budget:
         compact["queries"] = dict(sorted(
             result["queries"].items(), key=lambda kv: -kv[1])[:10])
         compact["queries_truncated_to_top10_by_sec"] = True
-        compact["queries_file"] = "bench_last.json"
+        compact["queries_file"] = os.path.basename(path)
     print(_dump(compact))
 
 

@@ -5,8 +5,8 @@ parse (see /root/reference/1.samsclub/parse_samsclub.py:207,
 costco/parse_costco.py:37, bestbuy/parse_bestbuy_detai.py:17-18) with a
 single-pass tokenizer whose output is a **flattened DOM node array** —
 parallel arrays (tag id, parent, depth, text, attrs) instead of per-node
-Python objects — so downstream selector matching and boilerplate scoring run
-as vectorized kernels over numpy arrays inside Arrow/pandas UDF batches.
+Python objects — so downstream selector matching and boilerplate scoring walk
+plain index lists rather than a tree of objects.
 
 Design notes (scale):
   * The hot loop is one compiled master regex (``_TOKEN_RE``) driven by
@@ -24,8 +24,6 @@ from __future__ import annotations
 import re
 from html import unescape
 from typing import Optional
-
-import numpy as np
 
 __all__ = ["FlatDOM", "tokenize", "TEXT", "COMMENT"]
 
@@ -63,7 +61,7 @@ _SIBLING_CLOSERS = {
 }
 
 # Union of tags that can trigger ANY implied close — checked inline in the
-# hot loop so _implied_closes is only called when it could matter.
+# hot loop so the implied-close logic only runs when it could matter.
 _IMPLIED_TRIGGERS = _P_CLOSERS | frozenset(_SIBLING_CLOSERS)
 
 _TOKEN_RE = re.compile(
@@ -92,12 +90,11 @@ class FlatDOM:
     """Flattened DOM: parallel arrays over nodes in document order.
 
     Node 0 is a synthetic root. Element nodes carry ``attrs`` dicts; text
-    and comment nodes carry ``texts`` payloads. Numpy views (``parent_arr``,
-    ``depth_arr``) back the vectorized selector / boilerplate kernels.
+    and comment nodes carry ``texts`` payloads.
     """
 
     __slots__ = ("tags", "parent", "depth", "attrs", "texts", "script_ids",
-                 "_parent_arr", "_depth_arr", "_children", "_tag_index")
+                 "_children", "_tag_index")
 
     def __init__(self) -> None:
         self.tags: list[str] = ["#root"]
@@ -108,8 +105,6 @@ class FlatDOM:
         # <script> element ids recorded during tokenization so carrier
         # dispatch (collect_scripts) never re-scans the whole node array.
         self.script_ids: list[int] = []
-        self._parent_arr: Optional[np.ndarray] = None
-        self._depth_arr: Optional[np.ndarray] = None
         self._children: Optional[list[list[int]]] = None
         # tag -> element ids (doc order), built lazily on first select();
         # turns each selector scan from O(nodes) into O(candidates).
@@ -125,21 +120,9 @@ class FlatDOM:
         self.texts.append(text)
         return len(self.tags) - 1
 
-    # -- array views -------------------------------------------------------
+    # -- structure ---------------------------------------------------------
     def __len__(self) -> int:
         return len(self.tags)
-
-    @property
-    def parent_arr(self) -> np.ndarray:
-        if self._parent_arr is None or len(self._parent_arr) != len(self.parent):
-            self._parent_arr = np.asarray(self.parent, dtype=np.int32)
-        return self._parent_arr
-
-    @property
-    def depth_arr(self) -> np.ndarray:
-        if self._depth_arr is None or len(self._depth_arr) != len(self.depth):
-            self._depth_arr = np.asarray(self.depth, dtype=np.int32)
-        return self._depth_arr
 
     def children(self, i: int) -> list[int]:
         if self._children is None:
@@ -280,7 +263,7 @@ def tokenize(html: str) -> FlatDOM:
             open_tag, raw_attrs, selfclose = m.group(6, 7, 8)
             tag = open_tag if open_tag.islower() else open_tag.lower()
             if tag in _IMPLIED_TRIGGERS and len(stack) > 1:
-                # _implied_closes inlined (hot: fires on every p/div/li/…).
+                # Implied closes (hot: fires on every p/div/li/…).
                 closers = _SIBLING_CLOSERS.get(tag)
                 if closers:
                     while len(stack) > 1 and stack[-1][1] in closers:
@@ -369,17 +352,3 @@ def _find_ci(haystack: str, needle: str, start: int) -> int:
     # Fallback: case-insensitive scan (rare: '</SCRIPT>' etc.)
     m = re.compile(re.escape(needle), re.IGNORECASE).search(haystack, start)
     return m.start() if m else -1
-
-
-def _implied_closes(stack: list, tag: str) -> None:
-    """HTML5-ish implied end tags: <li><li>, <p><div>, table cells, …"""
-    if not stack or len(stack) == 1:
-        return
-    top = stack[-1][1]
-    closers = _SIBLING_CLOSERS.get(tag)
-    if closers:
-        while len(stack) > 1 and stack[-1][1] in closers:
-            stack.pop()
-        return
-    if tag in _P_CLOSERS and top == "p":
-        stack.pop()

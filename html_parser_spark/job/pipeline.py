@@ -39,6 +39,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -87,7 +88,8 @@ EXTRACT_SCHEMA = StructType([
 
 def build_session(app: str = "html-parser-spark", cores: Optional[int] = None,
                   shuffle_partitions: Optional[int] = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS",
+                                        len(os.sched_getaffinity(0))))
     b = (
         SparkSession.builder.master(f"local[{cores}]").appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
@@ -300,21 +302,24 @@ def write_snapshot(extracted: DataFrame, table_dir: str,
     data_dir = os.path.join(table_dir, "data", f"run_id={run_id}")
     extracted.write.mode("overwrite").parquet(data_dir)
     spark = extracted.sparkSession
-    written = spark.read.parquet(data_dir)
-    lineage = [r.asDict() for r in
-               written.groupBy("profile", "status").count().collect()]
-    n = sum(r["count"] for r in lineage)
-    # Per-PARTITION lineage (north_rule): every parquet part file that
-    # makes up the snapshot, with its row count — the Iceberg-manifest
+    # One read-back aggregate feeds both the per-(profile, status) lineage
+    # and the per-PARTITION lineage (north_rule): every parquet part file
+    # that makes up the snapshot, with its row count — the Iceberg-manifest
     # analog that lets an auditor trace any committed row to the task
     # partition that wrote it.
-    files = sorted(
-        ({"file": r.f[r.f.index("data/run_id="):] if "data/run_id=" in r.f
-          else r.f,
-          "rows": r["count"]}
-         for r in written.groupBy(
-             F.input_file_name().alias("f")).count().collect()),
-        key=lambda d: d["file"])
+    by_key: Counter = Counter()
+    by_file: Counter = Counter()
+    for r in (spark.read.parquet(data_dir)
+              .groupBy(F.input_file_name().alias("f"), "profile", "status")
+              .count().collect()):
+        by_key[r.profile, r.status] += r["count"]
+        by_file[r.f] += r["count"]
+    lineage = [{"profile": p, "status": s, "count": c}
+               for (p, s), c in by_key.items()]
+    n = sum(by_key.values())
+    files = [{"file": f[f.index("data/run_id="):] if "data/run_id=" in f
+              else f, "rows": c}
+             for f, c in sorted(by_file.items())]
     parents = committed_snapshots(table_dir)
     manifest = {
         "snapshot_id": len(parents) + 1,

@@ -43,9 +43,10 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--salt", type=int, default=16)
     p.add_argument("--partitions", type=int, default=None)
     p.add_argument("--run-id", default=None)
-    p.add_argument("--cores", type=int,
-                   default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-                   help="local-mode cores (ignored under a real cluster master)")
+    p.add_argument("--cores", type=int, default=None,
+                   help="local-mode cores (ignored under a real cluster "
+                        "master); default: SPARK_GRAFT_CPUS, else the "
+                        "CPUs this process may run on")
     return p
 
 

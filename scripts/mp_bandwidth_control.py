@@ -1,11 +1,13 @@
-"""Spark-independent hardware-bandwidth control for the 8→32 scaling story.
+"""Spark-free kernel rate: the identical extraction kernel (tokenizer →
+carriers → rules → envelope), no Spark, no IPC of page bytes (each worker
+renders its own shard in-process), run at several process counts, each
+worker pinned to one CPU of this process's affinity set.
 
-Reproduces BASELINE.md's ~0.77 pure-multiprocessing efficiency figure: the
-identical extraction kernel (tokenizer → carriers → rules → envelope), no
-Spark, no IPC of page bytes (each worker renders its own shard in-process),
-run at several process counts with CPU pinning. If even this bare kernel
-scales 8→32 at ~0.77, the Spark job's 8→32 number is bounded by the
-virtualized box's aggregate memory bandwidth, not by the job plan.
+``bench.py`` calls ``run_level`` at each scaling level, in the same pinned
+child and window as the Spark pass, and reports Spark docs/s over this
+kernel's docs/s. Run standalone, it shows what the bare kernel's own
+scaling is bounded by (the box's aggregate memory bandwidth), apart from
+the job plan.
 
 Usage:
     python scripts/mp_bandwidth_control.py [--pages 4000] [--procs 8,32]
@@ -15,7 +17,7 @@ Prints one JSON line:
      "filler": F, "levels": {"8": docs_per_sec, "32": docs_per_sec},
      "efficiency": {"8->32": e}}
 
-Run it ALONE (no live Spark JVM in the tree — see bench.py --scaling notes).
+Run it ALONE: a live Spark JVM on the same CPUs slows the kernel.
 """
 
 from __future__ import annotations
@@ -63,14 +65,14 @@ def run_level(n_pages: int, procs: int, filler: int,
     so min-time/max-rate is the steady-state estimator; spawn/import cost
     never pollutes the measurement either way."""
     per = n_pages // procs
-    jobs = [(i * per, per, i % os.cpu_count(), filler)
+    cpus = sorted(os.sched_getaffinity(0))
+    jobs = [(i * per, per, cpus[i % len(cpus)], filler)
             for i in range(procs)]
     ctx = mp.get_context("spawn")
     best = 0.0
     with ctx.Pool(procs) as pool:
         # Warm imports once so compile time isn't in the measurement.
-        pool.map(_work, [(0, 1, i % os.cpu_count(), filler)
-                         for i in range(procs)])
+        pool.map(_work, [(0, 1, cpu, filler) for _, _, cpu, _ in jobs])
         for _ in range(max(1, repeats)):
             res = pool.map(_work, jobs)
             # Workers overlap (same dispatch); the slowest shard bounds

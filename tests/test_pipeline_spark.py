@@ -4,6 +4,7 @@ error routing, metrics, snapshot resume (SURVEY.md §5.2 items 1, 4, 5)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -107,6 +108,35 @@ def test_snapshot_resume_idempotent(spark, tmp_path):
     assert sum(s["rows"] for s in snaps) == 60
 
 
+def test_local_cores_default_to_cpu_affinity(monkeypatch):
+    """SPARK_GRAFT_CPUS is read in one place, build_session, and falls back
+    to the CPUs this process may run on; run.py leaves --cores unset."""
+    from html_parser_spark.job import run
+
+    class Builder:
+        def master(self, m):
+            self.m = m
+            return self
+
+        def appName(self, _):
+            return self
+
+        def config(self, *_):
+            return self
+
+        def getOrCreate(self):
+            return self.m
+
+    monkeypatch.setattr(P, "SparkSession", type("S", (), {"builder": Builder()}))
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert P.build_session() == f"local[{len(os.sched_getaffinity(0))}]"
+    assert P.build_session(cores=3) == "local[3]"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    assert P.build_session() == "local[5]"
+    assert run.build_parser().parse_args(
+        ["--input", "i", "--output", "o"]).cores is None
+
+
 def test_host_salted_partitioning_runs(spark):
     pages = P.synthesize_pages(spark, 40, partitions=2)
     out = P.extract_pages(pages, partitions=4, host_salted=True, salt=4)
@@ -118,7 +148,6 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
     run.py` in a fresh process whose imports can only resolve from the
     shipped zip (run.py is copied OUT of the repo and cwd is the temp
     dir), writing a committed snapshot the resume machinery can read."""
-    import os
     import shutil
     import subprocess
     import sys
@@ -161,14 +190,20 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
 def test_snapshot_manifest_carries_per_partition_lineage(spark, tmp_path):
     """north_rule: per-partition lineage — every parquet part file in the
     snapshot appears in the manifest with its row count, summing to the
-    snapshot total."""
+    snapshot total; the per-(profile, status) lineage equals the written
+    table's counts."""
     from html_parser_spark.job import pipeline as P
     table = str(tmp_path / "tbl")
     df = P.extract_pages(P.synthesize_pages(spark, 20, partitions=4))
     m = P.write_snapshot(df, table, "r1")
     assert m["files"], m
     assert sum(f["rows"] for f in m["files"]) == m["rows"] == 20
-    import os
+    written = spark.read.parquet(os.path.join(table, m["data_dir"]))
+    assert ({(d["profile"], d["status"], d["count"]) for d in m["lineage"]}
+            == {(r.profile, r.status, r["count"]) for r in
+                written.groupBy("profile", "status").count().collect()})
+    assert len(m["lineage"]) == len({(d["profile"], d["status"])
+                                     for d in m["lineage"]})
     for f in m["files"]:
         assert f["file"].startswith("data/run_id=r1"), f
         assert os.path.exists(os.path.join(table, f["file"])), f
