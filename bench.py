@@ -18,6 +18,8 @@ a fresh child process that first times the Spark-free kernel
 pass at ``local[N]``, on the same page count and filler, and reports
 ``spark_vs_kernel``: host contention hits both runs in the same window, so
 the ratio prices the engine (boundary, scheduling) apart from the kernel.
+Levels read the ``crc32(url) % 4 == 0`` quarter of the corpus, written once
+as its own parquet (untimed), so a level reads only the pages it extracts.
 Three pair runs, medians quoted. The headline and the query suite run at
 4N cores. With fewer than 4 CPUs there is one level and no efficiency.
 
@@ -36,7 +38,6 @@ import subprocess
 import shutil
 import sys
 import time
-import zlib
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -44,7 +45,7 @@ N_PAGES = int(os.environ.get("BENCH_PAGES", "20000"))
 FILLER = int(os.environ.get("BENCH_FILLER", "30"))
 BENCH_DIR = os.environ.get("BENCH_DIR", "/tmp/html_parser_spark_bench")
 CORPUS_FILES = 128  # fixed file count → identical splits at every core level
-SUBSET_MOD = 4      # scaling levels time a deterministic 1/4 of the corpus
+SUBSET_MOD = 4      # scaling levels read a deterministic 1/4 of the corpus
 
 
 def _session(cores: int):
@@ -55,8 +56,9 @@ def _session(cores: int):
         .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-        .config("spark.sql.files.maxPartitionBytes", "16m")
+        # the job's batch and split settings (job.pipeline.build_session)
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+        .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
@@ -70,13 +72,6 @@ def scaling_levels(affinity) -> list[list[int]]:
     cpus = sorted(affinity)
     n = len(cpus) // 4
     return [cpus[:n], cpus[:4 * n]] if n else [cpus]
-
-
-def _in_subset(url: str) -> bool:
-    """Python twin of the level runs' Spark predicate
-    ``crc32(url) % SUBSET_MOD == 0``, so a level can size its kernel run
-    before any JVM exists."""
-    return zlib.crc32(url.encode()) % SUBSET_MOD == 0
 
 
 def _timed(df_factory, repeats: int = 2) -> float:
@@ -99,38 +94,45 @@ def corpus_path() -> str:
     return os.path.join(BENCH_DIR, f"pages_{tag}_n{N_PAGES}_f{FILLER}")
 
 
-def ensure_corpus(spark) -> str:
-    """Materialize the synthetic pages corpus once (untimed setup)."""
-    path = corpus_path()
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+def subset_path() -> str:
+    """The scaling levels' input: the ``crc32(url) % SUBSET_MOD == 0``
+    pages of the corpus, in a fixed ``CORPUS_FILES // SUBSET_MOD`` files
+    (the corpus's pages per file, whatever the writer's core count)."""
+    return f"{corpus_path()}_crc{SUBSET_MOD}"
+
+
+def _written(path: str) -> bool:
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def ensure_corpus(spark) -> None:
+    """Materialize the synthetic pages corpus and the level subset once
+    (untimed setup)."""
+    from pyspark.sql import functions as F
+    path, sub = corpus_path(), subset_path()
+    if not _written(path):
         from html_parser_spark.job import pipeline as P
         shutil.rmtree(path, ignore_errors=True)
         (P.synthesize_pages(spark, N_PAGES, partitions=CORPUS_FILES,
                             filler=FILLER)
          .write.mode("overwrite").parquet(path))
-    return path
+    if not _written(sub):
+        shutil.rmtree(sub, ignore_errors=True)
+        (spark.read.parquet(path).where(F.crc32("url") % SUBSET_MOD == 0)
+         .repartition(CORPUS_FILES // SUBSET_MOD)
+         .write.mode("overwrite").parquet(sub))
 
 
-def run_extract(spark, path: str, repeats: int = 2,
-                subset: bool = False) -> tuple[float, int]:
+def run_extract(spark, path: str, repeats: int = 2) -> tuple[float, int]:
     """Timed: scan parquet pages → map-only extract → count.
 
     One warm pass, then best-of-``repeats`` — min is the standard
     noise-robust throughput estimator on a shared box (GC, page cache and
-    turbo transitions only ever make a run slower, not faster).
-
-    ``subset``: keep only the pages ``_in_subset`` keeps — the same input
-    at every scaling level is what the efficiency ratio needs, not the
-    full corpus."""
+    turbo transitions only ever make a run slower, not faster)."""
     from html_parser_spark.job import pipeline as P
 
     def job():
-        from pyspark.sql import functions as F
-        df = spark.read.parquet(path)
-        if subset:
-            df = df.where(F.crc32("url") % SUBSET_MOD == 0)
-        return P.extract_pages(df).where("status = 'ok'")
+        return P.extract_pages(spark.read.parquet(path)).where("status = 'ok'")
 
     n_ok = job().count()                       # warm pass
     best = float("inf")
@@ -152,12 +154,11 @@ def _level_child() -> None:
 
     cpus = [int(c) for c in sys.argv[sys.argv.index("--level") + 1].split(",")]
     os.sched_setaffinity(0, cpus)
-    urls = pq.read_table(corpus_path(), columns=["url"]).column("url")
-    n_in = sum(map(_in_subset, urls.to_pylist()))
+    n_in = pq.read_table(subset_path(), columns=["url"]).num_rows
     kernel = run_level(n_in, len(cpus), FILLER)
     spark = _session(len(cpus))
     spark.sparkContext.setLogLevel("ERROR")
-    dt, n_ok = run_extract(spark, corpus_path(), repeats=1, subset=True)
+    dt, n_ok = run_extract(spark, subset_path(), repeats=1)
     spark.stop()
     print(json.dumps({"cpus": cpus, "n_pages": n_in, "n_ok": n_ok,
                       "sec": round(dt, 3),
@@ -208,8 +209,8 @@ def _run_scaling(levels: list[list[int]]) -> dict:
                     "the first N CPUs of this process's affinity set: the "
                     "Spark-free kernel at N processes, then a fresh JVM at "
                     "local[N], one warm pass then one timed, on the "
-                    f"crc32(url) % {SUBSET_MOD} == 0 corpus subset; medians "
-                    "quoted",
+                    f"crc32(url) % {SUBSET_MOD} == 0 corpus subset written "
+                    "as its own parquet; medians quoted",
     }
     if len(levels) == 1:
         result["efficiency"] = None
@@ -242,7 +243,7 @@ def main() -> None:
     # subprocess so the timed session starts with a clean JVM heap —
     # measured 44 s vs 12 s for the same extract job otherwise (GC debt).
     path = corpus_path()
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if not (_written(path) and _written(subset_path())):
         _child(["--ensure-corpus"])
 
     levels = scaling_levels(os.sched_getaffinity(0))

@@ -28,35 +28,20 @@ import json
 import re
 from typing import Any, Optional
 
-from ..htmlkit.tokenizer import FlatDOM, TEXT
+from ..htmlkit.tokenizer import FlatDOM
 
 __all__ = [
     "collect_scripts", "script_by_id", "script_by_type", "script_containing",
     "json_script_by_id", "json_scripts_by_type", "webpack_entry_data",
     "regex_json", "regex_scalar", "regex_all", "unescape_embedded_json",
-    "detect_carrier",
 ]
 
 
 def collect_scripts(dom: FlatDOM) -> list[tuple[str, dict]]:
-    """All <script> (text, attrs) in document order — gathered once per doc.
-
-    Script ids are recorded by the tokenizer (``dom.script_ids``), so this
-    never scans the node array or forces the lazy children index. A script
-    element's rawtext payload, when present, is always the single TEXT node
-    appended immediately after it (tokenize's rawtext branch), so the text
-    lookup is O(1) per script."""
-    out: list[tuple[str, dict]] = []
-    tags = dom.tags
-    texts = dom.texts
-    parent = dom.parent
-    n = len(tags)
-    for i in dom.script_ids:
-        j = i + 1
-        text = (texts[j] or "") if (
-            j < n and parent[j] == i and tags[j] == TEXT) else ""
-        out.append((text, dom.attrs_of(i) or {}))
-    return out
+    """All <script> (text, attrs) in document order — gathered once per doc
+    from the dom's tag index."""
+    return [(dom.node_text(i), dom.attrs_of(i) or {})
+            for i in dom.ids_of("script")]
 
 
 def script_by_id(scripts: list, script_id: str) -> Optional[str]:
@@ -205,29 +190,3 @@ def unescape_embedded_json(escaped: str) -> Any:
     except ValueError:
         inner = escaped.replace('\\"', '"').replace("\\\\", "\\")
     return _loads(inner)
-
-
-# Ordered carrier detection — first hit wins (mirrors each parser's own
-# dispatch being hardcoded per site; here generalized for unknown pages).
-_CARRIER_PROBES: list[tuple[str, str, str]] = [
-    # (carrier name, probe kind, probe arg)
-    ("redux_state", "id", "tb-djs-wml-redux-state"),
-    ("next_data", "id", "__NEXT_DATA__"),
-    ("discover_json", "type", "application/discover+json"),
-    ("webpack_entry", "contains", "WEBPACK_ENTRY_DATA"),
-    ("escaped_component", "contains", "initializer.initializeComponent"),
-    ("pixels", "id", "web-pixels-manager-setup"),
-    ("inline_js", "contains", "priceMax"),
-    ("ld_json", "type", "application/ld+json"),
-]
-
-
-def detect_carrier(scripts: list) -> Optional[str]:
-    for name, kind, arg in _CARRIER_PROBES:
-        if kind == "id" and script_by_id(scripts, arg) is not None:
-            return name
-        if kind == "type" and script_by_type(scripts, arg):
-            return name
-        if kind == "contains" and script_containing(scripts, arg) is not None:
-            return name
-    return None

@@ -16,7 +16,7 @@ from ..htmlkit import selectors as S
 __all__ = [
     "parse_money", "parse_money_triple", "parse_int", "strip_query",
     "prefix_url", "collapse_ws", "decode_b64",
-    "hires_image", "parse_spec_table", "parse_kv_table", "parse_ul",
+    "hires_image", "parse_spec_table", "parse_ul",
     "parse_plain_table", "parse_sectioned_table", "parse_strong_props",
     "parse_html_as_data", "normalize_specs", "join_variant_criteria",
     "sectionize_lines", "sectionize_children", "weighted_rating",
@@ -139,10 +139,6 @@ def parse_spec_table(dom: FlatDOM, root: Optional[int] = None) -> list[dict]:
             if key:
                 out.append({"name": key.rstrip(":"), "value": val})
     return out
-
-
-def parse_kv_table(dom: FlatDOM) -> dict:
-    return {d["name"]: d["value"] for d in parse_spec_table(dom)}
 
 
 def _table_rows(dom: FlatDOM, table: int):

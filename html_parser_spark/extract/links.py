@@ -47,9 +47,7 @@ def links_of(html: str) -> list[dict]:
     from ..htmlkit.tokenizer import tokenize
     dom = tokenize(html)
     out = []
-    for i, tag in enumerate(dom.tags):
-        if tag != "a":
-            continue
+    for i in dom.ids_of("a"):
         href = dom.attr(i, "href")
         if href is None or href == "":
             continue

@@ -12,9 +12,9 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .._worker import prepare_worker
 
-__all__ = ["dot", "l2_norm", "cosine", "dot_unrolled", "l2_norm_unrolled",
-           "brute_force_topk", "lsh_bucket", "ivf_topk", "kmeans_cells",
-           "near_dup_pairs", "lsh_bucketed_topk"]
+__all__ = ["dot", "l2_norm", "cosine", "dot_unrolled", "brute_force_topk",
+           "lsh_bucket", "ivf_topk", "kmeans_cells", "near_dup_pairs",
+           "lsh_bucketed_topk"]
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -45,10 +45,6 @@ def dot_unrolled(a: Column, b: Column, d: int) -> Column:
     for i in range(2, d + 1):
         expr = expr + F.element_at(a, i) * F.element_at(b, i)
     return expr
-
-
-def l2_norm_unrolled(a: Column, d: int) -> Column:
-    return F.sqrt(dot_unrolled(a, a, d))
 
 
 def _safe_cos6(qn: str = "q_norm", cn: str = "c_norm") -> Column:

@@ -22,8 +22,7 @@ from __future__ import annotations
 import codecs
 import re
 
-__all__ = ["sniff_decode", "sniff_encoding", "normalize_label",
-           "charset_from_content_type"]
+__all__ = ["sniff_decode", "normalize_label", "charset_from_content_type"]
 
 # WHATWG maps the whole latin-1 family to windows-1252 (superset on the
 # 0x80-0x9F range real pages actually use for smart quotes etc.).
@@ -114,19 +113,6 @@ def _declared_encoding(raw: bytes) -> tuple[str | None, int]:
                 return "utf-8", 0
             return enc, 0
     return None, 0
-
-
-def sniff_encoding(raw: bytes) -> tuple[str, int]:
-    """(codec name, BOM length). Order: BOM > meta declaration in the
-    first 1024 bytes > strict-UTF-8 probe > windows-1252."""
-    enc, bom = _declared_encoding(raw)
-    if enc is not None:
-        return enc, bom
-    try:
-        raw.decode("utf-8", errors="strict")
-        return "utf-8", 0
-    except UnicodeDecodeError:
-        return "cp1252", 0
 
 
 def sniff_decode(raw: bytes,

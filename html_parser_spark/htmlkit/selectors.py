@@ -14,8 +14,8 @@ compiles to the same structure via :func:`xpath_to_css`.
 
 Compilation strategy: parse once into ``CompiledSelector`` (module/broadcast
 scope — the reference recompiles regexes per page, costco/parse_costco.py:49-62;
-we don't). Matching walks only the rightmost simple selector's tag-index candidates
-(lazy per-dom tag → ids map), then verifies ancestor chains with the
+we don't). Matching walks only the rightmost simple selector's candidates
+(``FlatDOM.ids_of``), then verifies ancestor chains with the
 ``parent`` array — candidates are usually rare, ancestry walks are O(depth).
 """
 
@@ -212,48 +212,21 @@ def _match_up(dom: FlatDOM, node: int, chain: list, k: int) -> bool:
     return False
 
 
-def _tag_ids(dom: FlatDOM, tag: str):
-    """Element ids carrying ``tag``, doc order — lazy per-dom index built
-    in one pass on first use; every later tag-anchored select is
-    O(candidates) instead of O(nodes)."""
-    ti = dom._tag_index
-    if ti is None:
-        ti = {}
-        tags = dom.tags
-        for i in range(1, len(tags)):
-            t = tags[i]
-            if t[0] != "#":
-                lst = ti.get(t)
-                if lst is None:
-                    ti[t] = [i]
-                else:
-                    lst.append(i)
-        dom._tag_index = ti
-    return ti.get(tag, ())
-
-
 def select(dom: FlatDOM, selector: str, limit: int = 0,
            root: Optional[int] = None) -> list[int]:
     """All matching element node ids in document order. ``root`` restricts
-    matches to the subtree strictly below that node (subtrees are
-    contiguous spans of the flattened arrays, so this is a range slice)."""
+    matches to the subtree strictly below that node (the span
+    ``root+1 .. dom.end(root)-1``)."""
     comp = compile_selector(selector)
     out: list[int] = []
     tags = dom.tags
-    lo, hi = 1, len(dom)
-    if root is not None:
-        depth = dom.depth
-        lo = root + 1
-        hi = lo
-        d = depth[root]
-        while hi < len(dom) and depth[hi] > d:
-            hi += 1
+    lo, hi = (1, len(dom)) if root is None else (root + 1, dom.end(root))
     for chain in comp.chains:
         last = chain[-1][0]
         if last.tag is not None:
             # Tag-anchored: walk only this tag's ids (bisected to the
             # subtree span when rooted).
-            ids = _tag_ids(dom, last.tag)
+            ids = dom.ids_of(last.tag)
             if root is not None:
                 ids = ids[bisect_left(ids, lo):bisect_left(ids, hi)]
             for i in ids:

@@ -91,9 +91,12 @@ class FlatDOM:
 
     Node 0 is a synthetic root. Element nodes carry ``attrs`` dicts; text
     and comment nodes carry ``texts`` payloads.
+
+    Layout: the subtree of node i is the contiguous span ``i+1 .. end(i)-1``
+    and ``ids_of(tag)`` is the one tag index; consumers read these two.
     """
 
-    __slots__ = ("tags", "parent", "depth", "attrs", "texts", "script_ids",
+    __slots__ = ("tags", "parent", "depth", "attrs", "texts",
                  "_children", "_tag_index")
 
     def __init__(self) -> None:
@@ -102,27 +105,38 @@ class FlatDOM:
         self.depth: list[int] = [0]
         self.attrs: list[Optional[dict]] = [None]
         self.texts: list[Optional[str]] = [None]
-        # <script> element ids recorded during tokenization so carrier
-        # dispatch (collect_scripts) never re-scans the whole node array.
-        self.script_ids: list[int] = []
         self._children: Optional[list[list[int]]] = None
-        # tag -> element ids (doc order), built lazily on first select();
-        # turns each selector scan from O(nodes) into O(candidates).
         self._tag_index: Optional[dict] = None
-
-    # -- construction ------------------------------------------------------
-    def _add(self, tag: str, parent: int, depth: int,
-             attrs: Optional[dict] = None, text: Optional[str] = None) -> int:
-        self.tags.append(tag)
-        self.parent.append(parent)
-        self.depth.append(depth)
-        self.attrs.append(attrs)
-        self.texts.append(text)
-        return len(self.tags) - 1
 
     # -- structure ---------------------------------------------------------
     def __len__(self) -> int:
         return len(self.tags)
+
+    def end(self, i: int) -> int:
+        """One past the last node of i's subtree: the first node after i
+        whose depth is not below i's."""
+        depth = self.depth
+        d, n, j = depth[i], len(depth), i + 1
+        while j < n and depth[j] > d:
+            j += 1
+        return j
+
+    def ids_of(self, tag: str):
+        """Element ids carrying ``tag``, doc order — a per-dom index built
+        in one pass on first use, so every later tag lookup is
+        O(candidates) instead of O(nodes)."""
+        ti = self._tag_index
+        if ti is None:
+            ti = {}
+            for i, t in enumerate(self.tags):
+                if t[0] != "#":
+                    lst = ti.get(t)
+                    if lst is None:
+                        ti[t] = [i]
+                    else:
+                        lst.append(i)
+            self._tag_index = ti
+        return ti.get(tag, ())
 
     def children(self, i: int) -> list[int]:
         if self._children is None:
@@ -149,16 +163,11 @@ class FlatDOM:
         return a.get(name) if a else None
 
     def node_text(self, i: int) -> str:
-        """Concatenated descendant text of node i (whitespace as-is)."""
-        out: list[str] = []
-        stack = [i]
-        while stack:
-            n = stack.pop()
-            if self.tags[n] == TEXT:
-                out.append(self.texts[n] or "")
-            else:
-                stack.extend(reversed(self.children(n)))
-        return "".join(out)
+        """Concatenated descendant text of node i (whitespace as-is); a
+        text node's own payload."""
+        if self.tags[i] == TEXT:
+            return self.texts[i] or ""
+        return "".join(self.descendant_texts(i))
 
     def child_texts(self, i: int) -> list[str]:
         """Direct text-node children of i — lxml's ``node/text()`` list
@@ -169,22 +178,13 @@ class FlatDOM:
     def descendant_texts(self, i: int) -> list[str]:
         """All text nodes in the subtree of i, document order — lxml's
         ``node//text()`` list."""
-        return [self.texts[n] or "" for n in self.iter_descendants(i)
-                if self.tags[n] == TEXT]
+        tags, texts = self.tags, self.texts
+        return [texts[n] or "" for n in range(i + 1, self.end(i))
+                if tags[n] == TEXT]
 
-    def iter_descendants(self, i: int):
-        """Yield node ids strictly inside the subtree rooted at i, in doc order."""
-        n = len(self.tags)
-        d = self.depth[i]
-        j = i + 1
-        depth = self.depth
-        parent = self.parent
-        # Document order == array order; subtree ends at first node with
-        # depth <= d whose ancestry leaves i. Since siblings may appear at
-        # equal depth, walk until depth[j] <= d.
-        while j < n and depth[j] > d:
-            yield j
-            j += 1
+    def iter_descendants(self, i: int) -> range:
+        """Node ids strictly inside the subtree rooted at i, in doc order."""
+        return range(i + 1, self.end(i))
 
 
 def _parse_attrs(raw: str) -> dict:
@@ -279,8 +279,6 @@ def tokenize(html: str) -> FlatDOM:
             texts_app(None)
             node = node_count
             node_count += 1
-            if tag == "script":
-                dom.script_ids.append(node)
             if not (selfclose or tag in VOID_ELEMENTS):
                 if tag in RAWTEXT_ELEMENTS:
                     # Raw text: skip to the matching close tag with str.find.

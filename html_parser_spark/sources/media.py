@@ -23,10 +23,8 @@ from ..functions.mediaops import (
     _MP3_BITRATES, encode_bmp, encode_gif, encode_jpeg,
     encode_jpeg_progressive, encode_mp3, encode_mp4, encode_png, encode_wav)
 
-__all__ = ["MEDIA_KINDS", "media_from_documents", "media_payloads",
-           "media_meta_payloads", "PAYLOADS_SCHEMA"]
-
-MEDIA_KINDS = ["image", "audio", "video"]
+__all__ = ["media_from_documents", "media_payloads", "media_meta_payloads",
+           "PAYLOADS_SCHEMA"]
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:

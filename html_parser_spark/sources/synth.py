@@ -23,7 +23,7 @@ from typing import Optional
 __all__ = [
     "PROFILES", "DETAIL_PROFILES", "SERP_PROFILES",
     "payload_for", "profile_for", "url_for", "render_page", "page_record",
-    "golden_envelope", "iter_pages", "EPOCH",
+    "golden_envelope", "EPOCH",
 ]
 
 SEED = 42
@@ -1357,11 +1357,6 @@ def page_record(idx: int, filler: int = 0) -> dict:
         "text": None,
         "lang": "en" if idx % 20 else "es",
     }
-
-
-def iter_pages(n: int, start: int = 0, filler: int = 0):
-    for i in range(start, start + n):
-        yield page_record(i, filler=filler)
 
 
 # --------------------------------------------------------------------------

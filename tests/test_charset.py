@@ -6,13 +6,11 @@ from __future__ import annotations
 
 import pytest
 
-from html_parser_spark.htmlkit.charset import (
-    normalize_label, sniff_decode, sniff_encoding)
+from html_parser_spark.htmlkit.charset import normalize_label, sniff_decode
 
 
 def test_bom_beats_everything():
-    assert sniff_encoding(b"\xef\xbb\xbfhello") == ("utf-8", 3)
-    assert sniff_decode(b"\xef\xbb\xbfhi")[0] == "hi"  # BOM stripped
+    assert sniff_decode(b"\xef\xbb\xbfhello") == ("hello", "utf-8")
     text, enc = sniff_decode("héllo".encode("utf-16-le")[0:0]
                              + b"\xff\xfe" + "héllo".encode("utf-16-le"))
     assert (text, enc) == ("héllo", "utf-16-le")
@@ -65,12 +63,13 @@ def test_label_normalization():
     assert normalize_label("UTF8") == "utf-8"
     assert normalize_label("no-such-charset-xyz") is None
     # unknown label in meta → falls through to probe chain
-    assert sniff_encoding(b'<meta charset="klingon">abc')[0] == "utf-8"
+    assert sniff_decode(b'<meta charset="klingon">abc')[1] == "utf-8"
 
 
 def test_utf16_meta_claim_treated_as_utf8():
     # a scannable byte stream claiming UTF-16 is lying (WHATWG rule)
-    assert sniff_encoding(b'<meta charset="utf-16">ok')[0] == "utf-8"
+    assert sniff_decode(b'<meta charset="utf-16">ok') == (
+        '<meta charset="utf-16">ok', "utf-8")
 
 
 def test_extraction_decodes_legacy_page(spark):

@@ -3,12 +3,15 @@
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
+from html_parser_spark.extract.carriers import collect_scripts
 from html_parser_spark.htmlkit.tokenizer import tokenize, TEXT
 from html_parser_spark.htmlkit.text import extract_text
 from html_parser_spark.htmlkit import selectors as S
 
 from .oracle import oracle_text
+from .test_adversarial import _htmlish, _well_formed
 
 
 class TestTokenizer:
@@ -214,3 +217,46 @@ def test_rcdata_and_stray_close_text_semantics():
         got = extract_text(tokenize(html))
         assert got == expected, (html, got)
         assert oracle_text(html) == expected, (html, oracle_text(html))
+
+
+# -- FlatDOM layout: end(), ids_of(), node_text() and collect_scripts()
+# against brute-force definitions over the parent array ----------------------
+
+# Token soup that reaches implied closes, voids, self-closed and unclosed
+# rawtext elements, which the other two strategies rarely emit.
+_soup = st.lists(st.sampled_from([
+    "<li>", "<tr>", "<td>", "<p>", "</p>", "<div>", "</div>", "<br>",
+    "<a href=x>", "</a>", "<script>s</script>", "<script/>", "<script>",
+    "<style>c</style>", "<title>t&amp;</title>", "<!--c-->", "w", " ",
+]), max_size=40).map("".join)
+
+
+@given(st.one_of(_well_formed(), _htmlish, _soup))
+@settings(max_examples=300, deadline=None)
+def test_flatdom_layout_matches_brute_force(html):
+    dom = tokenize(html)
+    n = len(dom)
+    last = list(range(n))  # last node whose parent chain reaches i
+    for j in range(1, n):
+        p = dom.parent[j]
+        while p >= 0:
+            last[p] = max(last[p], j)
+            p = dom.parent[p]
+
+    def dfs_text(i):
+        if dom.tags[i] == TEXT:
+            return dom.texts[i] or ""
+        return "".join(dfs_text(c) for c in dom.children(i))
+
+    for i in range(n):
+        assert dom.end(i) == last[i] + 1, i
+        assert list(dom.iter_descendants(i)) == list(range(i + 1, last[i] + 1))
+        assert dom.node_text(i) == dfs_text(i), i
+    for t in set(dom.tags) | {"nosuchtag"}:
+        want = [i for i, tag in enumerate(dom.tags) if tag == t]
+        assert list(dom.ids_of(t)) == ([] if t[0] == "#" else want), t
+    old_rule = [
+        ((dom.texts[i + 1] or "") if i + 1 < n and dom.parent[i + 1] == i
+         and dom.tags[i + 1] == TEXT else "", dom.attrs_of(i) or {})
+        for i, tag in enumerate(dom.tags) if tag == "script"]
+    assert collect_scripts(dom) == old_rule

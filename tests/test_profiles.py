@@ -7,7 +7,7 @@ import pytest
 
 from html_parser_spark.sources import synth
 from html_parser_spark.htmlkit.tokenizer import tokenize
-from html_parser_spark.extract.carriers import collect_scripts, detect_carrier
+from html_parser_spark.extract.carriers import collect_scripts
 from html_parser_spark.rules.profiles import extract_page
 
 N = 300  # covers every profile ≥ 24 times incl. pdf/error slots
@@ -30,20 +30,6 @@ def test_error_pages_yield_no_rule():
         dom = tokenize(synth.render_page(idx).decode("utf-8"))
         prof, env = extract_page(dom, collect_scripts(dom), synth.url_for(idx))
         assert prof is None and env is None
-
-
-def test_detect_carrier_on_detail_profiles():
-    seen = set()
-    for idx in range(100):
-        p = synth.profile_for(idx)
-        if p in ("pdf", "error", "css-serp", "apijson-serp"):
-            continue
-        dom = tokenize(synth.render_page(idx).decode("utf-8"))
-        c = detect_carrier(collect_scripts(dom))
-        assert c is not None, p
-        seen.add(c)
-    assert {"redux_state", "next_data", "discover_json", "webpack_entry",
-            "escaped_component", "pixels", "inline_js"} <= seen
 
 
 def test_bestbuy_missing_component_key_degrades_not_errors():
