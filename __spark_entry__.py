@@ -836,7 +836,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # ---------------------------------------------------------------------------
 
 _EN = "|".join(textops.EN_STOPWORDS)
-_ES = "|".join(textops.ES_STOPWORDS)
 
 
 def _langid_sql() -> str:

@@ -1,14 +1,33 @@
-"""Main-content extraction for pages with no site rule (north_star).
+"""Plain text and main content of a page, from one walk over the flat DOM.
 
+The reference parsers strip tags with ``soup.get_text()``
+(1.samsclub/parse_samsclub.py:45-50,
+bedbathbeyond/parse_bedbathbeyond.py:87-89). That function's whitespace
+behavior is bs4-defined; since goldens here are produced by our own oracle
+(SURVEY.md §5.2), we pin an explicit spec — **TEXT-SPEC v1** — implemented
+here over flat arrays (engine) and in ``tests/oracle.py`` over stdlib
+``html.parser`` events (independent check).
+
+TEXT-SPEC v1
+============
+1. Subtrees under ``script style template noscript iframe svg head`` and
+   comment nodes contribute no text.
+2. Text nodes accumulate into the current line buffer (entity-decoded).
+3. Opening OR closing a *block* element (``BLOCK_TAGS``) or ``<br>``
+   outside an excluded subtree terminates the current line: the buffer is
+   concatenated, runs of whitespace collapsed to a single space, stripped;
+   non-empty results are emitted as one line.
+4. Output = lines joined with ``"\\n"``.
+
+Main content for pages with no site rule (north_star) is
 Boilerpipe/trafilatura-style scoring (Kohlschütter et al., WSDM 2010
-"Boilerplate Detection using Shallow Text Features" — public method) over the
-flat node arrays: segment the page into text *lines* (same block segmentation
-as TEXT-SPEC v1), score each line by text length and link-character density,
-and keep content-like lines. No per-node Python objects: one forward pass
-computes under-link / under-boilerplate-container flags using the
-parents-before-children property of the flat array (parent[i] < i always).
+"Boilerplate Detection using Shallow Text Features" — public method):
+segment the page into text *lines*, score each line by text length and
+link-character density, and keep content-like lines.
 
 BOILER-SPEC v1 (deterministic, pinned for goldens):
+  * Lines are the TEXT-SPEC lines, except that a block or ``<br>`` inside
+    an excluded subtree also ends a line.
   * Lines inside nav/footer/header/aside/form subtrees are boilerplate.
   * A line is content iff link_density < 0.34 AND text length ≥ 25 chars,
     OR (length ≥ 8, zero link chars, and adjacent to a content line —
@@ -21,9 +40,20 @@ from __future__ import annotations
 import re
 
 from ..htmlkit.tokenizer import COMMENT, TEXT, FlatDOM
-from ..htmlkit.text import BLOCK_TAGS, EXCLUDED_TAGS
 
-__all__ = ["score_lines", "main_text", "text_and_scored", "select_content"]
+__all__ = ["text_and_scored", "select_content", "BLOCK_TAGS",
+           "EXCLUDED_TAGS"]
+
+EXCLUDED_TAGS = frozenset(
+    "script style template noscript iframe svg head".split()
+)
+
+BLOCK_TAGS = frozenset(
+    """address article aside blockquote body caption dd details div dl dt
+    fieldset figcaption figure footer form h1 h2 h3 h4 h5 h6 header hr html
+    li main menu nav ol optgroup option p pre section select table tbody td
+    tfoot th thead tr ul""".split()
+)
 
 _BOILER_CONTAINERS = frozenset("nav footer header aside form".split())
 _WS_RE = re.compile(r"\s+")
@@ -33,171 +63,59 @@ MAX_LINK_DENSITY = 0.34
 MIN_CONT_CHARS = 8
 
 
-def score_lines(dom: FlatDOM) -> list[tuple[str, int, int, bool]]:
-    """Segment into lines → (text, n_chars, n_link_chars, in_boiler_container).
-
-    One pass; ancestry flags (under <a> / boiler container / excluded) are
-    tracked as counters on the open-element stack instead of per-node flag
-    arrays — no O(n) pre-pass, and the whitespace-collapse on text pieces is
-    only computed when a flag is actually set (link/boiler text is a small
-    minority of content bytes on real pages).
-    """
-    n = len(dom)
-    tags = dom.tags
-    depth = dom.depth
-    texts = dom.texts
-
-    lines: list[tuple[str, int, int, bool]] = []
-    buf: list[str] = []
-    buf_link = 0
-    buf_boiler = False
-    # (depth, is_block, d_a, d_boiler, d_excl) — d_* are 0/1 contributions.
-    stack: list[tuple[int, bool, int, int, int]] = []
-    in_a = in_boiler = in_excl = 0
-
-    def flush() -> None:
-        nonlocal buf_link, buf_boiler
-        if buf:
-            line = "".join(buf)
-            if (not line.isascii() or "  " in line or "\n" in line
-                    or "\t" in line or "\r" in line or "\f" in line
-                    or "\v" in line):
-                line = _WS_RE.sub(" ", line)
-            line = line.strip()
-            if line:
-                lines.append((line, len(line), min(buf_link, len(line)), buf_boiler))
-            del buf[:]
-            buf_link = 0
-            buf_boiler = False
-
-    for i in range(1, n):
-        d = depth[i]
-        while stack and stack[-1][0] >= d:
-            _, was_block, d_a, d_boiler, d_excl = stack.pop()
-            in_a -= d_a
-            in_boiler -= d_boiler
-            in_excl -= d_excl
-            if was_block:
-                flush()
-        t = tags[i]
-        if t == TEXT:
-            if not in_excl:
-                piece = texts[i] or ""
-                buf.append(piece)
-                if in_a or in_boiler:
-                    stripped = _WS_RE.sub(" ", piece).strip()
-                    if in_a:
-                        buf_link += len(stripped)
-                    if in_boiler and stripped:
-                        buf_boiler = True
-        elif t == COMMENT:
-            continue
-        elif t == "br":
-            flush()
-        else:
-            is_block = t in BLOCK_TAGS
-            if is_block:
-                flush()
-            d_a = 1 if t == "a" else 0
-            d_boiler = 1 if t in _BOILER_CONTAINERS else 0
-            d_excl = 1 if t in EXCLUDED_TAGS else 0
-            in_a += d_a
-            in_boiler += d_boiler
-            in_excl += d_excl
-            stack.append((d, is_block, d_a, d_boiler, d_excl))
-    while stack:
-        _, was_block, d_a, d_boiler, d_excl = stack.pop()
-        in_a -= d_a
-        in_boiler -= d_boiler
-        in_excl -= d_excl
-        if was_block:
-            flush()
-    flush()
-    return lines
-
-
 def text_and_scored(dom: FlatDOM) -> tuple[str, list[tuple[str, int, int, bool]]]:
-    """One traversal producing BOTH the TEXT-SPEC v1 text and the
-    BOILER-SPEC v1 scored lines.
+    """One walk producing the TEXT-SPEC v1 text and the BOILER-SPEC v1
+    scored lines ``(text, n_chars, n_link_chars, in_boiler_container)``.
 
-    ``extract_text`` and ``score_lines`` walk the same arrays with slightly
-    different flush disciplines (TEXT-SPEC ignores excluded-block
-    boundaries; BOILER-SPEC flushes on them) — running them separately
-    costs a second full traversal per page (~10% of the kernel). This
-    merged pass keeps two line buffers and is verified equivalent to the
-    two single-purpose functions by tests/test_extract.py."""
-    n = len(dom)
+    The two line splits differ only at a block or ``<br>`` inside an
+    excluded subtree (no text there, and no tag is both excluded and a
+    block): that *soft* boundary ends the scored line ``buf[cut:]`` and
+    moves ``cut``; every other boundary is *hard* and ends both lines, the
+    text line being all of ``buf``. Ancestry (under <a> / boiler container
+    / excluded) is tracked as counters on the open-element stack."""
     tags = dom.tags
     depth = dom.depth
     texts = dom.texts
 
     t_lines: list[str] = []
     s_lines: list[tuple[str, int, int, bool]] = []
-    buf_t: list[str] = []
-    buf_s: list[str] = []
-    buf_link = 0
-    buf_boiler = False
+    buf: list[str] = []
+    cut = 0
+    link = 0
+    boiler = False
     stack: list[tuple[int, bool, bool, int, int]] = []
     in_a = in_boiler = excluded = 0
     ws_sub = _WS_RE.sub
 
-    def _collapse(line: str) -> str:
+    def collapse(line: str) -> str:
+        # The C substring scans are ~free next to the regex sub, and most
+        # lines carry single spaces only.
         if (not line.isascii() or "  " in line or "\n" in line
                 or "\t" in line or "\r" in line or "\f" in line
                 or "\v" in line):
             line = ws_sub(" ", line)
         return line.strip()
 
-    def flush_t() -> None:
-        if buf_t:
-            line = _collapse("".join(buf_t))
-            del buf_t[:]
+    def flush(hard: bool) -> None:
+        nonlocal cut, link, boiler
+        line = ""
+        if len(buf) > cut:
+            line = collapse("".join(buf[cut:] if cut else buf))
             if line:
-                t_lines.append(line)
-
-    def flush_s() -> None:
-        nonlocal buf_link, buf_boiler
-        if buf_s:
-            line = _collapse("".join(buf_s))
-            del buf_s[:]
-            if line:
-                s_lines.append((line, len(line), min(buf_link, len(line)),
-                                buf_boiler))
-            buf_link = 0
-            buf_boiler = False
-
-    # Both buffers receive identical text pieces; they diverge only when a
-    # boundary flushes the scored side alone (excluded block). While they
-    # are byte-identical (`same`), a joint flush collapses ONCE and feeds
-    # both outputs — on content-heavy pages this halves the collapse work.
-    # Equivalence to the two single-purpose walks stays pinned by
-    # tests/test_extract.py (incl. hypothesis fuzz).
-    same = True
-
-    def flush_pair(do_t: bool) -> None:
-        nonlocal same, buf_link, buf_boiler
-        if do_t and same:
-            if buf_s:
-                line = _collapse("".join(buf_s))
-                del buf_s[:]
-                del buf_t[:]
-                if line:
-                    s_lines.append((line, len(line),
-                                    min(buf_link, len(line)), buf_boiler))
-                    t_lines.append(line)
-                buf_link = 0
-                buf_boiler = False
+                s_lines.append((line, len(line), min(link, len(line)), boiler))
+            link = 0
+            boiler = False
+        if not hard:
+            cut = len(buf)
             return
-        if buf_s:
-            flush_s()
-        if do_t:
-            if buf_t:
-                flush_t()
-            same = True
-        else:
-            same = not buf_t
+        if cut:
+            line = collapse("".join(buf))
+        if line:
+            t_lines.append(line)
+        del buf[:]
+        cut = 0
 
-    for i in range(1, n):
+    for i in range(1, len(tags)):
         d = depth[i]
         while stack and stack[-1][0] >= d:
             _, was_block, was_excl, d_a, d_boiler = stack.pop()
@@ -205,29 +123,28 @@ def text_and_scored(dom: FlatDOM) -> tuple[str, list[tuple[str, int, int, bool]]
             in_boiler -= d_boiler
             if was_excl:
                 excluded -= 1
-            if was_block and (buf_s or buf_t):
-                flush_pair(not was_excl and not excluded)
+            elif was_block and buf:
+                flush(not excluded)
         t = tags[i]
         if t == TEXT:
             if not excluded:
                 piece = texts[i] or ""
-                buf_t.append(piece)
-                buf_s.append(piece)
+                buf.append(piece)
                 if in_a or in_boiler:
                     stripped = ws_sub(" ", piece).strip()
                     if in_a:
-                        buf_link += len(stripped)
+                        link += len(stripped)
                     if in_boiler and stripped:
-                        buf_boiler = True
+                        boiler = True
         elif t == COMMENT:
             continue
         elif t == "br":
-            (buf_s or buf_t) and flush_pair(not excluded)
+            buf and flush(not excluded)
         else:
             is_excl = t in EXCLUDED_TAGS
             is_block = t in BLOCK_TAGS
-            if is_block and (buf_s or buf_t):
-                flush_pair(not is_excl and not excluded)
+            if is_block and buf:
+                flush(not excluded)
             d_a = 1 if t == "a" else 0
             d_boiler = 1 if t in _BOILER_CONTAINERS else 0
             in_a += d_a
@@ -236,39 +153,29 @@ def text_and_scored(dom: FlatDOM) -> tuple[str, list[tuple[str, int, int, bool]]
                 excluded += 1
             stack.append((d, is_block, is_excl, d_a, d_boiler))
     while stack:
-        _, was_block, was_excl, d_a, d_boiler = stack.pop()
-        in_a -= d_a
-        in_boiler -= d_boiler
+        _, was_block, was_excl, _, _ = stack.pop()
         if was_excl:
             excluded -= 1
-        if was_block and (buf_s or buf_t):
-            flush_pair(not was_excl and not excluded)
-    (buf_s or buf_t) and flush_pair(True)
+        elif was_block and buf:
+            flush(not excluded)
+    buf and flush(True)
     return "\n".join(t_lines), s_lines
 
 
 def select_content(lines: list[tuple[str, int, int, bool]]) -> str:
     """BOILER-SPEC v1 content selection over scored lines."""
     n = len(lines)
-    keep = [False] * n
-    for i, (txt, chars, link_chars, boiler) in enumerate(lines):
-        if boiler:
-            continue
-        if chars >= MIN_CONTENT_CHARS and link_chars / max(chars, 1) < MAX_LINK_DENSITY:
+    keep = [not boiler and chars >= MIN_CONTENT_CHARS
+            and link_chars / max(chars, 1) < MAX_LINK_DENSITY
+            for _, chars, link_chars, boiler in lines]
+    # Continuation smoothing: a short linkless line next to content is
+    # content; a forward then a backward pass carry it along runs.
+    cont = [not boiler and not link_chars and chars >= MIN_CONT_CHARS
+            for _, chars, link_chars, boiler in lines]
+    for i in range(1, n):
+        if cont[i] and keep[i - 1]:
             keep[i] = True
-    # Continuation smoothing: short linkless lines adjacent to content.
-    changed = True
-    while changed:
-        changed = False
-        for i, (txt, chars, link_chars, boiler) in enumerate(lines):
-            if keep[i] or boiler or link_chars or chars < MIN_CONT_CHARS:
-                continue
-            if (i > 0 and keep[i - 1]) or (i + 1 < n and keep[i + 1]):
-                keep[i] = True
-                changed = True
+    for i in range(n - 2, -1, -1):
+        if cont[i] and keep[i + 1]:
+            keep[i] = True
     return "\n".join(lines[i][0] for i in range(n) if keep[i])
-
-
-def main_text(dom: FlatDOM) -> str:
-    """BOILER-SPEC v1 content selection."""
-    return select_content(score_lines(dom))

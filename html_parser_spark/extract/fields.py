@@ -16,7 +16,7 @@ from ..htmlkit import selectors as S
 __all__ = [
     "parse_money", "parse_money_triple", "parse_int", "strip_query",
     "prefix_url", "collapse_ws", "decode_b64",
-    "hires_image", "parse_spec_table", "parse_ul",
+    "hires_image", "parse_ul",
     "parse_plain_table", "parse_sectioned_table", "parse_strong_props",
     "parse_html_as_data", "normalize_specs", "join_variant_criteria",
     "sectionize_lines", "sectionize_children", "weighted_rating",
@@ -125,21 +125,6 @@ def decode_b64(s: Optional[str]) -> Optional[str]:
 
 
 # -- fragment parsers (HTML values inside JSON fields, P3/X3-X6) -----------
-
-def parse_spec_table(dom: FlatDOM, root: Optional[int] = None) -> list[dict]:
-    """X4: ``<tr><td>key</td><td>value</td></tr>`` rows → [{name,value}]
-    (1.samsclub/parse_samsclub.py:128-145, :352-384 normalizer)."""
-    out: list[dict] = []
-    rows = S.select(dom, "tr", root=root)
-    for tr in rows:
-        cells = [c for c in dom.children(tr) if dom.tags[c] in ("td", "th")]
-        if len(cells) >= 2:
-            key = collapse_ws(dom.node_text(cells[0])) or ""
-            val = collapse_ws(dom.node_text(cells[1])) or ""
-            if key:
-                out.append({"name": key.rstrip(":"), "value": val})
-    return out
-
 
 def _table_rows(dom: FlatDOM, table: int):
     for i in dom.iter_descendants(table):

@@ -12,9 +12,8 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .._worker import prepare_worker
 
-__all__ = ["dot", "l2_norm", "cosine", "dot_unrolled", "brute_force_topk",
-           "lsh_bucket", "ivf_topk", "kmeans_cells", "near_dup_pairs",
-           "lsh_bucketed_topk"]
+__all__ = ["dot", "l2_norm", "brute_force_topk", "lsh_bucket", "ivf_topk",
+           "kmeans_cells", "near_dup_pairs", "lsh_bucketed_topk"]
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -28,23 +27,6 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(
         a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
     ))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def dot_unrolled(a: Column, b: Column, d: int) -> Column:
-    """Fixed-dimension dot as an unrolled sum of ``element_at`` products.
-
-    Higher-order functions (zip_with/aggregate) are interpreted per element
-    — measured ~370 µs per 64-dim pair on the all-pairs join — while this
-    unrolled form stays inside WholeStageCodegen. Left-associative sum, so
-    the doubles match a sequential fold."""
-    expr = F.element_at(a, 1) * F.element_at(b, 1)
-    for i in range(2, d + 1):
-        expr = expr + F.element_at(a, i) * F.element_at(b, i)
-    return expr
 
 
 def _safe_cos6(qn: str = "q_norm", cn: str = "c_norm") -> Column:

@@ -4,8 +4,8 @@ Dataflow::
 
     pages (url, warc_ts, html, text, lang)
       → column pruning (url, warc_ts, html, lang)       [Catalyst]
-      → repartition on pmod(xxhash64(url), P)           [the ONE shuffle;
-         host-salted variant for skewed hosts]
+      → optional repartition on (host, salt)            [skew opt-in; the
+         default plan has no shuffle]
       → mapInArrow(extract_batch_arrow)                 [Arrow-batched UDF:
          tokenizer → carrier dispatch → rules → envelope; TEXT-SPEC text;
          BOILER-SPEC main_text; PDF branch]
@@ -86,13 +86,13 @@ EXTRACT_SCHEMA = StructType([
 ])
 
 
-def build_session(app: str = "html-parser-spark", cores: Optional[int] = None,
-                  shuffle_partitions: Optional[int] = None) -> SparkSession:
+def build_session(app: str = "html-parser-spark",
+                  cores: Optional[int] = None) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS",
                                         len(os.sched_getaffinity(0))))
     b = (
         SparkSession.builder.master(f"local[{cores}]").appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -161,8 +161,8 @@ def _extract_one_inner(url: str, html_bytes: Optional[bytes]) -> dict:
         html, _enc = sniff_decode(bytes(html_bytes))
         dom = tokenize(html)
         out["n_nodes"] = len(dom)
-        # One traversal for both outputs (equivalent to extract_text +
-        # main_text; see boilerplate.text_and_scored).
+        # One walk gives the TEXT-SPEC text and the BOILER-SPEC scored
+        # lines (see boilerplate.text_and_scored).
         out["text"], scored = boilerplate.text_and_scored(dom)
         out["main_text"] = boilerplate.select_content(scored)
         scripts = collect_scripts(dom)
@@ -209,9 +209,8 @@ extract_batch_arrow = row_kernel(_extract_row, EXTRACT_SCHEMA)
 
 
 def extract_pages(pages: DataFrame, partitions: Optional[int] = None,
-                  salt: int = 16, repartition: bool = False,
-                  host_salted: bool = False) -> DataFrame:
-    """Prune → (optional url-hash/host-salt repartition) → mapInArrow.
+                  salt: int = 16, host_salted: bool = False) -> DataFrame:
+    """Prune → (optional host-salt repartition) → mapInArrow.
 
     **Map-only by default.** Extraction is embarrassingly parallel, so the
     scale-correct plan has NO shuffle: at 100 TB a repartition would move
@@ -220,24 +219,20 @@ def extract_pages(pages: DataFrame, partitions: Optional[int] = None,
     and Parquet gives locality for free. Python workers then bound
     throughput, which is exactly where the money should go.
 
-    ``repartition=True`` opts back into the pre-UDF shuffle for *skewed*
-    inputs (a few giant files, or an upstream `coalesce`): keyed on
-    pmod(xxhash64(url), P), or with ``host_salted`` on
-    (host, pmod(xxhash64(url), salt)) — the north_rule treatment when one
-    hot host dominates the crawl and downstream consumers group by host.
+    ``host_salted=True`` opts into a pre-UDF shuffle into ``partitions``
+    on (host, pmod(xxhash64(url), salt)) — the north_rule treatment when
+    one hot host dominates the crawl and downstream consumers group by
+    host.
     """
-    spark = pages.sparkSession
-    parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     pruned = pages.select("url", "warc_ts", "html", "lang")  # column pruning
-    if repartition or host_salted:
-        if host_salted:
-            key = F.concat_ws(
-                "#",
-                F.parse_url(F.col("url"), F.lit("HOST")),
-                F.pmod(F.xxhash64("url"), F.lit(salt)).cast("string"),
-            )
-        else:
-            key = F.pmod(F.xxhash64("url"), F.lit(parts))
+    if host_salted:
+        parts = partitions or int(
+            pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        key = F.concat_ws(
+            "#",
+            F.parse_url(F.col("url"), F.lit("HOST")),
+            F.pmod(F.xxhash64("url"), F.lit(salt)).cast("string"),
+        )
         pruned = pruned.repartition(parts, key)
     return pruned.mapInArrow(extract_batch_arrow, EXTRACT_SCHEMA)
 

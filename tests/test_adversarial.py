@@ -10,9 +10,11 @@ from datetime import datetime, timezone
 from hypothesis import given, settings, strategies as st
 
 from html_parser_spark.htmlkit.tokenizer import tokenize, TEXT
-from html_parser_spark.htmlkit.text import extract_text
+from html_parser_spark.extract.boilerplate import text_and_scored
 from html_parser_spark.extract.carriers import collect_scripts
 from html_parser_spark.rules.profiles import extract_page
+
+from .oracle import oracle_text_and_scored
 
 
 # Mix plain unicode with HTML-ish punctuation so tag/attr/entity state
@@ -39,7 +41,7 @@ class TestTokenizerFuzz:
             assert -1 <= dom.parent[i] < i
             assert dom.depth[i] == dom.depth[dom.parent[i]] + 1
         # Text extraction and selection never raise either.
-        extract_text(dom)
+        text_and_scored(dom)
         collect_scripts(dom)
 
     @given(_htmlish)
@@ -87,7 +89,8 @@ def test_junk_rows_all_get_status(spark):
     assert by_url["http://j/7"].status in ("no_rule", "ok")
 
 
-# -- well-formed document fuzz: engine text must equal the stdlib oracle ----
+# -- well-formed document fuzz: engine text and scored lines must equal the
+# stdlib oracle's -----------------------------------------------------------
 #
 # The generator only emits HTML5-STABLE nesting (no block inside <p>, no
 # implied-close triggers like li/tr/td): the engine applies HTML5 implied
@@ -133,13 +136,7 @@ class TestTextOracleFuzz:
     @given(_well_formed())
     @settings(max_examples=200, deadline=None)
     def test_engine_matches_stdlib_oracle(self, html):
-        from html_parser_spark.htmlkit.text import extract_text
-        import sys, os
-        sys.path.insert(0, os.path.dirname(__file__))
-        from oracle import oracle_text
-        from html_parser_spark.extract.boilerplate import text_and_scored
-        dom = tokenize(html)
-        t1 = extract_text(dom)
-        assert t1 == oracle_text(html)
-        t2, _ = text_and_scored(dom)
-        assert t2 == t1
+        text, scored = text_and_scored(tokenize(html))
+        o_text, o_scored = oracle_text_and_scored(html)
+        assert text == o_text
+        assert scored == o_scored

@@ -4,11 +4,15 @@ from __future__ import annotations
 
 import json
 
+from hypothesis import given, settings, strategies as st
+
 from html_parser_spark.htmlkit.tokenizer import tokenize
 from html_parser_spark.extract import carriers as C
 from html_parser_spark.extract import fields as F
 from html_parser_spark.extract import boilerplate, pdfkit
 from html_parser_spark.extract.jsonpath import get_from_json, walk_first
+
+from .oracle import oracle_text_and_scored
 
 
 class TestJsonPath:
@@ -124,14 +128,6 @@ class TestFieldTransforms:
         assert F.decode_b64(base64.b64encode(b"12.34").decode()) == "12.34"
         assert F.decode_b64("!!!") is None
 
-    def test_spec_table_fragment(self):
-        dom = tokenize("<table><tr><td>Color:</td><td>Red</td></tr>"
-                       "<tr><td>Size</td><td>XL</td></tr></table>")
-        assert F.parse_spec_table(dom) == [
-            {"name": "Color", "value": "Red"},
-            {"name": "Size", "value": "XL"},
-        ]
-
     def test_ul_fragment(self):
         dom = tokenize("<ul><li> a </li><li>b<li>c</ul>")
         assert F.parse_ul(dom) == ["a", "b", "c"]
@@ -153,6 +149,11 @@ class TestFieldTransforms:
         assert F.dedup_preserve_order(["b", "a", "b", "c", "a"]) == ["b", "a", "c"]
 
 
+def _main_text(html: str) -> str:
+    return boilerplate.select_content(
+        boilerplate.text_and_scored(tokenize(html))[1])
+
+
 class TestBoilerplate:
     def test_strips_chrome_keeps_content(self):
         html = (
@@ -165,7 +166,7 @@ class TestBoilerplate:
             "<footer><a href='/about'>About our great company</a> "
             "<a href='/privacy'>Privacy and legal information page</a></footer>"
         )
-        mt = boilerplate.main_text(tokenize(html))
+        mt = _main_text(html)
         assert "main article content" in mt
         assert "Second long paragraph" in mt
         assert "Home" not in mt and "Privacy" not in mt
@@ -175,8 +176,37 @@ class TestBoilerplate:
                 "text that should be dropped entirely</a></div>"
                 "<div>A long plain prose line that easily clears the "
                 "twenty-five char bar.</div>")
-        mt = boilerplate.main_text(tokenize(html))
+        mt = _main_text(html)
         assert "plain prose" in mt and "anchor text" not in mt
+
+    @given(st.lists(st.tuples(st.integers(0, 40),
+                              st.one_of(st.just(0), st.integers(1, 40)),
+                              st.booleans()), max_size=30))
+    @settings(max_examples=300, deadline=None)
+    def test_select_content_matches_fixpoint(self, rows):
+        """The forward + backward smoothing passes keep exactly the lines
+        the continuation rule keeps when iterated to a fixpoint."""
+        lines = [(f"l{i}", chars, min(link, chars), boiler)
+                 for i, (chars, link, boiler) in enumerate(rows)]
+        assert boilerplate.select_content(lines) == _fixpoint_select(lines)
+
+
+def _fixpoint_select(lines):
+    n = len(lines)
+    keep = [not boiler and chars >= boilerplate.MIN_CONTENT_CHARS
+            and link_chars / max(chars, 1) < boilerplate.MAX_LINK_DENSITY
+            for _, chars, link_chars, boiler in lines]
+    changed = True
+    while changed:
+        changed = False
+        for i, (_, chars, link_chars, boiler) in enumerate(lines):
+            if (keep[i] or boiler or link_chars
+                    or chars < boilerplate.MIN_CONT_CHARS):
+                continue
+            if (i > 0 and keep[i - 1]) or (i + 1 < n and keep[i + 1]):
+                keep[i] = True
+                changed = True
+    return "\n".join(lines[i][0] for i in range(n) if keep[i])
 
 
 class TestPdf:
@@ -304,30 +334,26 @@ class TestFragmentParsers:
 
 
 class TestCombinedPass:
-    """text_and_scored must be exactly extract_text + score_lines."""
+    """text_and_scored must equal the stdlib oracle's text AND scored
+    lines."""
 
     def test_equivalent_on_corpus(self):
         from html_parser_spark.sources import synth
-        from html_parser_spark.htmlkit.text import extract_text
         for idx in range(120):
             raw = synth.render_page(idx, filler=3)
             if raw[:4] == b"%PDF":
                 continue
-            dom = tokenize(raw.decode("utf-8", "replace"))
-            t, s = boilerplate.text_and_scored(dom)
-            assert t == extract_text(dom)
-            assert s == boilerplate.score_lines(dom)
+            html = raw.decode("utf-8", "replace")
+            assert (boilerplate.text_and_scored(tokenize(html))
+                    == oracle_text_and_scored(html)), idx
 
     def test_equivalent_around_excluded_subtrees(self):
-        from html_parser_spark.htmlkit.text import extract_text
         for html in ("a<noscript><div>x</div></noscript>b",
                      "a<noscript><br></noscript>b",
                      "a<script>x</script>b",
                      "<div>a<style>p{}</style>b</div>c"):
-            dom = tokenize(html)
-            t, s = boilerplate.text_and_scored(dom)
-            assert t == extract_text(dom), html
-            assert s == boilerplate.score_lines(dom), html
+            assert (boilerplate.text_and_scored(tokenize(html))
+                    == oracle_text_and_scored(html)), html
 
 
 def test_pdf_spec_edge_cases():

@@ -7,10 +7,10 @@ from hypothesis import given, settings, strategies as st
 
 from html_parser_spark.extract.carriers import collect_scripts
 from html_parser_spark.htmlkit.tokenizer import tokenize, TEXT
-from html_parser_spark.htmlkit.text import extract_text
+from html_parser_spark.extract.boilerplate import text_and_scored
 from html_parser_spark.htmlkit import selectors as S
 
-from .oracle import oracle_text
+from .oracle import oracle_text, oracle_text_and_scored
 from .test_adversarial import _htmlish, _well_formed
 
 
@@ -62,10 +62,10 @@ class TestTokenizer:
 
     def test_unmatched_close_ignored(self):
         dom = tokenize("<div><p>a</span></p></div>")
-        assert extract_text(dom) == "a"
+        assert text_and_scored(dom)[0] == "a"
 
     def test_comment_not_text(self):
-        assert extract_text(tokenize("<p>a<!-- hidden -->b</p>")) == "ab"
+        assert text_and_scored(tokenize("<p>a<!-- hidden -->b</p>"))[0] == "ab"
 
     def test_case_insensitive_tags(self):
         dom = tokenize("<DIV><P>a</P></DIV>")
@@ -92,7 +92,7 @@ class TestTextSpec:
 
     @pytest.mark.parametrize("html", CASES)
     def test_matches_stdlib_oracle(self, html):
-        assert extract_text(tokenize(html)) == oracle_text(html)
+        assert text_and_scored(tokenize(html)) == oracle_text_and_scored(html)
 
     def test_synthetic_corpus_matches_oracle(self):
         from html_parser_spark.sources import synth
@@ -100,7 +100,8 @@ class TestTextSpec:
             if synth.profile_for(idx) == "pdf":
                 continue
             html = synth.render_page(idx).decode("utf-8", errors="replace")
-            assert extract_text(tokenize(html)) == oracle_text(html), idx
+            assert (text_and_scored(tokenize(html))
+                    == oracle_text_and_scored(html)), idx
 
 
 class TestSelectors:
@@ -199,13 +200,6 @@ def test_rcdata_and_stray_close_text_semantics():
     on BOTH sides: textarea/title are RCDATA (markup not parsed, entities
     decoded); an unmatched block close is ignored except '</p>', which
     becomes an empty-paragraph line boundary."""
-    import os
-    import sys
-    from html_parser_spark.htmlkit.text import extract_text
-    from html_parser_spark.htmlkit.tokenizer import tokenize
-    sys.path.insert(0, os.path.dirname(__file__))
-    from oracle import oracle_text
-
     cases = {
         "<div><textarea><b>x</b></textarea></div>": "<b>x</b>",
         "<div><textarea>a &amp; b</textarea></div>": "a & b",
@@ -214,9 +208,10 @@ def test_rcdata_and_stray_close_text_semantics():
         "<div>a</div></p>b": "a\nb",
     }
     for html, expected in cases.items():
-        got = extract_text(tokenize(html))
-        assert got == expected, (html, got)
+        got = text_and_scored(tokenize(html))
+        assert got[0] == expected, (html, got)
         assert oracle_text(html) == expected, (html, oracle_text(html))
+        assert got == oracle_text_and_scored(html), html
 
 
 # -- FlatDOM layout: end(), ids_of(), node_text() and collect_scripts()
