@@ -10,9 +10,9 @@ once: any miss → None, exactly Spark's ``get_json_object`` /
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Optional
+from typing import Any, Iterable
 
-__all__ = ["get_from_json", "walk_first"]
+__all__ = ["get_from_json"]
 
 
 def get_from_json(obj: Any, path: Iterable) -> Any:
@@ -33,11 +33,3 @@ def get_from_json(obj: Any, path: Iterable) -> Any:
                 return None
     return cur
 
-
-def walk_first(obj: Any, paths: Iterable[Iterable]) -> Any:
-    """coalesce(get_from_json(p) for p in paths) — fallback chains (T15)."""
-    for p in paths:
-        v = get_from_json(obj, p)
-        if v is not None:
-            return v
-    return None

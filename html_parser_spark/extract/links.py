@@ -14,7 +14,7 @@ one row per map task before the exchange.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 

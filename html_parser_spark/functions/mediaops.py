@@ -1,28 +1,26 @@
 """Multimodal decode / feature-extract kernels over opaque binary columns.
 
-Spark-side plumbing is real (each pass is one ``mapInArrow`` row kernel
-over ``binary``, built by ``_worker.row_kernel``: stable output schema,
-map-only plan — no shuffle of payload bytes); the codec layer is swappable:
+Spark-side plumbing is real: each pass is one ``mapInArrow`` row kernel
+over ``binary``, built by ``_worker.row_kernel`` (stable output schema,
+map-only plan — no shuffle of payload bytes). Two tiers run on it:
 
-- ``_decode_real``: PIL / soundfile / ffmpeg path — **stubbed**: those libs
-  are not in this container, so it raises ``NotImplementedError`` with a
-  clear marker. At 100 TB this is where a vectorized decoder goes; nothing
-  else changes. Real, dependency-free branches exist so the sandbox can
-  test actual codecs: uncompressed 24-bit BMP (``_decode_bmp``), 8-bit
-  truecolor PNG with all five scanline filters (``_decode_png``, stdlib
-  zlib), baseline sequential AND progressive JPEG (``_decode_jpeg``:
-  Huffman + dequant + IDCT + chroma upsample; progressive SOF2 via
-  spectral-selection / successive-approximation scan accumulation, with
-  ``encode_jpeg`` / ``encode_jpeg_progressive`` as the test inverses),
-  GIF87a/89a (``_decode_gif``: LZW + palettes + interlace, with
-  ``encode_gif`` as the inverse), bilinear/nearest ``resize_image`` over
-  any of the four, PCM WAV audio (``decode_wav``, stdlib wave), and
-  header-only dimension sniffing for BMP/PNG/GIF/JPEG
-  (``image_dimensions``). Only video frame sampling and compressed audio
-  remain stubbed (ffmpeg-class work).
-- ``_decode_fake``: deterministic byte-level features (length, header,
-  checksum) — exercised by tests and by the driver's DuckDB oracle, since
-  the fake payloads are md5-hex bytes reproducible in SQL.
+- Real, dependency-free codecs (pure Python + numpy): uncompressed 24-bit
+  BMP (``_decode_bmp``), 8-bit truecolor PNG with all five scanline
+  filters (``_decode_png``, stdlib zlib), baseline sequential AND
+  progressive JPEG (``_decode_jpeg``: one marker loop and one scan decoder
+  for SOF0 and SOF2 accumulate Huffman-coded coefficients, then one
+  batched dequant + IDCT and chroma upsample; ``encode_jpeg`` /
+  ``encode_jpeg_progressive`` are the test inverses), GIF87a/89a
+  (``_decode_gif``: LZW + palettes + interlace, with ``encode_gif`` as
+  the inverse), bilinear/nearest ``resize_image`` over any of the four,
+  PCM WAV audio (``decode_wav``, stdlib wave), header-only dimension
+  sniffing for BMP/PNG/GIF/JPEG (``image_dimensions``), and a no-decode
+  metadata tier for MP3/MP4/WAV (``media_metadata``). Other image
+  formats raise ``NotImplementedError`` (they need PIL); video and
+  compressed-audio essence decode is not implemented (ffmpeg-class work).
+- ``extract_media_features``: deterministic byte-level features (length,
+  header, checksum) — exercised by tests and by the driver's DuckDB
+  oracle, since the payloads are md5-hex bytes reproducible in SQL.
 
 Batch-shape note: payloads ride Arrow binary arrays; one output row per
 input row, so Spark can pipeline batches without buffering a partition.
@@ -47,8 +45,7 @@ __all__ = ["MEDIA_FEATURES_SCHEMA", "MEDIA_DECODE_SCHEMA",
            "extract_media_features", "decode_media_features",
            "decode_image", "encode_bmp", "encode_png", "encode_jpeg",
            "encode_jpeg_progressive", "encode_gif", "resize_image",
-           "decode_wav", "encode_wav", "image_dimensions",
-           "sample_video_frames"]
+           "decode_wav", "encode_wav", "image_dimensions"]
 
 MEDIA_FEATURES_SCHEMA = StructType([
     StructField("media_id", LongType()),
@@ -62,15 +59,14 @@ MEDIA_FEATURES_SCHEMA = StructType([
 
 
 def decode_image(payload: bytes) -> dict:
-    """Image decode. One REAL branch the sandbox can test — uncompressed
-    24-bit BMP, decoded in pure Python (fixed public format: BITMAPFILE-
-    HEADER + BITMAPINFOHEADER, little-endian, BGR rows bottom-up with
-    4-byte padding) — all other formats stay stubbed: PIL/libjpeg are not
-    in this container; swap in ``PIL.Image.open(BytesIO(payload))`` on a
-    cluster image that ships codecs.
+    """Image decode by magic: BMP, PNG, JPEG (baseline and progressive)
+    and GIF, all in pure Python; any other format raises
+    ``NotImplementedError`` (swap in ``PIL.Image.open(BytesIO(payload))``
+    on a cluster image that ships codecs).
 
-    Returns {"width", "height", "mode": "RGB", "pixels"} with pixels as a
-    top-down list of rows of (r, g, b) tuples.
+    Returns {"width", "height", "mode", "pixels"}: mode "RGB" with pixels
+    as a top-down list of rows of (r, g, b) tuples, or mode "L" (grayscale
+    JPEG) with rows of ints.
     """
     d = _decode_image_array(payload)
     arr = d.pop("array")
@@ -97,8 +93,8 @@ def _decode_image_array(payload: bytes) -> dict:
     if raw[:6] in (b"GIF87a", b"GIF89a"):
         return _decode_gif(raw)
     raise NotImplementedError(
-        f"unrecognized image magic {raw[:8]!r} (BMP, PNG, baseline JPEG "
-        f"and GIF decode are real; other formats need PIL)")
+        f"unrecognized image magic {raw[:8]!r} (BMP, PNG, JPEG and GIF "
+        f"decode are real; other formats need PIL)")
 
 
 def _decode_bmp(raw: bytes) -> dict:
@@ -408,24 +404,27 @@ class _BitReader:
         self.bitbuf &= (1 << self.nbits) - 1
         return out
 
+    def marker_at(self) -> int:
+        """Position of the next real marker's 0xFF (len(raw) if none): the
+        end of this entropy-coded segment. FF 00 is stuffed data and FF FF
+        a fill byte padding the marker (T.81 B.1.1.2)."""
+        if self.marker is not None:
+            return self.pos
+        raw, pos = self.raw, self.pos
+        while pos + 1 < len(raw) and not (
+                raw[pos] == 0xFF and raw[pos + 1] not in (0x00, 0xFF)):
+            pos += 1
+        return pos if pos + 1 < len(raw) else len(raw)
+
     def restart(self) -> None:
         """Byte-align, consume the expected RSTn marker, reset state."""
         self.bitbuf = 0
         self.nbits = 0
-        raw = self.raw
-        if self.marker is None:
-            pos = self.pos
-            # skip to the next real marker, treating FF 00 as stuffed data
-            # and FF FF as a fill byte padding the marker (T.81 B.1.1.2)
-            while pos + 1 < len(raw) and not (
-                    raw[pos] == 0xFF
-                    and raw[pos + 1] not in (0x00, 0xFF)):
-                pos += 1
-            self.marker = raw[pos + 1] if pos + 1 < len(raw) else None
-            self.pos = pos + 2
-        if self.marker is None or not 0xD0 <= self.marker <= 0xD7:
-            raise ValueError(
-                f"expected JPEG restart marker, got {self.marker!r}")
+        pos = self.marker_at()
+        marker = self.raw[pos + 1] if pos + 1 < len(self.raw) else None
+        if marker is None or not 0xD0 <= marker <= 0xD7:
+            raise ValueError(f"expected JPEG restart marker, got {marker!r}")
+        self.pos = pos + 2
         self.marker = None
 
 
@@ -481,32 +480,62 @@ def _parse_dht(seg: bytes, huff: dict) -> None:
 
 
 def _decode_jpeg(raw: bytes) -> dict:
-    """Baseline JPEG decode (T.81 SOF0): markers → Huffman/DCT entropy
-    decode per MCU → dequantize → IDCT → chroma upsample → YCbCr→RGB.
-    Grayscale (1 component) decodes to mode "L" rows of ints."""
+    """JPEG decode (T.81 SOF0 baseline and SOF2 progressive): entropy-coded
+    coefficients (:func:`_jpeg_coefficients`) → one batched dequant + IDCT
+    per component → chroma upsample → YCbCr→RGB. Grayscale (1 component)
+    decodes to mode "L" rows of ints."""
+    import numpy as np
+
+    frame, coefs = _jpeg_coefficients(raw)
+    m = _idct_basis()
+    zz = np.array(_ZIGZAG)
+    planes = []
+    for c, coef in zip(frame["comps"], coefs):
+        bh, bw = c["bh"], c["bw"]
+        blk = np.zeros((bh, bw, 64))
+        blk[:, :, zz] = coef * np.array(c["q"], dtype=float)  # de-zigzag
+        tiles = m.T @ blk.reshape(bh, bw, 8, 8) @ m + 128
+        planes.append(tiles.transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8))
+    return _jpeg_finish(frame, planes)
+
+
+def _jpeg_coefficients(raw: bytes) -> tuple:
+    """Entropy half of the decoder: one SOI-to-EOI marker loop whose SOS
+    scans (one for a typical SOF0 file, several for SOF2 or a multi-scan
+    SOF0) accumulate per-block zigzag coefficients; DQT/DHT/DRI may come
+    between scans. Returns ``(frame, coefs)``: ``coefs[ci]`` is the int
+    (bh, bw, 64) array of quantized coefficients on component ci's
+    MCU-padded block grid and ``frame["comps"][ci]["q"]`` its quant table.
+    Out-of-scope frames (SOF1/3/5–15, 12-bit) raise NotImplementedError;
+    malformed streams raise ValueError."""
     import struct
     import numpy as np
 
     qt: dict[int, list] = {}
     huff: dict[tuple, dict] = {}   # (class 0=DC/1=AC, id) -> {(len,code): sym}
     frame = None
+    coefs = None                   # allocated at the first scan
     restart_interval = 0
     pos = 2
-    while pos + 4 <= len(raw):
+    while pos + 2 <= len(raw):
         if raw[pos] != 0xFF:
             raise ValueError(f"JPEG marker expected at {pos}")
         marker = raw[pos + 1]
         if marker == 0xFF:
             pos += 1
             continue
+        if marker == 0xD9:  # EOI
+            if coefs is None:
+                raise ValueError("unexpected EOI before JPEG scan data")
+            break
         # Length-less markers (T.81 B.1.1.4): TEM, RSTn, and a stray SOI
         # are standalone — reading a seglen after them would swallow
-        # arbitrary header bytes. A premature EOI means no scan data.
-        if marker == 0xD9:
-            raise ValueError("unexpected EOI before JPEG scan data")
+        # arbitrary header bytes.
         if marker in (0x01, 0xD8) or 0xD0 <= marker <= 0xD7:
             pos += 2
             continue
+        if pos + 4 > len(raw):
+            raise ValueError("truncated JPEG segment")
         seglen = struct.unpack_from(">H", raw, pos + 2)[0]
         seg = raw[pos + 4:pos + 2 + seglen]
         if len(seg) < seglen - 2:
@@ -521,106 +550,159 @@ def _decode_jpeg(raw: bytes) -> dict:
         elif marker == 0xC4:  # DHT
             _parse_dht(seg, huff)
         elif marker in (0xC0, 0xC2):  # SOF0 / SOF2
-            _prec, h, w, ncomp = struct.unpack_from(">BHHB", seg, 0)
-            if _prec != 8:
-                raise NotImplementedError(f"{_prec}-bit JPEG not supported")
-            comps = []
-            for c in range(ncomp):
-                cid, hv, tq = seg[6 + 3 * c:9 + 3 * c]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F,
-                              "tq": tq})
-            frame = {"w": w, "h": h, "comps": comps,
-                     "progressive": marker == 0xC2}
+            if coefs is not None:
+                raise ValueError("JPEG frame header after scan data")
+            frame = _parse_sof(seg, progressive=marker == 0xC2)
         elif marker == 0xDD:  # DRI
             restart_interval = struct.unpack_from(">H", seg, 0)[0]
         elif marker == 0xDA:  # SOS — entropy data follows
-            if frame is not None and frame["progressive"]:
-                # Progressive: multiple scans, DHT/DQT/DRI may interleave;
-                # hand the whole tail (from this SOS marker) to the
-                # multi-scan accumulator.
-                return _decode_jpeg_progressive(
-                    raw, pos, qt, huff, frame, restart_interval)
-            ns = seg[0]
-            for c in range(ns):
-                cs, tds = seg[1 + 2 * c], seg[2 + 2 * c]
-                for comp in frame["comps"]:
-                    if comp["id"] == cs:
-                        comp["td"], comp["ta"] = tds >> 4, tds & 0x0F
-            pos = pos + 2 + seglen
-            break
+            if frame is None:
+                raise ValueError("JPEG SOS before the frame header")
+            if coefs is None:
+                coefs = [[[0] * 64 for _ in range(c["bh"] * c["bw"])]
+                         for c in frame["comps"]]
+            pos = _decode_scan(raw, pos + 2 + seglen, seg, frame, coefs,
+                               huff, restart_interval)
+            continue
         pos += 2 + seglen
-    else:
+    if coefs is None:
         raise ValueError("JPEG SOS marker not found")
-    if frame is None:
-        raise ValueError("JPEG SOF0 frame header not found")
+    out = []
+    for c, blocks in zip(frame["comps"], coefs):
+        if c["tq"] not in qt:
+            raise ValueError(f"JPEG missing quant table {c['tq']}")
+        c["q"] = qt[c["tq"]]
+        out.append(np.array(blocks, dtype=np.int64)
+                   .reshape(c["bh"], c["bw"], 64))
+    return frame, out
 
-    comps = frame["comps"]
-    w, h = frame["w"], frame["h"]
+
+def _parse_sof(seg: bytes, progressive: bool) -> dict:
+    """SOF0/SOF2 segment → frame dict with each component's block grids:
+    ``bw``/``bh`` is the MCU-padded grid interleaved scans fill, ``nbw``/
+    ``nbh`` the natural grid (ceil(comp_dim / 8)) a single-component scan
+    walks, smaller when another component samples higher (B.2.3)."""
+    import struct
+    prec, h, w, ncomp = struct.unpack_from(">BHHB", seg, 0)
+    if prec != 8:
+        raise NotImplementedError(f"{prec}-bit JPEG not supported")
+    comps = []
+    for c in range(ncomp):
+        cid, hv, tq = seg[6 + 3 * c:9 + 3 * c]
+        comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
     mcus_x = -(-w // (8 * hmax))
     mcus_y = -(-h // (8 * vmax))
-    m = _idct_basis()
-    planes = [np.zeros((mcus_y * c["v"] * 8, mcus_x * c["h"] * 8))
-              for c in comps]
     for c in comps:
-        if c["tq"] not in qt:
-            raise ValueError(f"JPEG missing quant table {c['tq']}")
-    deq = [np.array(qt[c["tq"]], dtype=float) for c in comps]
+        c["bw"], c["bh"] = mcus_x * c["h"], mcus_y * c["v"]
+        cw, ch = -(-w * c["h"] // hmax), -(-h * c["v"] // vmax)
+        c["nbw"], c["nbh"] = -(-cw // 8), -(-ch // 8)
+    return {"w": w, "h": h, "comps": comps, "mcus_x": mcus_x,
+            "mcus_y": mcus_y, "progressive": progressive}
+
+
+def _decode_scan(raw: bytes, pos: int, sos: bytes, frame: dict,
+                 coefs: list, huff: dict, restart_interval: int) -> int:
+    """One scan's entropy-coded data (from ``pos``) into ``coefs``;
+    returns the position of the marker that ends it.
+
+    A sequential (SOF0) scan codes the DC term and the whole 1..63 band of
+    each block; its Ss/Se/Ah/Al are not read. A progressive (SOF2) scan is
+    DC first / refine (Ss=Se=0) or AC first / refine over Ss..Se of one
+    component (Annex G). Interleaved scans walk MCUs; a one-component
+    scan walks that component's natural block grid, one block per MCU.
+    Every ``restart_interval`` MCUs an RSTn resets the DC predictors and
+    the EOB run."""
+    comps = frame["comps"]
+    progressive = frame["progressive"]
+    ns = sos[0]
+    tables = []  # (component index, component, DC table, AC table)
+    for i in range(ns):
+        cs, tds = sos[1 + 2 * i], sos[2 + 2 * i]
+        tables += [(ci, c, huff.get((0, tds >> 4)), huff.get((1, tds & 0x0F)))
+                   for ci, c in enumerate(comps) if c["id"] == cs]
+    if not tables:
+        raise ValueError("JPEG scan names no frame component")
+    if progressive:
+        ss, se, ahal = sos[1 + 2 * ns:4 + 2 * ns]
+        ah, al = ahal >> 4, ahal & 0x0F
+        if ss == 0 and se != 0:
+            raise ValueError("JPEG DC scan with Se != 0")
+        if ss > se or se > 63:
+            raise ValueError("JPEG spectral selection out of range")
+        if ss and len(tables) != 1:
+            raise ValueError("interleaved progressive AC scan")
+    else:
+        ss, se, ah, al = 0, 63, 0, 0
+    for _, _, dct, act in tables:
+        if dct is None and ss == 0 and not ah or act is None and se:
+            raise ValueError("JPEG missing Huffman table")
+
+    if len(tables) > 1:  # interleaved: MCU order (A.2.3)
+        mcus = ([(ci, dct, act,
+                  coefs[ci][(my * c["v"] + by) * c["bw"] + mx * c["h"] + bx])
+                 for ci, c, dct, act in tables
+                 for by in range(c["v"]) for bx in range(c["h"])]
+                for my in range(frame["mcus_y"])
+                for mx in range(frame["mcus_x"]))
+    else:               # one component: natural block order (A.2.2)
+        ci, c, dct, act = tables[0]
+        mcus = ([(ci, dct, act, coefs[ci][by * c["bw"] + bx])]
+                for by in range(c["nbh"]) for bx in range(c["nbw"]))
 
     reader = _BitReader(raw, pos)
     pred = [0] * len(comps)
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and \
-                    mcu_count % restart_interval == 0:
-                reader.restart()
-                pred = [0] * len(comps)
-            for ci, c in enumerate(comps):
-                dc_tab = huff.get((0, c.get("td", 0)))
-                ac_tab = huff.get((1, c.get("ta", 0)))
-                if dc_tab is None or ac_tab is None:
-                    raise ValueError("JPEG missing Huffman table")
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        zz = np.zeros(64)
-                        s = _huff_decode(reader, dc_tab)
-                        diff = _extend(reader.read(s), s) if s else 0
-                        pred[ci] += diff
-                        zz[0] = pred[ci]
-                        k = 1
-                        nz = 0
-                        while k < 64:
-                            rs = _huff_decode(reader, ac_tab)
-                            r, s = rs >> 4, rs & 0x0F
-                            if s == 0:
-                                if r == 15:  # ZRL
-                                    k += 16
-                                    continue
-                                break        # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("JPEG AC index overflow")
-                            zz[k] = _extend(reader.read(s), s)
-                            nz += 1
-                            k += 1
-                        y0 = (my * c["v"] + by) * 8
-                        x0 = (mx * c["h"] + bx) * 8
-                        if nz == 0:
-                            # DC-only block: the IDCT of a lone DC term is
-                            # a constant fill — skip both matmuls. Real
-                            # photos hit this on flat regions constantly.
-                            planes[ci][y0:y0 + 8, x0:x0 + 8] = (
-                                pred[ci] * deq[ci][0] / 8 + 128)
-                            continue
-                        blk = np.zeros(64)
-                        blk[_ZIGZAG] = zz * deq[ci]
-                        spatial = m.T @ blk.reshape(8, 8) @ m + 128
-                        planes[ci][y0:y0 + 8, x0:x0 + 8] = spatial
-            mcu_count += 1
+    eobrun = 0
+    for n, mcu in enumerate(mcus):
+        if restart_interval and n and n % restart_interval == 0:
+            reader.restart()
+            pred = [0] * len(comps)
+            eobrun = 0
+        for ci, dct, act, blk in mcu:
+            if ss == 0:
+                if not ah:  # DC first (or sequential): diffs of dc >> al
+                    s = _huff_decode(reader, dct)
+                    if s:
+                        pred[ci] += _extend(reader.read(s), s)
+                    blk[0] = pred[ci] << al
+                elif reader.read(1):  # DC refinement: one raw bit
+                    blk[0] |= 1 << al
+            if not se:
+                continue
+            if ah:
+                eobrun = _refine_ac_block(reader, act, blk, ss, se, al,
+                                          eobrun)
+            elif eobrun:
+                eobrun -= 1
+            else:
+                eobrun = _decode_ac_band(reader, act, blk, ss or 1, se, al,
+                                         progressive)
+    return reader.marker_at()
 
-    return _jpeg_finish(frame, planes)
+
+def _decode_ac_band(reader: "_BitReader", ac_tab: dict, blk: list,
+                    ss: int, se: int, al: int, runs: bool) -> int:
+    """Huffman-decode coefficients ss..se of one block into ``blk``
+    (zigzag order, scaled by 2**al); returns the EOB run that follows the
+    block. With ``runs`` (progressive, G.1.2.2) an EOBn symbol starts a
+    run of 2**n + extra-bit blocks; in a sequential scan any EOB symbol
+    just ends the block."""
+    k = ss
+    while k <= se:
+        rs = _huff_decode(reader, ac_tab)
+        r, s = rs >> 4, rs & 0x0F
+        if s == 0:
+            if r == 15:  # ZRL
+                k += 16
+                continue
+            return (1 << r) - 1 + reader.read(r) if runs and r else 0
+        k += r
+        if k > se:
+            raise ValueError("JPEG AC index overflow")
+        blk[k] = _extend(reader.read(s), s) << al
+        k += 1
+    return 0
 
 
 def _jpeg_finish(frame: dict, planes: list) -> dict:
@@ -700,202 +782,6 @@ def _refine_ac_block(reader: "_BitReader", ac_tab: dict, blk: list,
             k += 1
         eobrun -= 1
     return eobrun
-
-
-def _decode_jpeg_progressive(raw: bytes, pos: int, qt: dict, huff: dict,
-                             frame: dict, restart_interval: int) -> dict:
-    """Progressive JPEG (T.81 SOF2, Annex G): spectral-selection +
-    successive-approximation scans accumulate per-block zigzag
-    coefficients; one batched dequant + IDCT at EOI, then the shared
-    upsample/color tail. ``pos`` points at the 0xFF of the first SOS
-    marker; DHT/DQT/DRI segments between scans are honored, RSTn resets
-    DC predictors and the EOB run.
-
-    Coverage note: real-crawl JPEGs are majority-progressive (the r4
-    verdict's top gap); this path removes the ``NotImplementedError``
-    degrade for them."""
-    import struct
-    import numpy as np
-
-    comps = frame["comps"]
-    w, h = frame["w"], frame["h"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    for c in comps:
-        c["bw"] = mcus_x * c["h"]   # MCU-padded block grid
-        c["bh"] = mcus_y * c["v"]
-        # Non-interleaved scans traverse the component's NATURAL block
-        # grid (ceil(comp_dim / 8)), which can be smaller than the padded
-        # grid when another component has higher sampling (B.2.3).
-        comp_w = -(-(w * c["h"]) // hmax)
-        comp_h = -(-(h * c["v"]) // vmax)
-        c["nbw"] = -(-comp_w // 8)
-        c["nbh"] = -(-comp_h // 8)
-    coefs = [[[0] * 64 for _ in range(c["bh"] * c["bw"])] for c in comps]
-
-    def _scan_end(reader: "_BitReader") -> int:
-        """Position of the next real marker after a scan's entropy data."""
-        if reader.marker is not None:
-            return reader.pos  # raw[pos:pos+2] == FF <marker>
-        p = reader.pos
-        while p + 1 < len(raw):
-            if raw[p] == 0xFF and raw[p + 1] not in (0x00, 0xFF):
-                return p
-            p += 1
-        return len(raw)
-
-    def _decode_scan(pos: int, scomps: list, ss: int, se: int,
-                     ah: int, al: int) -> int:
-        reader = _BitReader(raw, pos)
-        pred = [0] * len(comps)
-        eobrun = 0
-        if ss == 0:
-            if se != 0:
-                raise ValueError("JPEG DC scan with Se != 0")
-            dc_tabs = {}
-            for ci in scomps:
-                if ah == 0:
-                    dc_tabs[ci] = huff.get((0, comps[ci].get("td", 0)))
-                    if dc_tabs[ci] is None:
-                        raise ValueError("JPEG missing DC Huffman table")
-
-            def dc_unit(ci: int, bi: int) -> None:
-                blk = coefs[ci][bi]
-                if ah == 0:  # first DC scan: diffs of (dc >> al)
-                    s = _huff_decode(reader, dc_tabs[ci])
-                    diff = _extend(reader.read(s), s) if s else 0
-                    pred[ci] += diff
-                    blk[0] = pred[ci] << al
-                elif reader.read(1):  # refinement: one raw bit
-                    blk[0] |= 1 << al
-
-            if len(scomps) > 1:
-                # Interleaved DC scan: MCU traversal (baseline order).
-                n = 0
-                for my in range(mcus_y):
-                    for mx in range(mcus_x):
-                        if restart_interval and n and \
-                                n % restart_interval == 0:
-                            reader.restart()
-                            pred = [0] * len(comps)
-                        for ci in scomps:
-                            c = comps[ci]
-                            for by in range(c["v"]):
-                                for bx in range(c["h"]):
-                                    bi = ((my * c["v"] + by) * c["bw"]
-                                          + mx * c["h"] + bx)
-                                    dc_unit(ci, bi)
-                        n += 1
-            else:
-                ci = scomps[0]
-                c = comps[ci]
-                n = 0
-                for by in range(c["nbh"]):
-                    for bx in range(c["nbw"]):
-                        if restart_interval and n and \
-                                n % restart_interval == 0:
-                            reader.restart()
-                            pred = [0] * len(comps)
-                        dc_unit(ci, by * c["bw"] + bx)
-                        n += 1
-        else:
-            # AC scans are always single-component, natural grid order.
-            if len(scomps) != 1:
-                raise ValueError("interleaved progressive AC scan")
-            ci = scomps[0]
-            c = comps[ci]
-            ac_tab = huff.get((1, c.get("ta", 0)))
-            if ac_tab is None:
-                raise ValueError("JPEG missing AC Huffman table")
-            n = 0
-            for by in range(c["nbh"]):
-                for bx in range(c["nbw"]):
-                    if restart_interval and n and \
-                            n % restart_interval == 0:
-                        reader.restart()
-                        eobrun = 0
-                    blk = coefs[ci][by * c["bw"] + bx]
-                    if ah:
-                        eobrun = _refine_ac_block(
-                            reader, ac_tab, blk, ss, se, al, eobrun)
-                    elif eobrun > 0:
-                        eobrun -= 1
-                    else:
-                        k = ss
-                        while k <= se:
-                            rs = _huff_decode(reader, ac_tab)
-                            r, s = rs >> 4, rs & 0x0F
-                            if s == 0:
-                                if r == 15:  # ZRL
-                                    k += 16
-                                    continue
-                                eobrun = (1 << r) - 1
-                                if r:
-                                    eobrun += reader.read(r)
-                                break
-                            k += r
-                            if k > se:
-                                raise ValueError("JPEG AC index overflow")
-                            blk[k] = _extend(reader.read(s), s) << al
-                            k += 1
-                    n += 1
-        return _scan_end(reader)
-
-    # Segment loop over the tail: SOS scans with DHT/DQT/DRI between them.
-    while pos + 2 <= len(raw):
-        if raw[pos] != 0xFF:
-            raise ValueError(f"JPEG marker expected at {pos}")
-        marker = raw[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        if marker in (0x01, 0xD8) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        seglen = struct.unpack_from(">H", raw, pos + 2)[0]
-        seg = raw[pos + 4:pos + 2 + seglen]
-        if len(seg) < seglen - 2:
-            raise ValueError("truncated JPEG segment")
-        if marker == 0xC4:
-            _parse_dht(seg, huff)
-        elif marker == 0xDB:
-            _parse_dqt(seg, qt)
-        elif marker == 0xDD:
-            restart_interval = struct.unpack_from(">H", seg, 0)[0]
-        elif marker == 0xDA:
-            ns = seg[0]
-            scomps = []
-            for i in range(ns):
-                cs, tds = seg[1 + 2 * i], seg[2 + 2 * i]
-                for ci, comp in enumerate(comps):
-                    if comp["id"] == cs:
-                        comp["td"], comp["ta"] = tds >> 4, tds & 0x0F
-                        scomps.append(ci)
-            ss, se, ahal = seg[1 + 2 * ns], seg[2 + 2 * ns], seg[3 + 2 * ns]
-            pos = _decode_scan(pos + 2 + seglen, scomps, ss, se,
-                               ahal >> 4, ahal & 0x0F)
-            continue
-        pos += 2 + seglen
-
-    # One batched dequant + IDCT per component over every block.
-    m = _idct_basis()
-    zz = np.array(_ZIGZAG)
-    planes = []
-    for ci, c in enumerate(comps):
-        if c["tq"] not in qt:
-            raise ValueError(f"JPEG missing quant table {c['tq']}")
-        deq = np.array(qt[c["tq"]], dtype=float)
-        bh, bw = c["bh"], c["bw"]
-        arr = np.array(coefs[ci], dtype=float).reshape(bh, bw, 64) * deq
-        blk = np.zeros((bh, bw, 64))
-        blk[:, :, zz] = arr  # de-zigzag
-        tiles = m.T @ blk.reshape(bh, bw, 8, 8) @ m + 128
-        planes.append(tiles.transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8))
-    return _jpeg_finish(frame, planes)
 
 
 class _BitWriter:
@@ -1671,7 +1557,7 @@ def decode_wav(payload: bytes) -> dict:
     peak/RMS amplitude of the first channel (16-bit or 8-bit PCM). The
     audio analog of the BMP/PNG branches: a genuinely decodable format so
     the media path has a non-fake audio test; compressed formats (mp3/
-    aac/ogg) still need ffmpeg and stay stubbed.
+    aac/ogg) need ffmpeg and are not decoded here.
 
     Sample math is array-native (``np.frombuffer`` + vectorized peak /
     int64 dot-product RMS — VERDICT r4 "What's wrong" #2 replaced the
@@ -1722,19 +1608,12 @@ def encode_wav(samples: list, sample_rate: int = 16000) -> bytes:
     return buf.getvalue()
 
 
-def sample_video_frames(payload: bytes, every_ms: int = 1000) -> "object":
-    """Real frame sampling — STUB: ffmpeg is not in this container."""
-    raise NotImplementedError(
-        "real frame sampling requires ffmpeg (not in this sandbox)")
-
-
 # -- header-only media metadata tier (MP3 / MP4 / WAV) ------------------------
 # The 100 TB triage pass real pipelines run FIRST: duration / bitrate /
 # dims / sample rate from container headers alone, no decode — pure
-# stdlib struct walking, so the ffmpeg-class formats whose decode stays
-# stubbed (sample_video_frames, compressed audio) still yield the
-# metadata a corpus-stats or shard-planning stage needs (VERDICT r4 task
-# 8: the honest shrink of the ffmpeg stub surface).
+# stdlib struct walking, so the ffmpeg-class formats that are not decoded
+# (video, compressed audio) still yield the metadata a corpus-stats or
+# shard-planning stage needs.
 
 # MPEG-1 Layer III bitrate table (kbps), index 1..14 (0=free, 15=bad).
 _MP3_BITRATES = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224,
@@ -2125,8 +2004,8 @@ def media_meta_features(media: DataFrame) -> DataFrame:
     moov/mvhd/tkhd box walk, WAV fmt/data headers — duration / bitrate /
     sample rate / dims WITHOUT decoding any audio or video essence. This
     is the first pass a 100 TB media pipeline runs (triage + shard
-    planning) and it covers exactly the formats whose full decode stays
-    honestly stubbed (ffmpeg-class). Same never-fail contract and plan
+    planning) and it covers exactly the formats that are not decoded here
+    (ffmpeg-class). Same never-fail contract and plan
     shape as :func:`decode_media_features`: payload bytes never enter an
     Exchange."""
     return media.select("media_id", "payload").mapInArrow(

@@ -96,8 +96,7 @@ class FlatDOM:
     and ``ids_of(tag)`` is the one tag index; consumers read these two.
     """
 
-    __slots__ = ("tags", "parent", "depth", "attrs", "texts",
-                 "_children", "_tag_index")
+    __slots__ = ("tags", "parent", "depth", "attrs", "texts", "_tag_index")
 
     def __init__(self) -> None:
         self.tags: list[str] = ["#root"]
@@ -105,7 +104,6 @@ class FlatDOM:
         self.depth: list[int] = [0]
         self.attrs: list[Optional[dict]] = [None]
         self.texts: list[Optional[str]] = [None]
-        self._children: Optional[list[list[int]]] = None
         self._tag_index: Optional[dict] = None
 
     # -- structure ---------------------------------------------------------
@@ -139,13 +137,11 @@ class FlatDOM:
         return ti.get(tag, ())
 
     def children(self, i: int) -> list[int]:
-        if self._children is None:
-            ch: list[list[int]] = [[] for _ in range(len(self.tags))]
-            for node, par in enumerate(self.parent):
-                if par >= 0:
-                    ch[par].append(node)
-            self._children = ch
-        return self._children[i]
+        """Direct children of i, doc order: the nodes of i's span one
+        level below it."""
+        depth = self.depth
+        d = depth[i] + 1
+        return [j for j in range(i + 1, self.end(i)) if depth[j] == d]
 
     # -- convenience accessors (used by rules, not hot loops) --------------
     def attrs_of(self, i: int) -> Optional[dict]:

@@ -14,12 +14,12 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Any, Callable, Optional
+from typing import Callable, Optional
 
 from ..htmlkit.tokenizer import FlatDOM, tokenize
 from ..htmlkit import selectors as S
 from ..extract import carriers as C
-from ..extract.jsonpath import get_from_json as gj, walk_first
+from ..extract.jsonpath import get_from_json as gj
 from ..extract import fields as F
 
 __all__ = ["extract_page", "EXTRACTORS"]

@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    DoubleType, IntegerType, LongType, StringType, StructField, StructType,
+    DoubleType, IntegerType, LongType, StructField, StructType,
     TimestampType,
 )
 

@@ -338,14 +338,69 @@ def test_jpeg_sof2_with_baseline_scan_raises_valueerror():
         mediaops.decode_image(bytes(enc))
 
 
+def test_jpeg_sof0_one_scan_per_component():
+    """A SOF0 frame may code each component in its own non-interleaved
+    scan (T.81 A.2.2). Three grayscale encode_jpeg streams — a Y gradient
+    and flat 128 for Cb and Cr — become one 3-component frame with one SOS
+    per component; YCbCr with Cb = Cr = 128 is gray, so every channel must
+    equal the Y stream's own decode."""
+    import numpy as np
+    ys = [[(x * 7 + y * 3) % 256 for x in range(20)] for y in range(13)]
+    flat = [[128] * 20 for _ in range(13)]
+    streams = [mediaops.encode_jpeg(p, quality=90) for p in (ys, flat, flat)]
+    y = streams[0]
+    frame = (b"\xff\xc0" + struct.pack(">HBHHB", 17, 8, 13, 20, 3)
+             + bytes((1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0)))
+    out = y[:y.index(b"\xff\xc0")] + frame  # SOI, APP0, DQT, 3-comp SOF0
+    out += y[y.index(b"\xff\xc4"):y.index(b"\xff\xda")]  # DHT
+    for cid, s in enumerate(streams, 1):
+        at = s.index(b"\xff\xda")
+        entropy = s[at + 2 + struct.unpack_from(">H", s, at + 2)[0]:-2]
+        out += (b"\xff\xda" + struct.pack(">HB", 8, 1)
+                + bytes((cid, 0x00, 0, 63, 0)) + entropy)
+    out += b"\xff\xd9"
+    d = mediaops._decode_image_array(out)
+    assert (d["width"], d["height"], d["mode"]) == (20, 13, "RGB")
+    ref = mediaops._decode_image_array(y)["array"]
+    for ch in range(3):
+        assert np.array_equal(d["array"][..., ch], ref)
+
+
 # ---------------------------------------------------------------------------
 # Progressive JPEG (SOF2): spectral selection + successive approximation.
 # encode_jpeg_progressive shares _jpeg_precompute with the baseline
-# encoder, so both encodings carry IDENTICAL quantized coefficients — the
-# progressive decode must therefore be bit-identical to the baseline
-# decode, which pins every scan type (DC first/refine, AC first at two
-# shift levels, AC refinement chains, EOB runs, ZRL) against the already-
-# trusted sequential path.
+# encoder, so both encodings carry IDENTICAL quantized coefficients: the
+# entropy half of the decoder must return exactly those coefficients for
+# both (which pins every scan type — DC first/refine, AC first at two
+# shift levels, AC refinement chains, EOB runs, ZRL — against the
+# encoder), and the two decodes must be bit-identical.
+
+
+@pytest.mark.parametrize("w,h", [(37, 21), (16, 16), (9, 30)])
+@pytest.mark.parametrize("subsample", [(1, 1), (2, 2)])
+@pytest.mark.parametrize("quality", [75, 95])
+@pytest.mark.parametrize("pattern", ["gradient", "noise", "gray"])
+def test_jpeg_coefficients_equal_the_encoders(w, h, subsample, quality,
+                                              pattern):
+    import numpy as np
+    if pattern == "gradient":
+        px = _jpeg_gradient(w, h)
+    elif pattern == "gray":
+        px = [[(x * 11 + y * 5) % 256 for x in range(w)] for y in range(h)]
+    else:
+        px = [[tuple(int(v) for v in c) for c in row] for row in
+              np.random.RandomState(w * h).randint(0, 256, (h, w, 3))]
+    pre = mediaops._jpeg_precompute(px, quality, subsample)
+    want = [pre["ycoefs"], *(pre["ccoefs"] or ())]
+    for encode in (mediaops.encode_jpeg, mediaops.encode_jpeg_progressive):
+        frame, coefs = mediaops._jpeg_coefficients(
+            encode(px, quality=quality, subsample=subsample))
+        assert len(coefs) == len(want)
+        for c, got, ref in zip(frame["comps"], coefs, want):
+            # The natural grid: a non-interleaved progressive AC scan
+            # leaves the MCU padding beyond it at zero.
+            nbh, nbw = c["nbh"], c["nbw"]
+            assert np.array_equal(got[:nbh, :nbw], ref[:nbh, :nbw])
 
 
 def _assert_progressive_matches_baseline(pixels, quality, subsample):
@@ -416,6 +471,56 @@ def test_jpeg_progressive_resize_and_dimensions():
     assert mediaops.image_dimensions(out)["format"] == "jpeg"
     d = mediaops.decode_image(out)
     assert (d["width"], d["height"]) == (16, 8)
+
+
+def test_jpeg_batched_idct_matches_per_block_reference():
+    """The decoder's one batched dequant + IDCT equals a per-block loop
+    (dequantize, de-zigzag, ``m.T @ block @ m + 128``) over the same
+    coefficients, baseline and progressive, 4:2:0 and grayscale."""
+    import numpy as np
+    rng = np.random.RandomState(5)
+    noise = [[tuple(int(v) for v in c) for c in row]
+             for row in rng.randint(0, 256, (24, 24, 3))]
+    gray = [[(x * 3 + y * 5) % 256 for x in range(30)] for y in range(22)]
+    m = mediaops._idct_basis()
+    for enc in (mediaops.encode_jpeg(_jpeg_gradient(37, 21),
+                                     subsample=(2, 2)),
+                mediaops.encode_jpeg_progressive(noise, quality=75),
+                mediaops.encode_jpeg(gray, quality=90)):
+        frame, coefs = mediaops._jpeg_coefficients(enc)
+        planes = []
+        for c, coef in zip(frame["comps"], coefs):
+            plane = np.zeros((c["bh"] * 8, c["bw"] * 8))
+            for by in range(c["bh"]):
+                for bx in range(c["bw"]):
+                    blk = np.zeros(64)
+                    blk[mediaops._ZIGZAG] = coef[by, bx] * np.array(c["q"])
+                    plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = (
+                        m.T @ blk.reshape(8, 8) @ m + 128)
+            planes.append(plane)
+        assert np.array_equal(mediaops._jpeg_finish(frame, planes)["array"],
+                              mediaops._decode_image_array(enc)["array"])
+
+
+def test_jpeg_malformed_scans_raise_valueerror():
+    """Malformed scan headers are the module's ValueError: an SOS before
+    any frame header, and a progressive AC band past coefficient 63."""
+    enc = mediaops.encode_jpeg(_jpeg_gradient(16, 16))
+    sof = enc.index(b"\xff\xc0")
+    no_frame = enc[:sof] + enc[sof + 2 + struct.unpack_from(
+        ">H", enc, sof + 2)[0]:]
+    with pytest.raises(ValueError):
+        mediaops.decode_image(no_frame)
+    prog = bytearray(mediaops.encode_jpeg_progressive(
+        _jpeg_gradient(16, 16)))
+    at = 0
+    while True:  # the first AC scan: one component, Ss > 0
+        at = prog.index(b"\xff\xda", at + 1)
+        if prog[at + 4] == 1 and prog[at + 7] > 0:
+            break
+    prog[at + 8] = 70  # Se
+    with pytest.raises(ValueError):
+        mediaops.decode_image(bytes(prog))
 
 
 def test_jpeg_truncated_stream_raises_valueerror():

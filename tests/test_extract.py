@@ -10,7 +10,7 @@ from html_parser_spark.htmlkit.tokenizer import tokenize
 from html_parser_spark.extract import carriers as C
 from html_parser_spark.extract import fields as F
 from html_parser_spark.extract import boilerplate, pdfkit
-from html_parser_spark.extract.jsonpath import get_from_json, walk_first
+from html_parser_spark.extract.jsonpath import get_from_json
 
 from .oracle import oracle_text_and_scored
 
@@ -30,9 +30,6 @@ class TestJsonPath:
         assert get_from_json(self.OBJ, ["a", "b", "c"]) is None  # str on list
         assert get_from_json(self.OBJ, ["n", "x"]) is None
         assert get_from_json(None, ["a"]) is None
-
-    def test_walk_first(self):
-        assert walk_first(self.OBJ, [["a", "x"], ["a", "b", 0, "c"]]) == 1
 
 
 class TestCarriers:

@@ -214,8 +214,8 @@ def test_rcdata_and_stray_close_text_semantics():
         assert got == oracle_text_and_scored(html), html
 
 
-# -- FlatDOM layout: end(), ids_of(), node_text() and collect_scripts()
-# against brute-force definitions over the parent array ----------------------
+# -- FlatDOM layout: end(), children(), ids_of(), node_text() and
+# collect_scripts() against brute-force definitions over the parent array -
 
 # Token soup that reaches implied closes, voids, self-closed and unclosed
 # rawtext elements, which the other two strategies rarely emit.
@@ -232,7 +232,9 @@ def test_flatdom_layout_matches_brute_force(html):
     dom = tokenize(html)
     n = len(dom)
     last = list(range(n))  # last node whose parent chain reaches i
+    kids = [[] for _ in range(n)]  # children from the parent array
     for j in range(1, n):
+        kids[dom.parent[j]].append(j)
         p = dom.parent[j]
         while p >= 0:
             last[p] = max(last[p], j)
@@ -241,10 +243,11 @@ def test_flatdom_layout_matches_brute_force(html):
     def dfs_text(i):
         if dom.tags[i] == TEXT:
             return dom.texts[i] or ""
-        return "".join(dfs_text(c) for c in dom.children(i))
+        return "".join(dfs_text(c) for c in kids[i])
 
     for i in range(n):
         assert dom.end(i) == last[i] + 1, i
+        assert dom.children(i) == kids[i], i
         assert list(dom.iter_descendants(i)) == list(range(i + 1, last[i] + 1))
         assert dom.node_text(i) == dfs_text(i), i
     for t in set(dom.tags) | {"nosuchtag"}:

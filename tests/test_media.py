@@ -1,7 +1,7 @@
 """Multimodal plumbing tests: binary payload columns ride Arrow batches
-through a Pandas UDF. BMP/PNG/baseline-JPEG/GIF/PCM-WAV codecs and the
-resize are real (pure Python + numpy, see test_codecs.py); only video
-frame sampling remains stubbed (needs ffmpeg)."""
+through ``mapInArrow`` row kernels. BMP/PNG/JPEG/GIF/PCM-WAV codecs and
+the resize are real (pure Python + numpy, see test_codecs.py); other
+image formats are a typed ``NotImplementedError``."""
 
 from __future__ import annotations
 
@@ -43,9 +43,6 @@ def test_feature_extraction_matches_python(media):
 
 
 def test_real_decoders_are_clearly_stubbed():
-    # the one remaining honest stub: video frame sampling needs ffmpeg
-    with pytest.raises(NotImplementedError):
-        mediaops.sample_video_frames(b"\x00\x00\x00 ftypmp42")
     # unknown container magic is a typed refusal, never a silent decode
     with pytest.raises(NotImplementedError):
         mediaops.decode_image(b"RIFF....WEBPVP8 ")
