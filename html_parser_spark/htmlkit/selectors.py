@@ -39,7 +39,7 @@ _PART_RE = re.compile(r"\#([-\w]+)|\.([-\w]+)|\[([^\]]+)\]")
 
 
 class SimpleSelector:
-    __slots__ = ("tag", "id", "classes", "attrs")
+    __slots__ = ("tag", "id", "classes", "attrs", "needles")
 
     def __init__(self, tag: Optional[str], id_: Optional[str],
                  classes: tuple, attrs: tuple) -> None:
@@ -49,12 +49,23 @@ class SimpleSelector:
         self.attrs = attrs      # tuple[(name, value-or-None, op)]; op in
         #   {"=", "*="} — "*=" is substring containment, the CSS twin of
         #   XPath contains(@attr, v) (bestbuy/parse_bestbuy_detai.py:60-66).
+        # Strings a match's attr values must contain: without '&' a raw
+        # attr string parses to values that are substrings of it.
+        self.needles = tuple(
+            ([id_] if id_ is not None else []) + list(classes)
+            + [v for _n, v, _op in attrs if v is not None])
 
     def matches(self, dom: FlatDOM, i: int) -> bool:
         if self.tag is not None and dom.tags[i] != self.tag:
             return False
         if self.id is None and not self.classes and not self.attrs:
             return True
+        raw = dom.attrs[i]
+        if type(raw) is str and "&" not in raw:
+            # Reject on the unparsed attrs before paying for _parse_attrs.
+            for s in self.needles:
+                if s not in raw:
+                    return False
         a = dom.attrs_of(i)
         if self.id is not None:
             if not a or a.get("id") != self.id:

@@ -72,8 +72,7 @@ _TOKEN_RE = re.compile(
     | <\?(?P<pi>[^>]*)>?
     | </\s*(?P<close>[a-zA-Z][a-zA-Z0-9:_-]*)\s*[^>]*>
     | <(?P<open>[a-zA-Z][a-zA-Z0-9:_-]*)
-        (?P<attrs>(?:"[^"]*"|'[^']*'|[^>"'])*)
-      (?P<selfclose>/?)>
+        (?P<attrs>(?:"[^"]*"|'[^']*'|[^>"'])*)>
     """,
     re.DOTALL | re.VERBOSE,
 )
@@ -252,11 +251,13 @@ def tokenize(html: str) -> FlatDOM:
 
         # Branch on lastindex — one C call replaces up to five named
         # m.group() probes per token (groups: 1 comment, 2 cdata, 3 decl,
-        # 4 pi, 5 close; 8 = selfclose, which always participates for an
-        # open tag, so lastindex==8 <=> open).
+        # 4 pi, 5 close; 7 = attrs, which always participates for an open
+        # tag, so lastindex==7 <=> open). A trailing '/' lands in attrs and
+        # closes nothing: '<div/>' opens a div, as HTML5 has it for
+        # non-void elements.
         li = m.lastindex
-        if li == 8:
-            open_tag, raw_attrs, selfclose = m.group(6, 7, 8)
+        if li == 7:
+            open_tag, raw_attrs = m.group(6, 7)
             tag = open_tag if open_tag.islower() else open_tag.lower()
             if tag in _IMPLIED_TRIGGERS and len(stack) > 1:
                 # Implied closes (hot: fires on every p/div/li/…).
@@ -275,10 +276,10 @@ def tokenize(html: str) -> FlatDOM:
             texts_app(None)
             node = node_count
             node_count += 1
-            if not (selfclose or tag in VOID_ELEMENTS):
+            if tag not in VOID_ELEMENTS:
                 if tag in RAWTEXT_ELEMENTS:
                     # Raw text: skip to the matching close tag with str.find.
-                    idx = _find_ci(html, "</" + tag, pos)
+                    idx = _find_end_tag(html, tag, pos)
                     if idx == -1:
                         raw = html[pos:]
                         pos = n
@@ -338,11 +339,16 @@ def tokenize(html: str) -> FlatDOM:
     return dom
 
 
-def _find_ci(haystack: str, needle: str, start: int) -> int:
-    """Case-insensitive find without lowering the whole page repeatedly."""
-    idx = haystack.find(needle, start)
-    if idx != -1:
-        return idx
-    # Fallback: case-insensitive scan (rare: '</SCRIPT>' etc.)
-    m = re.compile(re.escape(needle), re.IGNORECASE).search(haystack, start)
-    return m.start() if m else -1
+def _find_end_tag(html: str, tag: str, start: int) -> int:
+    """Index of the first ``</tag`` at or after ``start``, the tag name
+    compared ASCII-case-insensitively (``</SCRIPT>``, ``</Style>``); -1 if
+    none. ``tag`` is lowercase. Most raw-text bodies hold no other ``</``,
+    so this is usually one ``str.find``."""
+    k = len(tag)
+    idx = html.find("</", start)
+    while idx != -1:
+        name = html[idx + 2:idx + 2 + k]
+        if name == tag or (name.isascii() and name.lower() == tag):
+            return idx
+        idx = html.find("</", idx + 2)
+    return -1

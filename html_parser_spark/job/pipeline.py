@@ -282,21 +282,25 @@ def write_snapshot(extracted: DataFrame, table_dir: str,
     """Append extracted rows + commit a snapshot manifest atomically.
 
     Parquet data lands under ``data/run_id=<id>/``; the manifest (row count,
-    per-profile lineage, parent snapshot) is written to a temp file and
+    per-profile lineage, parent snapshot, and the table schema under
+    ``schema`` as ``StructType.jsonValue()``) is written to a temp file and
     ``os.rename``-ed into ``_snapshots/`` — the rename is the commit point,
     so a crash mid-write never exposes a half snapshot (resume then simply
-    reprocesses the uncommitted run).
+    reprocesses the uncommitted run). The read-back is given
+    ``extracted.schema``, so it starts no parquet schema-inference job.
     """
     # Idempotent by run_id: a replayed batch (foreachBatch is
     # at-least-once — crash after the manifest rename but before the
     # streaming checkpoint records the batch) must NOT append a second
     # manifest for the same data dir, or committed_table double-counts.
-    for snap in committed_snapshots(table_dir):
+    parents = committed_snapshots(table_dir)
+    for snap in parents:
         if snap.get("run_id") == run_id:
             return snap
     data_dir = os.path.join(table_dir, "data", f"run_id={run_id}")
     extracted.write.mode("overwrite").parquet(data_dir)
     spark = extracted.sparkSession
+    schema = extracted.schema
     # One read-back aggregate feeds both the per-(profile, status) lineage
     # and the per-PARTITION lineage (north_rule): every parquet part file
     # that makes up the snapshot, with its row count — the Iceberg-manifest
@@ -304,7 +308,7 @@ def write_snapshot(extracted: DataFrame, table_dir: str,
     # partition that wrote it.
     by_key: Counter = Counter()
     by_file: Counter = Counter()
-    for r in (spark.read.parquet(data_dir)
+    for r in (spark.read.schema(schema).parquet(data_dir)
               .groupBy(F.input_file_name().alias("f"), "profile", "status")
               .count().collect()):
         by_key[r.profile, r.status] += r["count"]
@@ -315,7 +319,6 @@ def write_snapshot(extracted: DataFrame, table_dir: str,
     files = [{"file": f[f.index("data/run_id="):] if "data/run_id=" in f
               else f, "rows": c}
              for f, c in sorted(by_file.items())]
-    parents = committed_snapshots(table_dir)
     manifest = {
         "snapshot_id": len(parents) + 1,
         "run_id": run_id,
@@ -324,6 +327,7 @@ def write_snapshot(extracted: DataFrame, table_dir: str,
         "lineage": lineage,
         "files": files,
         "data_dir": f"data/run_id={run_id}",
+        "schema": schema.jsonValue(),
     }
     sdir = _snapshot_dir(table_dir)
     os.makedirs(sdir, exist_ok=True)
@@ -334,16 +338,38 @@ def write_snapshot(extracted: DataFrame, table_dir: str,
     return manifest
 
 
+def _merged_schema(snaps: list[dict]) -> StructType:
+    """Union of the manifests' ``schema`` keys: fields in first-seen
+    order; a column whose type differs between snapshots raises
+    ``ValueError`` (parquet ``mergeSchema`` fails on it too)."""
+    fields: dict = {}  # name -> (field, id of the snapshot it came from)
+    for snap in snaps:
+        for f in StructType.fromJson(snap["schema"]).fields:
+            seen, sid = fields.setdefault(f.name, (f, snap["snapshot_id"]))
+            if seen.dataType != f.dataType:
+                raise ValueError(
+                    f"column {f.name!r} is {seen.dataType.simpleString()} "
+                    f"in snapshot {sid} and {f.dataType.simpleString()} in "
+                    f"snapshot {snap['snapshot_id']}")
+    return StructType([f for f, _sid in fields.values()])
+
+
 def committed_table(spark: SparkSession, table_dir: str) -> Optional[DataFrame]:
+    """Every committed snapshot's rows, read with the schema merged from
+    the manifests, so planning the read opens no data file. A snapshot
+    that lacks a later-added column (e.g. ``elapsed_us``) reads as nulls
+    there.
+
+    If any manifest predates the ``schema`` key, the table is read with
+    parquet ``mergeSchema``, which opens every footer of every snapshot:
+    the only way to learn such a table's schema.
+    """
     snaps = committed_snapshots(table_dir)
     if not snaps:
         return None
     dirs = [os.path.join(table_dir, s["data_dir"]) for s in snaps]
-    # mergeSchema: snapshots written by older engine versions may lack
-    # later-added columns (e.g. elapsed_us); without the merge, Spark takes
-    # the schema from one sampled footer and a resumed job's metrics pass
-    # crashes on the missing column for old snapshots (schema evolution is
-    # the Iceberg-parity behavior here).
+    if all("schema" in s for s in snaps):
+        return spark.read.schema(_merged_schema(snaps)).parquet(*dirs)
     return spark.read.option("mergeSchema", "true").parquet(*dirs)
 
 

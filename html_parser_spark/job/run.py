@@ -19,7 +19,9 @@ Behavior per north_rule:
 - map-only extraction (no shuffle of page bytes) unless ``--host-salted``
   opts into the skew repartition,
 - writes the extracted table + snapshot manifest (atomic rename commit)
-  and a metrics side table.
+  and a metrics side table,
+- prints the commit, then one line with the write_snapshot and metrics
+  seconds and the number of Spark jobs the run started.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+import time
 import uuid
 
 
@@ -60,6 +63,9 @@ def main(argv=None) -> int:
         from html_parser_spark.job import pipeline as P
 
     spark = P.build_session(app="html-parser-extract", cores=args.cores)
+    sc = spark.sparkContext
+    group = f"html-parser-extract-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "html_parser_spark.job.run")
     try:
         if args.format == "iceberg":
             pages = spark.read.format("iceberg").load(args.input)
@@ -72,13 +78,21 @@ def main(argv=None) -> int:
             host_salted=args.host_salted,
         )
         run_id = args.run_id or uuid.uuid4().hex[:12]
+        t0 = time.perf_counter()
         manifest = P.write_snapshot(extracted, args.output, run_id)
+        t1 = time.perf_counter()
         metrics = P.metrics_from_extracted(
             P.committed_table(spark, args.output))
         metrics.write.mode("overwrite").parquet(
             os.path.join(args.output, "_metrics"))
+        t2 = time.perf_counter()
         print(f"committed snapshot {manifest['snapshot_id']} "
               f"run_id={run_id} rows={manifest['rows']}")
+        # Where the run's fixed cost went: write_snapshot includes the
+        # extraction itself (the write is what runs it).
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        print(f"write_snapshot_s={t1 - t0:.2f} metrics_s={t2 - t1:.2f} "
+              f"spark_jobs={jobs}")
         return 0
     finally:
         spark.stop()

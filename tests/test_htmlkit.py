@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from html_parser_spark.extract.carriers import collect_scripts
 from html_parser_spark.htmlkit.tokenizer import tokenize, TEXT
@@ -71,6 +71,17 @@ class TestTokenizer:
         dom = tokenize("<DIV><P>a</P></DIV>")
         assert "div" in dom.tags and "p" in dom.tags
 
+    def test_trailing_slash_closes_only_void_elements(self):
+        """'<div/>' opens a div (HTML5 ignores the slash on a non-void
+        element); '<br/>' and '<img src=a />' stay void."""
+        dom = tokenize("<div/>x")
+        assert dom.tags[1:] == ["div", TEXT]
+        assert dom.parent[2] == 1
+        dom = tokenize("<p><br/>a<img src=a />b</p>")
+        assert dom.tags[1:] == ["p", "br", TEXT, "img", TEXT]
+        assert [dom.parent[i] for i in range(2, 6)] == [1, 1, 1, 1]
+        assert dom.attrs_of(4) == {"src": "a"}
+
 
 class TestTextSpec:
     CASES = [
@@ -88,6 +99,12 @@ class TestTextSpec:
         "<noscript>gone</noscript><p>here</p>",
         "<p>a<p>b<p>c",
         "<div><span>in</span><span>line</span></div>",
+        # Raw-text end tags match ASCII-case-insensitively, even when a
+        # lowercase one comes later.
+        "<div><script>var a=1</SCRIPT><p>visible text</p>"
+        "<script>var b=2</script><p>after</p></div>",
+        "<head><title>one</TITLE></head><p>shown</p><title>two</title>",
+        "<style>p{}</Style><p>kept</p><style>q{}</style><p>end</p>",
     ]
 
     @pytest.mark.parametrize("html", CASES)
@@ -181,6 +198,80 @@ class TestSelectors:
         import pytest as _pytest
         with _pytest.raises(ValueError):
             S.xpath_to_css('//div[starts-with(@id, "x")]')
+
+
+# -- SimpleSelector.matches against parse-then-match ------------------------
+
+_WORDS = ["x", "y", "xy", "Deal", "a-b"]
+# Raw attr values: entity escapes (&#120; is 'x', &amp; is '&') must
+# still match after decoding.
+_VALUES = _WORDS + ["x y", "&#120;", "&#120;y z", "&amp;x", "Deal&#32;x", ""]
+
+
+def _reference_matches(sel, tag, attrs):
+    """The matching rule on a parsed attr dict, with no shortcut."""
+    if sel.tag is not None and tag != sel.tag:
+        return False
+    if sel.id is not None and attrs.get("id") != sel.id:
+        return False
+    have = (attrs.get("class") or "").split()
+    if any(c not in have for c in sel.classes):
+        return False
+    for name, val, op in sel.attrs:
+        if name not in attrs:
+            return False
+        if val is not None and not (val in attrs[name] if op == "*="
+                                    else attrs[name] == val):
+            return False
+    return True
+
+
+@st.composite
+def _element(draw):
+    attrs = []
+    for _ in range(draw(st.integers(0, 4))):
+        name = draw(st.sampled_from(["id", "ID", "class", "Class",
+                                     "data-k", "DATA-K", "href"]))
+        val = draw(st.sampled_from(_VALUES))
+        quote = draw(st.sampled_from(['"', "'", ""]))
+        if not quote and (not val or " " in val):
+            quote = '"'
+        attrs.append(f"{name}={quote}{val}{quote}")
+    if draw(st.booleans()):
+        attrs.append("checked")
+    tag = draw(st.sampled_from(["a", "div", "A"]))
+    return f"<{tag} {' '.join(attrs)}>t</{tag}>"
+
+
+@st.composite
+def _simple_selector(draw):
+    sel = draw(st.sampled_from(["", "a", "div", "*"]))
+    if draw(st.booleans()):
+        sel += "#" + draw(st.sampled_from(_WORDS))
+    for c in draw(st.lists(st.sampled_from(_WORDS), max_size=2)):
+        sel += "." + c
+    for _ in range(draw(st.integers(0, 2))):
+        name = draw(st.sampled_from(["id", "class", "data-k", "href"]))
+        op = draw(st.sampled_from(["", "=", "*="]))
+        sel += (f"[{name}]" if not op else
+                f'[{name}{op}"{draw(st.sampled_from(_VALUES[:-1]))}"]')
+    return sel or "*"
+
+
+@given(st.lists(_element(), min_size=1, max_size=4), _simple_selector())
+@example(['<a ID="&#120;">t</a>'], "#x")
+@example(["<div DATA-K='&#120;y z' class=&amp;x>t</div>"], 'div[data-k*="xy"]')
+@settings(max_examples=400, deadline=None)
+def test_simple_selector_matches_parse_then_match(elements, selector):
+    html = "".join(elements)
+    sel = S.compile_selector(selector).chains[0][-1][0]
+    parsed = tokenize(html)
+    for i in range(1, len(parsed)):
+        if parsed.tags[i] == TEXT:
+            continue
+        want = _reference_matches(sel, parsed.tags[i],
+                                  parsed.attrs_of(i) or {})
+        assert sel.matches(tokenize(html), i) == want, (html, selector, i)
 
 
 def test_chain_backtracks_over_descendant_steps():

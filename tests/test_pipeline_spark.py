@@ -5,8 +5,11 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import uuid
 
 import pytest
+from pyspark.sql.types import StringType, StructField, StructType
 
 from html_parser_spark.job import pipeline as P
 from html_parser_spark.sources import synth
@@ -181,6 +184,9 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
         capture_output=True, text=True, timeout=570, env=env,
         cwd=str(tmp_path))
     assert r.returncode == 0, (r.stdout[-1000:], r.stderr[-3000:])
+    cost = re.search(r"^write_snapshot_s=\d+\.\d\d metrics_s=\d+\.\d\d "
+                     r"spark_jobs=(\d+)$", r.stdout, re.M)
+    assert cost and int(cost.group(1)) > 0, r.stdout[-1000:]
 
     committed = P.committed_table(spark, out)
     assert committed is not None and committed.count() == 30
@@ -207,3 +213,76 @@ def test_snapshot_manifest_carries_per_partition_lineage(spark, tmp_path):
     for f in m["files"]:
         assert f["file"].startswith("data/run_id=r1"), f
         assert os.path.exists(os.path.join(table, f["file"])), f
+    assert StructType.fromJson(m["schema"]) == df.schema
+    assert ([(f.name, f.dataType) for f in written.schema.fields]
+            == [(f.name, f.dataType) for f in df.schema.fields])
+
+
+# -- the manifest schema: committed_table reads without inferring it ---------
+
+def _rows(spark, urls, schema=P.EXTRACT_SCHEMA, **values):
+    """A small extracted-shaped frame: one row per url, every other column
+    null unless given in ``values``."""
+    names = schema.fieldNames()
+    return spark.createDataFrame(
+        [tuple({"url": u, **values}.get(n) for n in names) for u in urls],
+        schema)
+
+
+def _jobs_started(spark, fn):
+    sc = spark.sparkContext
+    group = f"committed-table-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _drop_manifest_schema(table, snapshot_id):
+    path = os.path.join(table, "_snapshots", f"{snapshot_id:06d}.json")
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+
+
+def test_committed_table_plans_from_manifests_without_a_job(spark, tmp_path):
+    table = str(tmp_path / "tbl")
+    P.write_snapshot(_rows(spark, ["a", "b"], status="ok"), table, "r1")
+    P.write_snapshot(_rows(spark, ["c"], status="ok"), table, "r2")
+    df, jobs = _jobs_started(spark, lambda: P.committed_table(spark, table))
+    assert jobs == 0
+    assert df.schema == P.EXTRACT_SCHEMA
+    assert sorted(r.url for r in df.collect()) == ["a", "b", "c"]
+
+
+@pytest.mark.parametrize("legacy_first_manifest", [False, True])
+def test_committed_table_reads_snapshot_without_elapsed_us(
+        spark, tmp_path, legacy_first_manifest):
+    """An older snapshot lacks the later-added elapsed_us column; its rows
+    read back as null there. A first manifest written before manifests
+    carried ``schema`` sends the read down the mergeSchema path, which
+    must give the same rows."""
+    table = str(tmp_path / "tbl")
+    old = StructType(P.EXTRACT_SCHEMA.fields[:-1])
+    P.write_snapshot(_rows(spark, ["old1", "old2"], old), table, "r1")
+    P.write_snapshot(_rows(spark, ["new"], elapsed_us=42), table, "r2")
+    if legacy_first_manifest:
+        _drop_manifest_schema(table, 1)
+    got = {r.url: r.elapsed_us
+           for r in P.committed_table(spark, table).collect()}
+    assert got == {"old1": None, "old2": None, "new": 42}
+
+
+def test_committed_table_rejects_conflicting_column_types(spark, tmp_path):
+    table = str(tmp_path / "tbl")
+    P.write_snapshot(_rows(spark, ["a"], price=1.5), table, "r1")
+    as_text = StructType([
+        StructField("price", StringType()) if f.name == "price" else f
+        for f in P.EXTRACT_SCHEMA.fields])
+    P.write_snapshot(_rows(spark, ["b"], as_text, price="1.5"), table, "r2")
+    with pytest.raises(ValueError, match="'price'"):
+        P.committed_table(spark, table)
