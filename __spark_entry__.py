@@ -37,16 +37,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _n_pages(sf_dir: str) -> int:
-    """Pages-corpus size scaled to the sf dir (FIXTURES.md §1)."""
-    base = os.path.basename(sf_dir.rstrip("/"))
-    try:
-        sf = float(base.replace("sf", ""))
-    except ValueError:
-        sf = 0.01
-    return max(200, min(int(200000 * sf), 20000))
-
-
 # ---------------------------------------------------------------------------
 # entry
 # ---------------------------------------------------------------------------
@@ -1024,7 +1014,7 @@ for _kind, _pat, _repl in pii.PII_PATTERNS:
 
 
 def _lsh_bucket_expr(vec: str, n_bits: int = 8) -> str:
-    """DuckDB twin of vecops.lsh_bucket: hyperplane j (1-based) weights
+    """DuckDB twin of vecops._assign_buckets: hyperplane j (1-based) weights
     component i (0-based) by cos(i*j + j); bit set iff projection >= 0."""
     terms = []
     for j in range(1, n_bits + 1):
@@ -1066,7 +1056,7 @@ def oracle_sql() -> dict[str, str]:
             -- idx%50==48 → pdf payload (extracts ok), idx%50==49 → blocked
             -- page (no carrier matches → NULL profile, status no_rule), else
             -- profile round-robin. n_pages = 4 × documents rows at every sf
-            -- dir (clamped exactly like __spark_entry__._n_pages).
+            -- dir, clamped to [200, 20000] exactly like the Spark side.
             WITH n AS (SELECT GREATEST(200, LEAST(COUNT(*) * 4, 20000))
                            AS n_pages FROM documents),
             idx AS (SELECT UNNEST(range(0, n_pages)) AS i FROM n),

@@ -7,10 +7,11 @@ map-only plan — no shuffle of payload bytes). Two tiers run on it:
 - Real, dependency-free codecs (pure Python + numpy): uncompressed 24-bit
   BMP (``_decode_bmp``), 8-bit truecolor PNG with all five scanline
   filters (``_decode_png``, stdlib zlib), baseline sequential AND
-  progressive JPEG (``_decode_jpeg``: one marker loop and one scan decoder
+  progressive JPEG (``_decode_jpeg``: one marker walk and one scan decoder
   for SOF0 and SOF2 accumulate Huffman-coded coefficients, then one
   batched dequant + IDCT and chroma upsample; ``encode_jpeg`` /
-  ``encode_jpeg_progressive`` are the test inverses), GIF87a/89a
+  ``encode_jpeg_progressive`` are the test inverses, one header writer
+  and one scan encoder with a one-scan or a 10-scan script), GIF87a/89a
   (``_decode_gif``: LZW + palettes + interlace, with ``encode_gif`` as
   the inverse), bilinear/nearest ``resize_image`` over any of the four,
   PCM WAV audio (``decode_wav``, stdlib wave), header-only dimension
@@ -28,6 +29,7 @@ input row, so Spark can pipeline batches without buffering a partition.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 from pyspark.sql import DataFrame
@@ -70,6 +72,7 @@ def decode_image(payload: bytes) -> dict:
     """
     d = _decode_image_array(payload)
     arr = d.pop("array")
+    del d["format"]
     if d["mode"] == "L":
         d["pixels"] = arr.tolist()
     else:
@@ -81,17 +84,18 @@ def _decode_image_array(payload: bytes) -> dict:
     """Array-native decode: the four codecs all produce an int numpy array
     (h, w[, channels]) — the shape the hot kernels (feature stats, resize)
     consume directly, so pixel data never round-trips through nested
-    Python tuples on the Spark path. ``decode_image`` converts to the
-    public nested-list contract at the edge."""
+    Python tuples on the Spark path. ``format`` names the codec the magic
+    picked (``image_dimensions``' name for it). ``decode_image`` converts
+    to the public nested-list contract at the edge."""
     raw = bytes(payload)
     if raw[:2] == b"BM":
-        return _decode_bmp(raw)
+        return {**_decode_bmp(raw), "format": "bmp"}
     if raw[:8] == b"\x89PNG\r\n\x1a\n":
-        return _decode_png(raw)
+        return {**_decode_png(raw), "format": "png"}
     if raw[:2] == b"\xff\xd8":
-        return _decode_jpeg(raw)
+        return {**_decode_jpeg(raw), "format": "jpeg"}
     if raw[:6] in (b"GIF87a", b"GIF89a"):
-        return _decode_gif(raw)
+        return {**_decode_gif(raw), "format": "gif"}
     raise NotImplementedError(
         f"unrecognized image magic {raw[:8]!r} (BMP, PNG, JPEG and GIF "
         f"decode are real; other formats need PIL)")
@@ -251,13 +255,15 @@ def encode_png(pixels: list) -> bytes:
             + chunk(b"IEND", b""))
 
 
-# -- baseline JPEG (ITU-T T.81) ---------------------------------------------
-# Decode: baseline sequential DCT (SOF0), 8-bit, 1 or 3 components, any
-# sampling factors, restart intervals, 0xFF00 byte stuffing. Progressive
-# (SOF2) / arithmetic / 12-bit raise typed NotImplementedError. Encode is
-# the test inverse (4:4:4 or 4:2:0, Annex K tables), so round-trip parity
-# is provable without libjpeg in the sandbox. numpy only for the 8x8
-# DCT/IDCT matrix products (orthonormal basis, f = M^T F M exactly).
+# -- JPEG (ITU-T T.81) ------------------------------------------------------
+# Decode: baseline sequential (SOF0) and progressive (SOF2) DCT, 8-bit,
+# 1 or 3 components, any sampling factors, restart intervals, 0xFF00 byte
+# stuffing; other SOF types (hierarchical, arithmetic, lossless) and
+# 12-bit raise typed NotImplementedError. Encode is the test inverse
+# (4:4:4 or 4:2:0, Annex K tables; SOF0 or SOF2 through one header writer
+# and one scan encoder), so round-trip parity is provable without
+# libjpeg. numpy only for the 8x8 DCT/IDCT matrix products (orthonormal
+# basis, f = M^T F M exactly).
 
 _ZIGZAG = [
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -282,12 +288,12 @@ _QT_CHROMA = [
 ]
 
 # Annex K typical Huffman tables (K.3.3): (BITS[1..16], HUFFVAL).
-_DC_LUMA_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-_DC_LUMA_VALS = list(range(12))
-_DC_CHROMA_BITS = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
-_DC_CHROMA_VALS = list(range(12))
-_AC_LUMA_BITS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
-_AC_LUMA_VALS = [
+_DC_LUMA_BITS = (0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
+_DC_LUMA_VALS = tuple(range(12))
+_DC_CHROMA_BITS = (0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0)
+_DC_CHROMA_VALS = tuple(range(12))
+_AC_LUMA_BITS = (0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D)
+_AC_LUMA_VALS = (
     0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
     0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
     0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24,
@@ -303,9 +309,9 @@ _AC_LUMA_VALS = [
     0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1,
     0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
-_AC_CHROMA_BITS = [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]
-_AC_CHROMA_VALS = [
+)
+_AC_CHROMA_BITS = (0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77)
+_AC_CHROMA_VALS = (
     0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12,
     0x41, 0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14,
     0x42, 0x91, 0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15,
@@ -321,26 +327,13 @@ _AC_CHROMA_VALS = [
     0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9,
     0xDA, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2,
     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
+)
 
 
-_STD_CODE_TABLES: list = []
-
-
-def _std_code_tables() -> tuple:
-    """Canonical code maps for the four static Annex K tables, built once
-    (they were ~0.04 s per 2000-image batch rebuilt per encode call)."""
-    if not _STD_CODE_TABLES:
-        _STD_CODE_TABLES.append((
-            _canonical_codes(_DC_LUMA_BITS, _DC_LUMA_VALS),
-            _canonical_codes(_AC_LUMA_BITS, _AC_LUMA_VALS),
-            _canonical_codes(_DC_CHROMA_BITS, _DC_CHROMA_VALS),
-            _canonical_codes(_AC_CHROMA_BITS, _AC_CHROMA_VALS)))
-    return _STD_CODE_TABLES[0]
-
-
-def _canonical_codes(bits: list, vals: list) -> dict:
-    """T.81 Annex C canonical Huffman codes: {symbol: (code, length)}."""
+@functools.cache
+def _canonical_codes(bits: tuple, vals: tuple) -> dict:
+    """T.81 Annex C canonical Huffman codes: {symbol: (code, length)},
+    built once per table."""
     codes, code, k = {}, 0, 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
@@ -518,28 +511,13 @@ def _jpeg_coefficients(raw: bytes) -> tuple:
     restart_interval = 0
     pos = 2
     while pos + 2 <= len(raw):
-        if raw[pos] != 0xFF:
-            raise ValueError(f"JPEG marker expected at {pos}")
-        marker = raw[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
+        marker, seg, nxt = _jpeg_segment(raw, pos)
+        if marker is None:
+            break
         if marker == 0xD9:  # EOI
             if coefs is None:
                 raise ValueError("unexpected EOI before JPEG scan data")
             break
-        # Length-less markers (T.81 B.1.1.4): TEM, RSTn, and a stray SOI
-        # are standalone — reading a seglen after them would swallow
-        # arbitrary header bytes.
-        if marker in (0x01, 0xD8) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if pos + 4 > len(raw):
-            raise ValueError("truncated JPEG segment")
-        seglen = struct.unpack_from(">H", raw, pos + 2)[0]
-        seg = raw[pos + 4:pos + 2 + seglen]
-        if len(seg) < seglen - 2:
-            raise ValueError("truncated JPEG segment")
         if marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
                       0xCB, 0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
@@ -553,6 +531,10 @@ def _jpeg_coefficients(raw: bytes) -> tuple:
             if coefs is not None:
                 raise ValueError("JPEG frame header after scan data")
             frame = _parse_sof(seg, progressive=marker == 0xC2)
+            if frame["prec"] != 8:
+                raise NotImplementedError(
+                    f"{frame['prec']}-bit JPEG not supported")
+            _block_grids(frame)
         elif marker == 0xDD:  # DRI
             restart_interval = struct.unpack_from(">H", seg, 0)[0]
         elif marker == 0xDA:  # SOS — entropy data follows
@@ -561,10 +543,10 @@ def _jpeg_coefficients(raw: bytes) -> tuple:
             if coefs is None:
                 coefs = [[[0] * 64 for _ in range(c["bh"] * c["bw"])]
                          for c in frame["comps"]]
-            pos = _decode_scan(raw, pos + 2 + seglen, seg, frame, coefs,
-                               huff, restart_interval)
+            pos = _decode_scan(raw, nxt, seg, frame, coefs, huff,
+                               restart_interval)
             continue
-        pos += 2 + seglen
+        pos = nxt
     if coefs is None:
         raise ValueError("JPEG SOS marker not found")
     out = []
@@ -577,30 +559,84 @@ def _jpeg_coefficients(raw: bytes) -> tuple:
     return frame, out
 
 
-def _parse_sof(seg: bytes, progressive: bool) -> dict:
-    """SOF0/SOF2 segment → frame dict with each component's block grids:
-    ``bw``/``bh`` is the MCU-padded grid interleaved scans fill, ``nbw``/
-    ``nbh`` the natural grid (ceil(comp_dim / 8)) a single-component scan
-    walks, smaller when another component samples higher (B.2.3)."""
+def _jpeg_segment(raw: bytes, pos: int) -> tuple:
+    """The marker segment at ``pos`` as ``(marker, body, next_pos)``, the
+    one marker walk of the decoder and ``image_dimensions``. 0xFF fill
+    bytes before a marker are skipped (T.81 B.1.1.2); SOI, EOI, TEM and
+    RSTn stand alone with an empty body (B.1.1.4). ``marker`` is None when
+    the data ends first; a byte that starts no marker, or a segment cut
+    short, raises ValueError."""
     import struct
+    while pos + 1 < len(raw) and raw[pos] == raw[pos + 1] == 0xFF:
+        pos += 1
+    if pos + 2 > len(raw):
+        return None, b"", len(raw)
+    if raw[pos] != 0xFF:
+        raise ValueError(f"JPEG marker expected at {pos}")
+    marker = raw[pos + 1]
+    if marker in (0x01, 0xD8, 0xD9) or 0xD0 <= marker <= 0xD7:
+        return marker, b"", pos + 2
+    if pos + 4 > len(raw):
+        raise ValueError("truncated JPEG segment")
+    seglen = struct.unpack_from(">H", raw, pos + 2)[0]
+    body = raw[pos + 4:pos + 2 + seglen]
+    if len(body) < seglen - 2:
+        raise ValueError("truncated JPEG segment")
+    return marker, body, pos + 2 + seglen
+
+
+def _parse_sof(seg: bytes, progressive: bool = False) -> dict:
+    """SOFn segment (B.2.2) → frame dict: ``prec``, ``w``, ``h`` and each
+    component's ``id``, sampling ``h``/``v`` and quant table ``tq``. A
+    segment too short for its component count raises ValueError."""
+    import struct
+    if len(seg) < 6 or len(seg) < 6 + 3 * seg[5]:
+        raise ValueError("truncated JPEG frame header")
     prec, h, w, ncomp = struct.unpack_from(">BHHB", seg, 0)
-    if prec != 8:
-        raise NotImplementedError(f"{prec}-bit JPEG not supported")
-    comps = []
-    for c in range(ncomp):
-        cid, hv, tq = seg[6 + 3 * c:9 + 3 * c]
-        comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
+    comps = [{"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq}
+             for cid, hv, tq in (seg[6 + 3 * c:9 + 3 * c]
+                                 for c in range(ncomp))]
+    return {"prec": prec, "w": w, "h": h, "comps": comps,
+            "progressive": progressive}
+
+
+def _block_grids(frame: dict) -> dict:
+    """Adds each component's block grids to a parsed frame: ``bw``/``bh``
+    is the MCU-padded grid interleaved scans fill, ``nbw``/``nbh`` the
+    natural grid (ceil(comp_dim / 8)) a single-component scan walks,
+    smaller when another component samples higher (A.2). A frame without
+    components or with a zero sampling factor raises ValueError."""
+    comps = frame["comps"]
+    if not comps or not all(c["h"] and c["v"] for c in comps):
+        raise ValueError("JPEG frame without components or sampling")
+    w, h = frame["w"], frame["h"]
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
+    frame["mcus_x"] = mcus_x = -(-w // (8 * hmax))
+    frame["mcus_y"] = mcus_y = -(-h // (8 * vmax))
     for c in comps:
         c["bw"], c["bh"] = mcus_x * c["h"], mcus_y * c["v"]
         cw, ch = -(-w * c["h"] // hmax), -(-h * c["v"] // vmax)
         c["nbw"], c["nbh"] = -(-cw // 8), -(-ch // 8)
-    return {"w": w, "h": h, "comps": comps, "mcus_x": mcus_x,
-            "mcus_y": mcus_y, "progressive": progressive}
+    return frame
 
+
+def _scan_mcus(frame: dict, cis: list):
+    """The block walk of one scan over components ``cis``, shared by the
+    decoder and the encoder: per MCU, the (component index, block row,
+    block column) it covers. An interleaved scan walks MCUs over the
+    MCU-padded grids (A.2.3); a one-component scan walks that component's
+    natural grid, one block per MCU (A.2.2)."""
+    comps = frame["comps"]
+    if len(cis) > 1:
+        return ([(ci, my * comps[ci]["v"] + by, mx * comps[ci]["h"] + bx)
+                 for ci in cis for by in range(comps[ci]["v"])
+                 for bx in range(comps[ci]["h"])]
+                for my in range(frame["mcus_y"])
+                for mx in range(frame["mcus_x"]))
+    c = comps[cis[0]]
+    return ([(cis[0], by, bx)]
+            for by in range(c["nbh"]) for bx in range(c["nbw"]))
 
 def _decode_scan(raw: bytes, pos: int, sos: bytes, frame: dict,
                  coefs: list, huff: dict, restart_interval: int) -> int:
@@ -610,19 +646,21 @@ def _decode_scan(raw: bytes, pos: int, sos: bytes, frame: dict,
     A sequential (SOF0) scan codes the DC term and the whole 1..63 band of
     each block; its Ss/Se/Ah/Al are not read. A progressive (SOF2) scan is
     DC first / refine (Ss=Se=0) or AC first / refine over Ss..Se of one
-    component (Annex G). Interleaved scans walk MCUs; a one-component
-    scan walks that component's natural block grid, one block per MCU.
-    Every ``restart_interval`` MCUs an RSTn resets the DC predictors and
-    the EOB run."""
+    component (Annex G). Blocks come in :func:`_scan_mcus` order. Every
+    ``restart_interval`` MCUs an RSTn resets the DC predictors and the EOB
+    run."""
     comps = frame["comps"]
     progressive = frame["progressive"]
     ns = sos[0]
-    tables = []  # (component index, component, DC table, AC table)
+    cis, tables = [], {}  # scan components; index -> (DC table, AC table)
     for i in range(ns):
         cs, tds = sos[1 + 2 * i], sos[2 + 2 * i]
-        tables += [(ci, c, huff.get((0, tds >> 4)), huff.get((1, tds & 0x0F)))
-                   for ci, c in enumerate(comps) if c["id"] == cs]
-    if not tables:
+        for ci, c in enumerate(comps):
+            if c["id"] == cs:
+                cis.append(ci)
+                tables[ci] = (huff.get((0, tds >> 4)),
+                              huff.get((1, tds & 0x0F)))
+    if not cis:
         raise ValueError("JPEG scan names no frame component")
     if progressive:
         ss, se, ahal = sos[1 + 2 * ns:4 + 2 * ns]
@@ -631,35 +669,25 @@ def _decode_scan(raw: bytes, pos: int, sos: bytes, frame: dict,
             raise ValueError("JPEG DC scan with Se != 0")
         if ss > se or se > 63:
             raise ValueError("JPEG spectral selection out of range")
-        if ss and len(tables) != 1:
+        if ss and len(cis) != 1:
             raise ValueError("interleaved progressive AC scan")
     else:
         ss, se, ah, al = 0, 63, 0, 0
-    for _, _, dct, act in tables:
+    for dct, act in tables.values():
         if dct is None and ss == 0 and not ah or act is None and se:
             raise ValueError("JPEG missing Huffman table")
-
-    if len(tables) > 1:  # interleaved: MCU order (A.2.3)
-        mcus = ([(ci, dct, act,
-                  coefs[ci][(my * c["v"] + by) * c["bw"] + mx * c["h"] + bx])
-                 for ci, c, dct, act in tables
-                 for by in range(c["v"]) for bx in range(c["h"])]
-                for my in range(frame["mcus_y"])
-                for mx in range(frame["mcus_x"]))
-    else:               # one component: natural block order (A.2.2)
-        ci, c, dct, act = tables[0]
-        mcus = ([(ci, dct, act, coefs[ci][by * c["bw"] + bx])]
-                for by in range(c["nbh"]) for bx in range(c["nbw"]))
 
     reader = _BitReader(raw, pos)
     pred = [0] * len(comps)
     eobrun = 0
-    for n, mcu in enumerate(mcus):
+    for n, mcu in enumerate(_scan_mcus(frame, cis)):
         if restart_interval and n and n % restart_interval == 0:
             reader.restart()
             pred = [0] * len(comps)
             eobrun = 0
-        for ci, dct, act, blk in mcu:
+        for ci, row, col in mcu:
+            dct, act = tables[ci]
+            blk = coefs[ci][row * comps[ci]["bw"] + col]
             if ss == 0:
                 if not ah:  # DC first (or sequential): diffs of dc >> al
                     s = _huff_decode(reader, dct)
@@ -881,140 +909,8 @@ def _jpeg_precompute(pixels: list, quality: int, subsample: tuple) -> dict:
         qc = np.array(qchroma, dtype=float)
         ccoefs = [_plane_coefs(cb, qc), _plane_coefs(cr, qc)]
     return {"gray": gray, "width": width, "height": height,
-            "hs": hs, "vs": vs, "mcus_x": mcus_x, "mcus_y": mcus_y,
-            "qluma": qluma, "qchroma": qchroma,
+            "hs": hs, "vs": vs, "qluma": qluma, "qchroma": qchroma,
             "ycoefs": ycoefs, "ccoefs": ccoefs}
-
-
-def _mag(v: int) -> int:
-    return v.bit_length() if v >= 0 else (-v).bit_length()
-
-
-def _check_restart_interval(restart_interval: int) -> None:
-    """DRI carries a u16: out-of-range values must fail as a clear
-    ValueError, not an opaque struct.error mid-emit."""
-    if not 0 <= restart_interval <= 0xFFFF:
-        raise ValueError(
-            f"restart_interval must be 0..65535, got {restart_interval}")
-
-
-def _emit_restart(out: bytearray, writer: "_BitWriter",
-                  rst_index: int) -> "_BitWriter":
-    """Byte-align the entropy stream, append it, emit RST(rst_index % 8),
-    return a fresh writer — the one restart-emission sequence both the
-    baseline and progressive encoders share."""
-    writer.flush()
-    out += bytes(writer.out)
-    out += bytes((0xFF, 0xD0 + rst_index % 8))
-    return _BitWriter()
-
-
-def encode_jpeg(pixels: list, quality: int = 90,
-                subsample: tuple = (1, 1),
-                restart_interval: int = 0) -> bytes:
-    """Inverse of :func:`_decode_jpeg` for tests/tools: top-down RGB rows →
-    baseline JFIF JPEG (Annex K quant/Huffman tables). ``subsample``
-    (1, 1) = 4:4:4, (2, 2) = 4:2:0 (2x2 chroma box average) — the two
-    shapes that exercise the decoder's single- and multi-block MCU paths.
-    ``restart_interval`` > 0 emits DRI + RSTn markers every N MCUs."""
-    import struct
-
-    _check_restart_interval(restart_interval)
-    pre = _jpeg_precompute(pixels, quality, subsample)
-    gray = pre["gray"]
-    width, height = pre["width"], pre["height"]
-    hs, vs = pre["hs"], pre["vs"]
-    qluma, qchroma = pre["qluma"], pre["qchroma"]
-    ycoefs, ccoefs = pre["ycoefs"], pre["ccoefs"]
-    dc_l, ac_l, dc_c, ac_c = _std_code_tables()
-
-    def _emit(writer, coefs, pred, dct, act) -> int:
-        diff = coefs[0] - pred
-        s = _mag(diff)
-        code, ln = dct[s]
-        writer.write(code, ln)
-        if s:
-            writer.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-        run = 0
-        last_nz = 0
-        for k in range(63, 0, -1):
-            if coefs[k]:
-                last_nz = k
-                break
-        for k in range(1, last_nz + 1):
-            v = coefs[k]
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = act[0xF0]
-                writer.write(code, ln)
-                run -= 16
-            s = _mag(v)
-            code, ln = act[(run << 4) | s]
-            writer.write(code, ln)
-            writer.write(v if v >= 0 else v + (1 << s) - 1, s)
-            run = 0
-        if last_nz < 63:
-            code, ln = act[0x00]
-            writer.write(code, ln)
-        return coefs[0]
-
-    ncomp = 1 if gray else 3
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += (b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00"
-            + bytes((1, 1, 0)) + struct.pack(">HH", 1, 1) + bytes((0, 0)))
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(qluma)
-    if not gray:
-        out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x01" + bytes(qchroma)
-    sof = struct.pack(">BHHB", 8, height, width, ncomp)
-    sof += bytes((1, (hs << 4) | vs, 0))
-    if not gray:
-        sof += bytes((2, 0x11, 1)) + bytes((3, 0x11, 1))
-    out += b"\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
-
-    def dht(tc, th, bits, vals):
-        body = bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-        return b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-
-    out += dht(0, 0, _DC_LUMA_BITS, _DC_LUMA_VALS)
-    out += dht(1, 0, _AC_LUMA_BITS, _AC_LUMA_VALS)
-    if not gray:
-        out += dht(0, 1, _DC_CHROMA_BITS, _DC_CHROMA_VALS)
-        out += dht(1, 1, _AC_CHROMA_BITS, _AC_CHROMA_VALS)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    sos = bytes([ncomp, 1, 0x00])
-    if not gray:
-        sos += bytes((2, 0x11, 3, 0x11))
-    out += (b"\xff\xda" + struct.pack(">H", 2 + len(sos) + 3) + sos
-            + bytes((0, 63, 0)))
-
-    writer = _BitWriter()
-    mcus_x, mcus_y = pre["mcus_x"], pre["mcus_y"]
-    pred = [0, 0, 0]
-    mcu_count = 0
-    rst = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and \
-                    mcu_count % restart_interval == 0:
-                writer = _emit_restart(out, writer, rst)
-                rst += 1
-                pred = [0, 0, 0]
-            for by in range(vs):
-                for bx in range(hs):
-                    coefs = ycoefs[my * vs + by, mx * hs + bx].tolist()
-                    pred[0] = _emit(writer, coefs, pred[0], dc_l, ac_l)
-            if not gray:
-                for ci in (1, 2):
-                    coefs = ccoefs[ci - 1][my, mx].tolist()
-                    pred[ci] = _emit(writer, coefs, pred[ci], dc_c, ac_c)
-            mcu_count += 1
-    writer.flush()
-    out += bytes(writer.out)
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
 
 
 # Progressive AC Huffman table: the Annex K tables lack the EOBn (n>0)
@@ -1023,107 +919,263 @@ def encode_jpeg(pixels: list, quality: int = 90,
 # ((n<<4)|0), ZRL (0xF0) and (run<<4)|size for size 1..14. 240 symbols at
 # one length is canonical-valid (last code 239 != the reserved all-ones)
 # and self-describing via DHT, so any decoder reads it back.
-_AC_PROG_VALS = sorted(
+_AC_PROG_VALS = tuple(sorted(
     {(n << 4) for n in range(15)} | {0xF0}
-    | {(r << 4) | s for r in range(16) for s in range(1, 15)})
-_AC_PROG_BITS = [0, 0, 0, 0, 0, 0, 0, len(_AC_PROG_VALS), 0, 0, 0, 0, 0,
-                 0, 0, 0]
+    | {(r << 4) | s for r in range(16) for s in range(1, 15)}))
+_AC_PROG_BITS = (0, 0, 0, 0, 0, 0, 0, len(_AC_PROG_VALS), 0, 0, 0, 0, 0,
+                 0, 0, 0)
+
+# (BITS, HUFFVAL) per table slot: 0 luma, 1 chroma.
+_DC_TABLES = ((_DC_LUMA_BITS, _DC_LUMA_VALS),
+              (_DC_CHROMA_BITS, _DC_CHROMA_VALS))
+_AC_STD_TABLES = ((_AC_LUMA_BITS, _AC_LUMA_VALS),
+                  (_AC_CHROMA_BITS, _AC_CHROMA_VALS))
+_AC_PROG_TABLES = ((_AC_PROG_BITS, _AC_PROG_VALS),) * 2
+
+# The classic 10-scan progressive script (libjpeg's standard shape), as
+# (components, Ss, Se, Ah, Al): interleaved DC first (Al=1) and
+# refinement, per-component spectral bands, successive approximation on
+# luma AC (first Al=2, refinements 2→1→0). A gray image keeps the scans
+# of component 0.
+_PROG_SCRIPT = (
+    ((0, 1, 2), 0, 0, 0, 1),
+    ((0,), 1, 5, 0, 2),
+    ((1,), 1, 63, 0, 1),
+    ((2,), 1, 63, 0, 1),
+    ((0,), 6, 63, 0, 2),
+    ((0,), 1, 63, 2, 1),
+    ((0, 1, 2), 0, 0, 1, 0),
+    ((1,), 1, 63, 1, 0),
+    ((2,), 1, 63, 1, 0),
+    ((0,), 1, 63, 1, 0),
+)
 
 
-class _ProgScanState:
-    """Cross-block entropy state of one progressive scan: the pending EOB
-    run and (refinement scans) the correction bits buffered until the run
-    is flushed (T.81 G.1.2.2-3)."""
+def _jpeg_header(pre: dict, sof_marker: int, ac_tables: tuple,
+                 restart_interval: int) -> tuple:
+    """SOI through DRI for both encoders: JFIF APP0, the quant tables, the
+    frame header ``sof_marker`` (SOF0 or SOF2; luma sampled hs x vs,
+    chroma 1x1), the Annex K DC tables beside ``ac_tables`` and a DRI
+    when ``restart_interval`` is set (out of u16 range: ValueError).
+    Returns ``(header, frame)``, where
+    ``frame`` is the frame header as the decoder parses it, so the scans
+    walk the block grids the decoder fills."""
+    import struct
 
-    def __init__(self):
-        self.eobrun = 0
-        self.bits: list = []
+    if not 0 <= restart_interval <= 0xFFFF:  # DRI carries a u16
+        raise ValueError(
+            f"restart_interval must be 0..65535, got {restart_interval}")
+
+    def segment(marker: int, body: bytes) -> bytes:
+        return bytes((0xFF, marker)) + struct.pack(">H", 2 + len(body)) + body
+
+    ncomp = 1 if pre["gray"] else 3
+    ntab = min(ncomp, 2)  # table slots in use: luma, chroma
+    sof = struct.pack(">BHHB", 8, pre["height"], pre["width"], ncomp)
+    sof += bytes((1, (pre["hs"] << 4) | pre["vs"], 0,
+                  2, 0x11, 1, 3, 0x11, 1)[:3 * ncomp])
+    # JFIF 1.1, no density unit, 1:1 density, no thumbnail
+    out = bytearray(b"\xff\xd8")
+    out += segment(0xE0, b"JFIF\x00" + bytes((1, 1, 0, 0, 1, 0, 1, 0, 0)))
+    for tq, q in enumerate((pre["qluma"], pre["qchroma"])[:ntab]):
+        out += segment(0xDB, bytes((tq,)) + bytes(q))
+    out += segment(sof_marker, sof)
+    for th in range(ntab):
+        for tc, (bits, vals) in enumerate((_DC_TABLES[th], ac_tables[th])):
+            out += segment(0xC4, bytes(((tc << 4) | th,)) + bytes(bits)
+                           + bytes(vals))
+    if restart_interval:
+        out += segment(0xDD, struct.pack(">H", restart_interval))
+    return out, _block_grids(_parse_sof(sof, sof_marker == 0xC2))
 
 
-def _flush_eobrun(writer: "_BitWriter", actab: dict,
-                  state: _ProgScanState) -> None:
-    if state.eobrun > 0:
-        nbits = state.eobrun.bit_length() - 1
-        code, ln = actab[nbits << 4]
-        writer.write(code, ln)
-        if nbits:
-            writer.write(state.eobrun - (1 << nbits), nbits)
-        state.eobrun = 0
-    for b in state.bits:
-        writer.write(b, 1)
-    state.bits = []
+def _encode_scan(pre: dict, frame: dict, scan: tuple, ac_tables: tuple,
+                 restart_interval: int) -> bytearray:
+    """SOS header and entropy-coded data of one scan over the quantized
+    coefficients in ``pre``, the inverse of :func:`_decode_scan`.
+    ``scan`` is (component indices, Ss, Se, Ah, Al).
+
+    Blocks come in :func:`_scan_mcus` order. With Ss=0 each block codes
+    its DC term, first (the difference of dc >> Al from the predictor) or
+    refine (bit Al); when Se>0 too (a sequential scan) the block's 1..Se
+    band follows and the block's EOB is written at once. With Ss>0 the
+    Ss..Se band is coded first (Ah=0) or refined (Ah=Al+1) and EOBs join
+    runs across blocks (G.1.2.2-3). Every ``restart_interval`` MCUs an
+    RSTn resets the DC predictors and the EOB run."""
+    import struct
+    import numpy as np
+
+    cis, ss, se, ah, al = scan
+    comps = frame["comps"]
+    coefs = [pre["ycoefs"], *(pre["ccoefs"] or ())]
+    sos = bytes([len(cis)])
+    for ci in cis:  # Td/Ta: luma uses table slot 0, chroma slot 1
+        sos += bytes((comps[ci]["id"], 0x11 if ci else 0x00))
+    sos += bytes((ss, se, (ah << 4) | al))
+    out = bytearray(b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos)
+
+    lo = ss or 1  # a sequential band starts after the DC term
+    width = se - lo + 1
+    dcs, bands, codes = {}, {}, {}
+    for ci in cis:
+        c = comps[ci]
+        grid = coefs[ci] if len(cis) > 1 else coefs[ci][:c["nbh"], :c["nbw"]]
+        if ss == 0:
+            dc = grid[..., 0] >> al
+            dcs[ci] = (dc & 1 if ah else dc).tolist()
+        if se:
+            # Point transform (G.1.1.1.1): AC magnitudes shift by Al. Each
+            # block's band is cut after its last nonzero coefficient.
+            band = grid[..., lo:se + 1]
+            mag = np.abs(band) >> al
+            sv = np.where(band < 0, -mag, mag)
+            nz = sv != 0
+            keep = np.where(nz.any(-1), width - nz[..., ::-1].argmax(-1), 0)
+            bands[ci] = [[b[:k] for b, k in zip(brow, krow)]
+                         for brow, krow in zip(sv.tolist(), keep.tolist())]
+        slot = 1 if ci else 0
+        codes[ci] = (_canonical_codes(*_DC_TABLES[slot]),
+                     _canonical_codes(*ac_tables[slot]))
+
+    writer = _BitWriter()
+    write = writer.write
+    pred = [0] * len(comps)
+    eobrun, bits = 0, []  # pending EOB run and its refinement bits
+    act = codes[cis[0]][1]  # an EOB run only spans one-component scans
+    for n, mcu in enumerate(_scan_mcus(frame, cis)):
+        if restart_interval and n and n % restart_interval == 0:
+            eobrun = _flush_eobrun(write, act, eobrun, bits)
+            writer.flush()
+            out += writer.out
+            out += bytes((0xFF, 0xD0 + (n // restart_interval - 1) % 8))
+            writer = _BitWriter()
+            write = writer.write
+            pred = [0] * len(comps)
+        for ci, row, col in mcu:
+            dct, act = codes[ci]
+            if ss == 0:
+                d = dcs[ci][row][col]
+                if ah:
+                    write(d, 1)
+                else:
+                    diff = d - pred[ci]
+                    pred[ci] = d
+                    if diff < 0:
+                        s = (-diff).bit_length()
+                        diff += (1 << s) - 1
+                    else:
+                        s = diff.bit_length()
+                    code, ln = dct[s]
+                    write((code << s) | diff, ln + s)
+            if se:
+                eobrun = (_encode_ac_refine if ah else _encode_ac_first)(
+                    write, act, bands[ci][row][col], width, eobrun, bits)
+                if eobrun and (ss == 0 or eobrun == 0x7FFF):
+                    eobrun = _flush_eobrun(write, act, eobrun, bits)
+    _flush_eobrun(write, act, eobrun, bits)
+    writer.flush()
+    out += writer.out
+    return out
 
 
-def _encode_ac_first(writer: "_BitWriter", actab: dict, blk, ss: int,
-                     se: int, al: int, state: _ProgScanState) -> None:
-    """First AC scan of a band (Ah=0): magnitudes shifted down by Al,
-    zero runs + EOB-run accumulation across blocks."""
-    r = 0
-    for k in range(ss, se + 1):
-        v = int(blk[k])
-        t = (v if v >= 0 else -v) >> al
-        if t == 0:
-            r += 1
-            continue
-        _flush_eobrun(writer, actab, state)
-        while r > 15:
-            code, ln = actab[0xF0]
-            writer.write(code, ln)
-            r -= 16
-        nbits = t.bit_length()
-        code, ln = actab[(r << 4) | nbits]
-        writer.write(code, ln)
-        writer.write(t if v >= 0 else (1 << nbits) - 1 - t, nbits)
+def _flush_eobrun(write, actab: dict, eobrun: int, bits: list) -> int:
+    """Write a pending EOB run (EOBn symbol plus n extra bits) and the
+    refinement bits buffered behind it; returns the new run, 0. A run of
+    one is the plain EOB (0x00) a sequential block ends with."""
+    if eobrun:
+        n = eobrun.bit_length() - 1
+        code, ln = actab[n << 4]
+        write((code << n) | (eobrun - (1 << n)), ln + n)
+    for b in bits:
+        write(b, 1)
+    bits.clear()
+    return 0
+
+
+def _encode_ac_first(write, actab: dict, band: list, width: int,
+                     eobrun: int, bits: list) -> int:
+    """First coding of one block's point-transformed band (Ah=0, or a
+    sequential scan): zero runs, ZRL past 15 zeros, then the (run, size)
+    symbol and the value's bits. ``band`` ends at its last nonzero
+    coefficient; when it is shorter than ``width`` the block ends in an
+    EOB, which joins the run. Returns the EOB run."""
+    if band:
+        eobrun = _flush_eobrun(write, actab, eobrun, bits)
         r = 0
-    if r > 0:
-        state.eobrun += 1
-        if state.eobrun == 0x7FFF:
-            _flush_eobrun(writer, actab, state)
+        for v in band:
+            if not v:
+                r += 1
+                continue
+            while r > 15:
+                write(*actab[0xF0])
+                r -= 16
+            if v < 0:
+                s = (-v).bit_length()
+                v += (1 << s) - 1
+            else:
+                s = v.bit_length()
+            code, ln = actab[(r << 4) | s]
+            write((code << s) | v, ln + s)
+            r = 0
+    return eobrun + (len(band) < width)
 
 
-def _encode_ac_refine(writer: "_BitWriter", actab: dict, blk, ss: int,
-                      se: int, al: int, state: _ProgScanState) -> None:
-    """AC refinement scan (Ah=Al+1): one correction bit per already-
-    nonzero coefficient, newly-nonzero coefficients whose shifted
-    magnitude is exactly 1, correction bits buffered across zero runs and
-    EOB runs (the ``encode_mcu_AC_refine`` algorithm)."""
-    absv = [(int(blk[k]) if blk[k] >= 0 else -int(blk[k])) >> al
-            for k in range(ss, se + 1)]
-    eob = ss - 1  # last newly-nonzero coefficient in this scan
-    for k in range(ss, se + 1):
-        if absv[k - ss] == 1:
+def _encode_ac_refine(write, actab: dict, band: list, width: int,
+                      eobrun: int, bits: list) -> int:
+    """AC refinement of one block (Ah=Al+1, the ``encode_mcu_AC_refine``
+    algorithm): ``band`` holds the coefficients shifted by Al, cut after
+    the last nonzero one. A magnitude of 1 is newly nonzero (symbol plus
+    sign bit); a larger one already is, and gives one correction bit,
+    buffered until the next symbol or, past the last new coefficient,
+    behind the EOB run. Returns the EOB run."""
+    eob = -1  # last newly-nonzero coefficient
+    for k, v in enumerate(band):
+        if v == 1 or v == -1:
             eob = k
     r = 0
     pend: list = []  # correction bits since the last emitted symbol
-    for k in range(ss, se + 1):
-        t = absv[k - ss]
-        if t == 0:
+    for k, v in enumerate(band):
+        t = v if v >= 0 else -v
+        if not t:
             r += 1
             continue
         while r > 15 and k <= eob:
-            _flush_eobrun(writer, actab, state)
-            code, ln = actab[0xF0]
-            writer.write(code, ln)
+            eobrun = _flush_eobrun(write, actab, eobrun, bits)
+            write(*actab[0xF0])
             r -= 16
             for b in pend:
-                writer.write(b, 1)
+                write(b, 1)
             pend = []
         if t > 1:
             pend.append(t & 1)
             continue
-        _flush_eobrun(writer, actab, state)
+        eobrun = _flush_eobrun(write, actab, eobrun, bits)
         code, ln = actab[(r << 4) | 1]
-        writer.write(code, ln)
-        writer.write(1 if blk[k] > 0 else 0, 1)
+        write((code << 1) | (v > 0), ln + 1)
         for b in pend:
-            writer.write(b, 1)
+            write(b, 1)
         pend = []
         r = 0
-    if r > 0 or pend:
-        state.eobrun += 1
-        state.bits.extend(pend)
-        if state.eobrun == 0x7FFF:
-            _flush_eobrun(writer, actab, state)
+    if r or pend or len(band) < width:
+        eobrun += 1
+        bits.extend(pend)
+    return eobrun
+
+
+def encode_jpeg(pixels: list, quality: int = 90,
+                subsample: tuple = (1, 1),
+                restart_interval: int = 0) -> bytes:
+    """Inverse of :func:`_decode_jpeg` for tests/tools: top-down RGB rows →
+    baseline JFIF JPEG (Annex K quant/Huffman tables), one interleaved
+    sequential scan. ``subsample`` (1, 1) = 4:4:4, (2, 2) = 4:2:0 (2x2
+    chroma box average) — the two shapes that exercise the decoder's
+    single- and multi-block MCU paths. ``restart_interval`` > 0 emits
+    DRI + RSTn markers every N MCUs."""
+    pre = _jpeg_precompute(pixels, quality, subsample)
+    out, frame = _jpeg_header(pre, 0xC0, _AC_STD_TABLES, restart_interval)
+    scan = ((0, 1, 2)[:len(frame["comps"])], 0, 63, 0, 0)
+    out += _encode_scan(pre, frame, scan, _AC_STD_TABLES, restart_interval)
+    return bytes(out + b"\xff\xd9")
 
 
 def encode_jpeg_progressive(pixels: list, quality: int = 90,
@@ -1132,164 +1184,17 @@ def encode_jpeg_progressive(pixels: list, quality: int = 90,
     """Progressive (SOF2) inverse of :func:`_decode_jpeg`: same color
     convert / DCT / quantization as :func:`encode_jpeg` (identical
     coefficients, so both encodings decode bit-identically), emitted as
-    the classic 10-scan script — interleaved DC first (Al=1) and
-    refinement, per-component spectral bands with successive
-    approximation on luma AC (first Al=2, refinements 2→1→0) — which
-    exercises every progressive decode path: EOB runs, ZRL, correction
-    bits, newly-nonzero insertion, interleaved and natural block order."""
-    import struct
-
-    _check_restart_interval(restart_interval)
+    ``_PROG_SCRIPT`` — which exercises every progressive decode path:
+    EOB runs, ZRL, correction bits, newly-nonzero insertion, interleaved
+    and natural block order."""
     pre = _jpeg_precompute(pixels, quality, subsample)
-    gray = pre["gray"]
-    width, height = pre["width"], pre["height"]
-    hs, vs = pre["hs"], pre["vs"]
-    mcus_x, mcus_y = pre["mcus_x"], pre["mcus_y"]
-    ycoefs, ccoefs = pre["ycoefs"], pre["ccoefs"]
-    dc_l, _, dc_c, _ = _std_code_tables()
-    ac_prog = _canonical_codes(_AC_PROG_BITS, _AC_PROG_VALS)
-
-    ncomp = 1 if gray else 3
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += (b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00"
-            + bytes((1, 1, 0)) + struct.pack(">HH", 1, 1) + bytes((0, 0)))
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(pre["qluma"])
-    if not gray:
-        out += (b"\xff\xdb" + struct.pack(">H", 67) + b"\x01"
-                + bytes(pre["qchroma"]))
-    sof = struct.pack(">BHHB", 8, height, width, ncomp)
-    sof += bytes((1, (hs << 4) | vs, 0))
-    if not gray:
-        sof += bytes((2, 0x11, 1)) + bytes((3, 0x11, 1))
-    out += b"\xff\xc2" + struct.pack(">H", 2 + len(sof)) + sof  # SOF2
-
-    def dht(tc, th, bits, vals):
-        body = bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals)
-        return b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-
-    out += dht(0, 0, _DC_LUMA_BITS, _DC_LUMA_VALS)
-    out += dht(1, 0, _AC_PROG_BITS, _AC_PROG_VALS)
-    if not gray:
-        out += dht(0, 1, _DC_CHROMA_BITS, _DC_CHROMA_VALS)
-        out += dht(1, 1, _AC_PROG_BITS, _AC_PROG_VALS)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-
-    comps = [("y", ycoefs, width, height, 1, dc_l)]
-    if not gray:
-        cw, ch = -(-width // hs), -(-height // vs)
-        comps += [("cb", ccoefs[0], cw, ch, 2, dc_c),
-                  ("cr", ccoefs[1], cw, ch, 3, dc_c)]
-
-    def sos_header(comp_specs, ss, se, ah, al):
-        body = bytes([len(comp_specs)])
-        for cid, tds in comp_specs:
-            body += bytes((cid, tds))
-        body += bytes((ss, se, (ah << 4) | al))
-        return b"\xff\xda" + struct.pack(">H", 2 + len(body)) + body
-
-    rst_state = {"n": 0}
-
-    def _restart(writer: "_BitWriter") -> "_BitWriter":
-        """Shared emission via _emit_restart; RST index restarts at RST0
-        per scan (rst_state is reset in each scan closure)."""
-        w = _emit_restart(out, writer, rst_state["n"])
-        rst_state["n"] += 1
-        return w
-
-    def dc_scan(ah, al):
-        """Interleaved DC scan over all components, MCU order."""
-        nonlocal out
-        out += sos_header([(1, 0x00)] if gray else
-                          [(1, 0x00), (2, 0x11), (3, 0x11)], 0, 0, ah, al)
-        writer = _BitWriter()
-        pred = [0, 0, 0]
-        rst_state["n"] = 0
-        n_mcu = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                if restart_interval and n_mcu and \
-                        n_mcu % restart_interval == 0:
-                    writer = _restart(writer)
-                    pred = [0, 0, 0]
-                n_mcu += 1
-                for ci, (_, coefarr, _, _, _, dct) in enumerate(comps):
-                    bv, bh_ = (vs, hs) if ci == 0 else (1, 1)
-                    for by in range(bv):
-                        for bx in range(bh_):
-                            dc = int(coefarr[my * bv + by, mx * bh_ + bx, 0])
-                            if ah == 0:
-                                sdc = dc >> al
-                                diff = sdc - pred[ci]
-                                pred[ci] = sdc
-                                s = _mag(diff)
-                                code, ln = dct[s]
-                                writer.write(code, ln)
-                                if s:
-                                    writer.write(
-                                        diff if diff >= 0
-                                        else diff + (1 << s) - 1, s)
-                            else:
-                                writer.write((dc >> al) & 1, 1)
-        writer.flush()
-        out += bytes(writer.out)
-
-    def ac_scan(ci, ss, se, ah, al):
-        """Single-component AC scan over the natural block grid."""
-        nonlocal out
-        _, coefarr, comp_w, comp_h, cid, _ = comps[ci]
-        # Td/Ta nibbles: luma uses table slot 0, chroma slot 1 for both.
-        out += sos_header([(cid, 0x00 if ci == 0 else 0x11)],
-                          ss, se, ah, al)
-        writer = _BitWriter()
-        state = _ProgScanState()
-        rst_state["n"] = 0
-        n_blk = 0
-        nbw, nbh = -(-comp_w // 8), -(-comp_h // 8)
-        for by in range(nbh):
-            for bx in range(nbw):
-                if restart_interval and n_blk and \
-                        n_blk % restart_interval == 0:
-                    # EOB runs cannot span a restart interval (G.1.2.2)
-                    _flush_eobrun(writer, ac_prog, state)
-                    writer = _restart(writer)
-                    state = _ProgScanState()
-                n_blk += 1
-                blk = coefarr[by, bx]
-                # All-zero band → one EOB-run increment either way (first
-                # scan: no magnitudes; refine: no history, no new bits).
-                # Flat regions dominate real photos and the solid-color
-                # bench payloads are 100% this case.
-                if not blk[ss:se + 1].any():
-                    state.eobrun += 1
-                    if state.eobrun == 0x7FFF:
-                        _flush_eobrun(writer, ac_prog, state)
-                    continue
-                if ah == 0:
-                    _encode_ac_first(writer, ac_prog, blk, ss, se, al,
-                                     state)
-                else:
-                    _encode_ac_refine(writer, ac_prog, blk, ss, se, al,
-                                      state)
-        _flush_eobrun(writer, ac_prog, state)
-        writer.flush()
-        out += bytes(writer.out)
-
-    # The scan script (libjpeg's standard progressive script shape).
-    dc_scan(0, 1)
-    ac_scan(0, 1, 5, 0, 2)
-    if not gray:
-        ac_scan(1, 1, 63, 0, 1)
-        ac_scan(2, 1, 63, 0, 1)
-    ac_scan(0, 6, 63, 0, 2)
-    ac_scan(0, 1, 63, 2, 1)
-    dc_scan(1, 0)
-    if not gray:
-        ac_scan(1, 1, 63, 1, 0)
-        ac_scan(2, 1, 63, 1, 0)
-    ac_scan(0, 1, 63, 1, 0)
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+    out, frame = _jpeg_header(pre, 0xC2, _AC_PROG_TABLES, restart_interval)
+    for cis, *rest in _PROG_SCRIPT:
+        cis = tuple(ci for ci in cis if ci < len(frame["comps"]))
+        if cis:
+            out += _encode_scan(pre, frame, (cis, *rest), _AC_PROG_TABLES,
+                                restart_interval)
+    return bytes(out + b"\xff\xd9")
 
 
 # -- GIF (GIF87a/89a, LZW) ----------------------------------------------------
@@ -1516,27 +1421,17 @@ def image_dimensions(payload: bytes) -> dict:
             raise ValueError("truncated GIF screen descriptor")
         w, h = struct.unpack_from("<HH", raw, 6)
         return {"format": "gif", "width": w, "height": h}
-    if raw[:2] == b"\xff\xd8":  # JPEG SOI; scan for a frame header
+    if raw[:2] == b"\xff\xd8":  # JPEG SOI: the frame header precedes SOS
         pos = 2
-        while pos + 4 <= len(raw):
-            if raw[pos] != 0xFF:
-                break
-            marker = raw[pos + 1]
-            if marker == 0xFF:  # spec B.1.1.2: 0xFF fill bytes pad markers
-                pos += 1
-                continue
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                pos += 2
-                continue
-            seglen = struct.unpack_from(">H", raw, pos + 2)[0]
+        while True:
+            marker, body, pos = _jpeg_segment(raw, pos)
+            if marker in (None, 0xD9, 0xDA):
+                raise ValueError("JPEG frame header not found")
             # SOF0-15 except DHT/JPG/DAC (C4, C8, CC) carry dimensions.
             if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                if pos + 9 <= len(raw):
-                    h, w = struct.unpack_from(">HH", raw, pos + 5)
-                    return {"format": "jpeg", "width": w, "height": h}
-                break
-            pos += 2 + seglen
-        raise ValueError("JPEG frame header not found")
+                frame = _parse_sof(body)
+                return {"format": "jpeg", "width": frame["w"],
+                        "height": frame["h"]}
     raise NotImplementedError(
         f"unrecognized image magic {raw[:8]!r}")
 
@@ -1864,7 +1759,7 @@ def resize_image(payload: bytes, width: int, height: int) -> bytes:
     import numpy as np
 
     img = _decode_image_array(payload)
-    fmt = image_dimensions(payload)["format"]
+    fmt = img["format"]
     src = img["array"].astype(float)
     gray = img["mode"] == "L"
     sh, sw = src.shape[0], src.shape[1]
@@ -1947,8 +1842,7 @@ def _decode_row(media_id, payload):
             return [(media_id, "ok", "wav", None, None, None, None, None,
                      a["peak"], a["rms"], a["duration_ms"])]
         img = _decode_image_array(raw)
-        fmt = image_dimensions(raw)["format"]
-        return [(media_id, "ok", fmt, img["width"], img["height"],
+        return [(media_id, "ok", img["format"], img["width"], img["height"],
                  *_channel_means(img), None, None, None)]
     except Exception as e:  # noqa: BLE001 — never-fail contract
         return [(media_id, f"error:{type(e).__name__}") + (None,) * 9]

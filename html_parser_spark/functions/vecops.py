@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .._worker import prepare_worker
 
-__all__ = ["dot", "l2_norm", "brute_force_topk", "lsh_bucket", "ivf_topk",
+__all__ = ["dot", "l2_norm", "brute_force_topk", "ivf_topk",
            "kmeans_cells", "near_dup_pairs", "lsh_bucketed_topk"]
 
 
@@ -178,12 +178,14 @@ def near_dup_pairs(corpus: DataFrame, threshold: float = 0.9,
 def _assign_buckets(df: DataFrame, n_bits: int, id_col: str, vec_col: str,
                     out_id: str, out_vec: str, out_norm: str,
                     probes: int = 1) -> DataFrame:
-    """Map-only Arrow-batched LSH bucket + norm assignment — the vectorized
-    twin of :func:`lsh_bucket` (VERDICT r3 task 3: the per-bit interpreted
-    HOF fold was the engine's one remaining interpreted-expression hot
-    path, ~8 sequential aggregate/zip_with folds per row).
+    """Map-only Arrow-batched sign-random-projection LSH bucket + norm
+    assignment: hyperplane j (1-based) weights component i (0-based) by
+    cos(i*j + j), fixed and seedless, and bit j-1 is set iff the
+    projection is >= 0. Same-bucket vectors are near-duplicate candidates;
+    the bucket key makes ANN a shuffle-on-bucket join instead of a cross
+    product.
 
-    Bit-for-bit parity with the HOF form and the DuckDB twin
+    Bit-for-bit parity with the DuckDB twin
     (``__spark_entry__._lsh_bucket_expr``) is load-bearing: a projection
     near 0 flips its sign bit under any re-association. So the projection
     and the norm accumulate SEQUENTIALLY across dimensions (vectorized
@@ -232,7 +234,7 @@ def _assign_buckets(df: DataFrame, n_bits: int, id_col: str, vec_col: str,
             V = np.stack([vecs[i] for i in keep])
             n_rows, dim = V.shape
             # Hyperplane weights H[j, i] = cos(i*(j+1) + (j+1)) — same
-            # deterministic seedless family as lsh_bucket / the SQL twin.
+            # deterministic seedless family as the SQL twin.
             j1 = np.arange(1, n_bits + 1, dtype=np.float64)
             H = np.cos(np.arange(dim, dtype=np.float64)[None, :]
                        * j1[:, None] + j1[:, None])
@@ -305,8 +307,8 @@ def lsh_bucketed_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     parallelism and lets AQE split residual hot buckets).
 
     Buckets and norms come from the Arrow-batched :func:`_assign_buckets`
-    pass (map-only); :func:`lsh_bucket` remains the HOF reference form
-    whose SQL rendering is the DuckDB twin."""
+    pass (map-only), whose SQL rendering is the DuckDB twin
+    (``__spark_entry__._lsh_bucket_expr``)."""
     q = _assign_buckets(queries, n_bits, id_col, vec_col,
                         "query_id", "q_vec", "q_norm", probes=n_probes)
     c = _assign_buckets(corpus, n_bits, id_col, vec_col,
@@ -506,27 +508,3 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
 
     return _topk_by_cosine(c.join(F.broadcast(q), "cell"), k)
 
-
-def lsh_bucket(vec: Column, n_bits: int = 8) -> Column:
-    """Sign-random-projection LSH bucket id (deterministic hyperplanes:
-    hyperplane j weights component i by cos(i*j+j) — fixed, seedless).
-    Same-bucket vectors are near-duplicate candidates; the bucket key makes
-    ANN a shuffle-on-bucket join instead of a cross product.
-
-    Stays a per-bit sequential HOF fold ON PURPOSE: the DuckDB twin
-    (list_sum over the same element order) must reproduce the projection
-    doubles bit-for-bit, and a groupBy-SUM reformulation would add in
-    shuffle-dependent order, flipping sign bits on projections near 0."""
-    idx = F.transform(vec, lambda x, i: i)
-    bits = []
-    for j in range(n_bits):
-        proj = F.aggregate(
-            F.zip_with(vec, idx,
-                       lambda x, i: x.cast("double") * F.cos(i * F.lit(float(j + 1)) + F.lit(float(j + 1)))),
-            F.lit(0.0), lambda acc, v: acc + v,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out

@@ -339,16 +339,23 @@ def tokenize(html: str) -> FlatDOM:
     return dom
 
 
+# What may follow a raw-text end tag's name (HTML5 "appropriate end tag"):
+# whitespace, "/" or ">"; "</scripts>" does not end a script.
+_END_TAG_DELIMS = frozenset("\t\n\f\r />")
+
+
 def _find_end_tag(html: str, tag: str, start: int) -> int:
-    """Index of the first ``</tag`` at or after ``start``, the tag name
-    compared ASCII-case-insensitively (``</SCRIPT>``, ``</Style>``); -1 if
-    none. ``tag`` is lowercase. Most raw-text bodies hold no other ``</``,
+    """Index of the first ``</tag`` at or after ``start`` whose name is
+    followed by whitespace, ``/`` or ``>``, the tag name compared
+    ASCII-case-insensitively (``</SCRIPT>``, ``</Style>``); -1 if none.
+    ``tag`` is lowercase. Most raw-text bodies hold no other ``</``,
     so this is usually one ``str.find``."""
     k = len(tag)
     idx = html.find("</", start)
     while idx != -1:
         name = html[idx + 2:idx + 2 + k]
-        if name == tag or (name.isascii() and name.lower() == tag):
+        if ((name == tag or (name.isascii() and name.lower() == tag))
+                and html[idx + 2 + k:idx + 3 + k] in _END_TAG_DELIMS):
             return idx
         idx = html.find("</", idx + 2)
     return -1

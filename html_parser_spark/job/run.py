@@ -70,7 +70,9 @@ def main(argv=None) -> int:
         if args.format == "iceberg":
             pages = spark.read.format("iceberg").load(args.input)
         else:
-            pages = spark.read.parquet(args.input)
+            # The pages schema is known: reading with it starts no
+            # schema-inference job.
+            pages = spark.read.schema(P.PAGES_SCHEMA).parquet(args.input)
         if args.resume:
             pages = P.resume_remaining(pages, args.output)
         extracted = P.extract_pages(

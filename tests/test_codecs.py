@@ -529,6 +529,49 @@ def test_jpeg_truncated_stream_raises_valueerror():
         mediaops.decode_image(enc[:len(enc) // 2])
 
 
+@pytest.mark.parametrize("restart", [-1, 0x10000])
+def test_jpeg_restart_interval_outside_u16_raises(restart):
+    for encode in (mediaops.encode_jpeg, mediaops.encode_jpeg_progressive):
+        with pytest.raises(ValueError, match="restart_interval"):
+            encode(_jpeg_gradient(8, 8), restart_interval=restart)
+
+
+# Encoder byte pin: the md5 of each encoder's output over a fixed grid
+# (odd sizes, seeded gradient and noise, q50/q95, restart 0/3). The
+# digests were taken from the earlier separate baseline and progressive
+# encoders; the shared header writer and scan encoder must reproduce
+# their bytes exactly.
+
+
+def _pin_images(gray):
+    import numpy as np
+    for w, h in ((13, 9), (37, 21)):
+        noise = np.random.RandomState(w * h).randint(0, 256, (h, w, 3))
+        for px in (_jpeg_gradient(w, h), noise.tolist()):
+            yield [[p[0] if gray else tuple(p) for p in row] for row in px]
+
+
+@pytest.mark.parametrize("encoder,shape,digest", [
+    ("encode_jpeg", "gray", "20e303107f5c48d2ed643f00caba22db"),
+    ("encode_jpeg", "4:4:4", "aff4f360a014bd520a6d0178460d9f95"),
+    ("encode_jpeg", "4:2:0", "4eeb9bb5ce9d46f656a3bd6c74c10141"),
+    ("encode_jpeg_progressive", "gray", "1bd8b95fd5cdfa956163a665ad3d0599"),
+    ("encode_jpeg_progressive", "4:4:4", "00f52837df991d9ef43745b9f20f680c"),
+    ("encode_jpeg_progressive", "4:2:0", "6b4bd80090b52badfce195de4b72dc8d"),
+])
+def test_jpeg_encoder_bytes_pinned(encoder, shape, digest):
+    import hashlib
+    sub = (2, 2) if shape == "4:2:0" else (1, 1)
+    md5 = hashlib.md5()
+    for px in _pin_images(shape == "gray"):
+        for quality in (50, 95):
+            for restart in (0, 3):
+                md5.update(getattr(mediaops, encoder)(
+                    px, quality=quality, subsample=sub,
+                    restart_interval=restart))
+    assert md5.hexdigest() == digest
+
+
 # ---------------------------------------------------------------------------
 # GIF (real decode; encode_gif is the test inverse)
 
