@@ -330,21 +330,34 @@ _AC_CHROMA_VALS = (
 )
 
 
-@functools.cache
-def _canonical_codes(bits: tuple, vals: tuple) -> dict:
-    """T.81 Annex C canonical Huffman codes: {symbol: (code, length)},
-    built once per table."""
-    codes, code, k = {}, 0, 0
+def _huffman_codes(bits: tuple, vals: tuple):
+    """T.81 Annex C canonical Huffman codes of one table (BITS, HUFFVAL):
+    each entry's (symbol, code, length)."""
+    code, k = 0, 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
-            codes[vals[k]] = (code, length)
+            yield vals[k], code, length
             code += 1
             k += 1
         code <<= 1
-    return codes
 
 
+@functools.cache
+def _canonical_codes(bits: tuple, vals: tuple) -> dict:
+    """Encoder side, built once per table: {symbol: (code, length)}."""
+    return {sym: (code, n) for sym, code, n in _huffman_codes(bits, vals)}
+
+
+@functools.lru_cache(maxsize=256)
+def _huffman_lookup(bits: tuple, vals: tuple) -> dict:
+    """Decoder side: {(length, code): symbol}. Most files carry the Annex
+    K tables, so a bounded cache skips rebuilding them per image."""
+    return {(n, code): sym for sym, code, n in _huffman_codes(bits, vals)}
+
+
+@functools.cache
 def _idct_basis():
+    """The orthonormal 8-point DCT matrix (read-only, built once)."""
     import math
     import numpy as np
     m = np.zeros((8, 8))
@@ -352,6 +365,7 @@ def _idct_basis():
         cu = (1 / math.sqrt(2)) if u == 0 else 1.0
         for x in range(8):
             m[u, x] = cu / 2 * math.cos((2 * x + 1) * u * math.pi / 16)
+    m.setflags(write=False)
     return m
 
 
@@ -455,20 +469,10 @@ def _parse_dht(seg: bytes, huff: dict) -> None:
     """DHT segment into ``huff[(tc, th)] = {(len, code): symbol}``."""
     at = 0
     while at < len(seg):
-        tc, th = seg[at] >> 4, seg[at] & 0x0F
-        bits = list(seg[at + 1:at + 17])
+        bits = tuple(seg[at + 1:at + 17])
         nvals = sum(bits)
-        vals = list(seg[at + 17:at + 17 + nvals])
-        table = {}
-        code = 0
-        k = 0
-        for length in range(1, 17):
-            for _ in range(bits[length - 1]):
-                table[(length, code)] = vals[k]
-                code += 1
-                k += 1
-            code <<= 1
-        huff[(tc, th)] = table
+        vals = tuple(seg[at + 17:at + 17 + nvals])
+        huff[(seg[at] >> 4, seg[at] & 0x0F)] = _huffman_lookup(bits, vals)
         at += 17 + nvals
 
 
@@ -530,11 +534,11 @@ def _jpeg_coefficients(raw: bytes) -> tuple:
         elif marker in (0xC0, 0xC2):  # SOF0 / SOF2
             if coefs is not None:
                 raise ValueError("JPEG frame header after scan data")
-            frame = _parse_sof(seg, progressive=marker == 0xC2)
+            frame = _parse_sof(seg)
             if frame["prec"] != 8:
                 raise NotImplementedError(
                     f"{frame['prec']}-bit JPEG not supported")
-            _block_grids(frame)
+            _block_grids(frame)["progressive"] = marker == 0xC2
         elif marker == 0xDD:  # DRI
             restart_interval = struct.unpack_from(">H", seg, 0)[0]
         elif marker == 0xDA:  # SOS — entropy data follows
@@ -585,7 +589,7 @@ def _jpeg_segment(raw: bytes, pos: int) -> tuple:
     return marker, body, pos + 2 + seglen
 
 
-def _parse_sof(seg: bytes, progressive: bool = False) -> dict:
+def _parse_sof(seg: bytes) -> dict:
     """SOFn segment (B.2.2) → frame dict: ``prec``, ``w``, ``h`` and each
     component's ``id``, sampling ``h``/``v`` and quant table ``tq``. A
     segment too short for its component count raises ValueError."""
@@ -596,8 +600,7 @@ def _parse_sof(seg: bytes, progressive: bool = False) -> dict:
     comps = [{"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq}
              for cid, hv, tq in (seg[6 + 3 * c:9 + 3 * c]
                                  for c in range(ncomp))]
-    return {"prec": prec, "w": w, "h": h, "comps": comps,
-            "progressive": progressive}
+    return {"prec": prec, "w": w, "h": h, "comps": comps}
 
 
 def _block_grids(frame: dict) -> dict:
@@ -834,18 +837,23 @@ class _BitWriter:
             self.write(0xFF, 8 - self.n)  # pad with 1-bits (T.81 F.1.2.3)
 
 
-def _quality_scale(table: list, quality: int) -> list:
+@functools.lru_cache(maxsize=128)
+def _quant_tables(quality: int) -> tuple:
+    """The Annex K luma and chroma quant tables scaled to ``quality``
+    (1..100, the IJG scale), built once per quality."""
     quality = max(1, min(100, quality))
     scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    return [max(1, min(255, (t * scale + 50) // 100)) for t in table]
+    return tuple(tuple(max(1, min(255, (t * scale + 50) // 100))
+                       for t in table) for table in (_QT_LUMA, _QT_CHROMA))
 
 
 def _jpeg_precompute(pixels: list, quality: int, subsample: tuple) -> dict:
     """Shared front half of the two encoders: RGB/gray rows → color
-    convert → chroma subsample → MCU-pad → quantized zigzag coefficient
-    blocks per component. Baseline and progressive emit the SAME
-    coefficients, so progressive decode must reproduce baseline decode
-    bit-for-bit (the round-trip parity test leans on this)."""
+    convert → chroma subsample → frame header → MCU-pad → quantized zigzag
+    coefficient blocks per component. Baseline and progressive emit the
+    SAME coefficients, so progressive decode must reproduce baseline
+    decode bit-for-bit (the round-trip parity test leans on this)."""
+    import struct
     import numpy as np
 
     hs, vs = subsample
@@ -854,63 +862,49 @@ def _jpeg_precompute(pixels: list, quality: int, subsample: tuple) -> dict:
     height = len(pixels)
     width = len(pixels[0]) if height else 0
     arr = np.array(pixels, dtype=float)  # (h, w, 3) RGB or (h, w) gray
-    gray = arr.ndim == 2
-    if gray:
-        y, cb, cr = arr, None, None
+    if arr.ndim == 2:
+        planes = [arr]
         hs = vs = 1
     else:
         r, g, b = arr[..., 0], arr[..., 1], arr[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128
+        planes = [0.299 * r + 0.587 * g + 0.114 * b,
+                  -0.168736 * r - 0.331264 * g + 0.5 * b + 128,
+                  0.5 * r - 0.418688 * g - 0.081312 * b + 128]
     if (hs, vs) == (2, 2):
         ph = -(-height // 2) * 2
         pw = -(-width // 2) * 2
-        cbp = np.pad(cb, ((0, ph - height), (0, pw - width)), mode="edge")
-        crp = np.pad(cr, ((0, ph - height), (0, pw - width)), mode="edge")
-        cb = (cbp[0::2, 0::2] + cbp[1::2, 0::2] + cbp[0::2, 1::2]
-              + cbp[1::2, 1::2]) / 4
-        cr = (crp[0::2, 0::2] + crp[1::2, 0::2] + crp[0::2, 1::2]
-              + crp[1::2, 1::2]) / 4
+        for i in (1, 2):
+            cp = np.pad(planes[i], ((0, ph - height), (0, pw - width)),
+                        mode="edge")
+            planes[i] = (cp[0::2, 0::2] + cp[1::2, 0::2] + cp[0::2, 1::2]
+                         + cp[1::2, 1::2]) / 4
 
-    qluma = _quality_scale(_QT_LUMA, quality)
-    qchroma = _quality_scale(_QT_CHROMA, quality)
+    # The frame header comes first: its block grids, the ones the decoder
+    # computes (_block_grids), fix how far each plane is padded, so the
+    # scans never walk past the coefficient arrays.
+    ncomp = len(planes)
+    sof = struct.pack(">BHHB", 8, height, width, ncomp) + bytes(
+        (1, (hs << 4) | vs, 0, 2, 0x11, 1, 3, 0x11, 1)[:3 * ncomp])
+    frame = _block_grids(_parse_sof(sof))
+    qluma, qchroma = _quant_tables(quality)
     m = _idct_basis()
     zz = np.array(_ZIGZAG)
-
-    def _plane_coefs(plane, qtab):
-        """All quantized zigzag coefficient blocks of a (padded) plane in
-        one shot: reshape into 8x8 tiles, one einsum for every tile's
-        2-D DCT, quantize, zigzag-gather — the per-block Python work left
-        in the MCU loop is then only Huffman emission."""
-        bh, bw = plane.shape[0] // 8, plane.shape[1] // 8
-        tiles = (plane.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
-                 - 128.0)
-        f = m @ tiles @ m.T  # broadcast 2-D DCT over all (bh, bw) tiles
-        q = np.rint(f.reshape(bh, bw, 64)[:, :, zz]
-                    / qtab).astype(np.int64)
-        return q
-
-    mcus_x = -(-width // (8 * hs))
-    mcus_y = -(-height // (8 * vs))
-    # Pad every plane to its MCU-aligned size with edge replication so a
-    # block read never leaves the array (4:2:0 luma MCUs cover 16x16 and
-    # can lie fully outside a narrow image).
-    def _pad(plane, rows, cols):
-        return np.pad(plane, ((0, rows - plane.shape[0]),
-                              (0, cols - plane.shape[1])), mode="edge")
-
-    y = _pad(y, mcus_y * vs * 8, mcus_x * hs * 8)
-    ycoefs = _plane_coefs(y, np.array(qluma, dtype=float))
-    ccoefs = None
-    if not gray:
-        cb = _pad(cb, mcus_y * 8, mcus_x * 8)
-        cr = _pad(cr, mcus_y * 8, mcus_x * 8)
-        qc = np.array(qchroma, dtype=float)
-        ccoefs = [_plane_coefs(cb, qc), _plane_coefs(cr, qc)]
-    return {"gray": gray, "width": width, "height": height,
-            "hs": hs, "vs": vs, "qluma": qluma, "qchroma": qchroma,
-            "ycoefs": ycoefs, "ccoefs": ccoefs}
+    coefs = []
+    for plane, c, q in zip(planes, frame["comps"], (qluma, qchroma, qchroma)):
+        # Edge replication out to the MCU-padded grid (4:2:0 luma MCUs
+        # cover 16x16 and can lie fully outside a narrow image), then every
+        # block at once: 8x8 tiles, one broadcast 2-D DCT, quantize,
+        # zigzag-gather.
+        bh, bw = c["bh"], c["bw"]
+        if plane.shape != (bh * 8, bw * 8):
+            plane = np.pad(plane, ((0, bh * 8 - plane.shape[0]),
+                                   (0, bw * 8 - plane.shape[1])), mode="edge")
+        tiles = plane.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3) - 128.0
+        f = m @ tiles @ m.T
+        coefs.append(np.rint(f.reshape(bh, bw, 64)[:, :, zz]
+                             / np.array(q, dtype=float)).astype(np.int64))
+    return {"sof": sof, "frame": frame, "qluma": qluma, "qchroma": qchroma,
+            "ycoefs": coefs[0], "ccoefs": coefs[1:] or None}
 
 
 # Progressive AC Huffman table: the Annex K tables lack the EOBn (n>0)
@@ -954,12 +948,12 @@ _PROG_SCRIPT = (
 def _jpeg_header(pre: dict, sof_marker: int, ac_tables: tuple,
                  restart_interval: int) -> tuple:
     """SOI through DRI for both encoders: JFIF APP0, the quant tables, the
-    frame header ``sof_marker`` (SOF0 or SOF2; luma sampled hs x vs,
-    chroma 1x1), the Annex K DC tables beside ``ac_tables`` and a DRI
-    when ``restart_interval`` is set (out of u16 range: ValueError).
-    Returns ``(header, frame)``, where
-    ``frame`` is the frame header as the decoder parses it, so the scans
-    walk the block grids the decoder fills."""
+    frame header ``pre["sof"]`` under ``sof_marker`` (SOF0 or SOF2; luma
+    sampled hs x vs, chroma 1x1), the Annex K DC tables beside
+    ``ac_tables`` and a DRI when ``restart_interval`` is set (out of u16
+    range: ValueError). Returns ``(header, codes)``: ``codes[slot]`` is
+    the (DC, AC) pair of ``{symbol: (code, length)}`` the scans write
+    with, slot 0 luma and 1 chroma."""
     import struct
 
     if not 0 <= restart_interval <= 0xFFFF:  # DRI carries a u16
@@ -969,44 +963,43 @@ def _jpeg_header(pre: dict, sof_marker: int, ac_tables: tuple,
     def segment(marker: int, body: bytes) -> bytes:
         return bytes((0xFF, marker)) + struct.pack(">H", 2 + len(body)) + body
 
-    ncomp = 1 if pre["gray"] else 3
-    ntab = min(ncomp, 2)  # table slots in use: luma, chroma
-    sof = struct.pack(">BHHB", 8, pre["height"], pre["width"], ncomp)
-    sof += bytes((1, (pre["hs"] << 4) | pre["vs"], 0,
-                  2, 0x11, 1, 3, 0x11, 1)[:3 * ncomp])
+    ntab = min(len(pre["frame"]["comps"]), 2)  # slots in use: luma, chroma
     # JFIF 1.1, no density unit, 1:1 density, no thumbnail
     out = bytearray(b"\xff\xd8")
     out += segment(0xE0, b"JFIF\x00" + bytes((1, 1, 0, 0, 1, 0, 1, 0, 0)))
     for tq, q in enumerate((pre["qluma"], pre["qchroma"])[:ntab]):
         out += segment(0xDB, bytes((tq,)) + bytes(q))
-    out += segment(sof_marker, sof)
+    out += segment(sof_marker, pre["sof"])
     for th in range(ntab):
         for tc, (bits, vals) in enumerate((_DC_TABLES[th], ac_tables[th])):
             out += segment(0xC4, bytes(((tc << 4) | th,)) + bytes(bits)
                            + bytes(vals))
     if restart_interval:
         out += segment(0xDD, struct.pack(">H", restart_interval))
-    return out, _block_grids(_parse_sof(sof, sof_marker == 0xC2))
+    codes = tuple((_canonical_codes(*dc), _canonical_codes(*ac))
+                  for dc, ac in zip(_DC_TABLES, ac_tables))
+    return out, codes
 
 
-def _encode_scan(pre: dict, frame: dict, scan: tuple, ac_tables: tuple,
+def _encode_scan(pre: dict, scan: tuple, codes: tuple,
                  restart_interval: int) -> bytearray:
     """SOS header and entropy-coded data of one scan over the quantized
     coefficients in ``pre``, the inverse of :func:`_decode_scan`.
-    ``scan`` is (component indices, Ss, Se, Ah, Al).
+    ``scan`` is (component indices, Ss, Se, Ah, Al); ``codes`` come from
+    :func:`_jpeg_header`.
 
-    Blocks come in :func:`_scan_mcus` order. With Ss=0 each block codes
-    its DC term, first (the difference of dc >> Al from the predictor) or
-    refine (bit Al); when Se>0 too (a sequential scan) the block's 1..Se
-    band follows and the block's EOB is written at once. With Ss>0 the
-    Ss..Se band is coded first (Ah=0) or refined (Ah=Al+1) and EOBs join
-    runs across blocks (G.1.2.2-3). Every ``restart_interval`` MCUs an
-    RSTn resets the DC predictors and the EOB run."""
+    Blocks come in :func:`_scan_mcus` order over ``pre["frame"]``. With
+    Ss=0 each block codes its DC term, first (the difference of dc >> Al
+    from the predictor) or refine (bit Al); when Se>0 too (a sequential
+    scan) the block's 1..Se band follows and the block's EOB is written at
+    once. With Ss>0 the Ss..Se band is coded first (Ah=0) or refined
+    (Ah=Al+1) and EOBs join runs across blocks (G.1.2.2-3); an all-zero
+    band only adds to the run. Every ``restart_interval`` MCUs an RSTn
+    resets the DC predictors and the EOB run."""
     import struct
-    import numpy as np
 
     cis, ss, se, ah, al = scan
-    comps = frame["comps"]
+    comps = pre["frame"]["comps"]
     coefs = [pre["ycoefs"], *(pre["ccoefs"] or ())]
     sos = bytes([len(cis)])
     for ci in cis:  # Td/Ta: luma uses table slot 0, chroma slot 1
@@ -1014,35 +1007,21 @@ def _encode_scan(pre: dict, frame: dict, scan: tuple, ac_tables: tuple,
     sos += bytes((ss, se, (ah << 4) | al))
     out = bytearray(b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos)
 
-    lo = ss or 1  # a sequential band starts after the DC term
-    width = se - lo + 1
-    dcs, bands, codes = {}, {}, {}
+    blocks, tabs = {}, {}
     for ci in cis:
-        c = comps[ci]
-        grid = coefs[ci] if len(cis) > 1 else coefs[ci][:c["nbh"], :c["nbw"]]
-        if ss == 0:
-            dc = grid[..., 0] >> al
-            dcs[ci] = (dc & 1 if ah else dc).tolist()
-        if se:
-            # Point transform (G.1.1.1.1): AC magnitudes shift by Al. Each
-            # block's band is cut after its last nonzero coefficient.
-            band = grid[..., lo:se + 1]
-            mag = np.abs(band) >> al
-            sv = np.where(band < 0, -mag, mag)
-            nz = sv != 0
-            keep = np.where(nz.any(-1), width - nz[..., ::-1].argmax(-1), 0)
-            bands[ci] = [[b[:k] for b, k in zip(brow, krow)]
-                         for brow, krow in zip(sv.tolist(), keep.tolist())]
-        slot = 1 if ci else 0
-        codes[ci] = (_canonical_codes(*_DC_TABLES[slot]),
-                     _canonical_codes(*ac_tables[slot]))
+        # Point transform (G.1.1.1.1): dc >> Al, AC magnitudes >> Al.
+        c = coefs[ci][..., ss:se + 1]
+        if al:
+            c = (c + (c < 0) * ((1 << al) - 1)) >> al if ss else c >> al
+        blocks[ci] = c.tolist()  # [block row][block column] -> Ss..Se
+        tabs[ci] = codes[1 if ci else 0]
 
     writer = _BitWriter()
     write = writer.write
     pred = [0] * len(comps)
     eobrun, bits = 0, []  # pending EOB run and its refinement bits
-    act = codes[cis[0]][1]  # an EOB run only spans one-component scans
-    for n, mcu in enumerate(_scan_mcus(frame, cis)):
+    act = tabs[cis[0]][1]  # an EOB run only spans one-component scans
+    for n, mcu in enumerate(_scan_mcus(pre["frame"], cis)):
         if restart_interval and n and n % restart_interval == 0:
             eobrun = _flush_eobrun(write, act, eobrun, bits)
             writer.flush()
@@ -1052,11 +1031,12 @@ def _encode_scan(pre: dict, frame: dict, scan: tuple, ac_tables: tuple,
             write = writer.write
             pred = [0] * len(comps)
         for ci, row, col in mcu:
-            dct, act = codes[ci]
+            dct, act = tabs[ci]
+            band = blocks[ci][row][col]
             if ss == 0:
-                d = dcs[ci][row][col]
+                d = band[0]
                 if ah:
-                    write(d, 1)
+                    write(d & 1, 1)
                 else:
                     diff = d - pred[ci]
                     pred[ci] = d
@@ -1067,11 +1047,17 @@ def _encode_scan(pre: dict, frame: dict, scan: tuple, ac_tables: tuple,
                         s = diff.bit_length()
                     code, ln = dct[s]
                     write((code << s) | diff, ln + s)
-            if se:
-                eobrun = (_encode_ac_refine if ah else _encode_ac_first)(
-                    write, act, bands[ci][row][col], width, eobrun, bits)
-                if eobrun and (ss == 0 or eobrun == 0x7FFF):
-                    eobrun = _flush_eobrun(write, act, eobrun, bits)
+                if not se:
+                    continue
+                band = band[1:]
+            if not any(band):
+                eobrun += 1
+            elif ah:
+                eobrun = _encode_ac_refine(write, act, band, eobrun, bits)
+            else:
+                eobrun = _encode_ac_first(write, act, band, eobrun, bits)
+            if ss == 0 or eobrun == 0x7FFF:
+                eobrun = _flush_eobrun(write, act, eobrun, bits)
     _flush_eobrun(write, act, eobrun, bits)
     writer.flush()
     out += writer.out
@@ -1092,42 +1078,41 @@ def _flush_eobrun(write, actab: dict, eobrun: int, bits: list) -> int:
     return 0
 
 
-def _encode_ac_first(write, actab: dict, band: list, width: int,
-                     eobrun: int, bits: list) -> int:
+def _encode_ac_first(write, actab: dict, band: list, eobrun: int,
+                     bits: list) -> int:
     """First coding of one block's point-transformed band (Ah=0, or a
-    sequential scan): zero runs, ZRL past 15 zeros, then the (run, size)
-    symbol and the value's bits. ``band`` ends at its last nonzero
-    coefficient; when it is shorter than ``width`` the block ends in an
-    EOB, which joins the run. Returns the EOB run."""
-    if band:
-        eobrun = _flush_eobrun(write, actab, eobrun, bits)
+    sequential scan), which holds a nonzero coefficient: the pending EOB
+    run, then per nonzero value its zero run (ZRL past 15 zeros), the
+    (run, size) symbol and the value's bits. A band that ends in zeros
+    ends in an EOB, which starts the next run. Returns that run."""
+    eobrun = _flush_eobrun(write, actab, eobrun, bits)
+    r = 0
+    for v in band:
+        if not v:
+            r += 1
+            continue
+        while r > 15:
+            write(*actab[0xF0])
+            r -= 16
+        if v < 0:
+            s = (-v).bit_length()
+            v += (1 << s) - 1
+        else:
+            s = v.bit_length()
+        code, ln = actab[(r << 4) | s]
+        write((code << s) | v, ln + s)
         r = 0
-        for v in band:
-            if not v:
-                r += 1
-                continue
-            while r > 15:
-                write(*actab[0xF0])
-                r -= 16
-            if v < 0:
-                s = (-v).bit_length()
-                v += (1 << s) - 1
-            else:
-                s = v.bit_length()
-            code, ln = actab[(r << 4) | s]
-            write((code << s) | v, ln + s)
-            r = 0
-    return eobrun + (len(band) < width)
+    return int(r > 0)
 
 
-def _encode_ac_refine(write, actab: dict, band: list, width: int,
-                      eobrun: int, bits: list) -> int:
+def _encode_ac_refine(write, actab: dict, band: list, eobrun: int,
+                      bits: list) -> int:
     """AC refinement of one block (Ah=Al+1, the ``encode_mcu_AC_refine``
-    algorithm): ``band`` holds the coefficients shifted by Al, cut after
-    the last nonzero one. A magnitude of 1 is newly nonzero (symbol plus
-    sign bit); a larger one already is, and gives one correction bit,
-    buffered until the next symbol or, past the last new coefficient,
-    behind the EOB run. Returns the EOB run."""
+    algorithm): ``band`` holds the coefficients shifted by Al. A
+    magnitude of 1 is newly nonzero (symbol plus sign bit); a larger one
+    already is, and gives one correction bit, buffered until the next
+    symbol or, past the last new coefficient, behind the EOB run. Returns
+    the EOB run."""
     eob = -1  # last newly-nonzero coefficient
     for k, v in enumerate(band):
         if v == 1 or v == -1:
@@ -1156,7 +1141,7 @@ def _encode_ac_refine(write, actab: dict, band: list, width: int,
             write(b, 1)
         pend = []
         r = 0
-    if r or pend or len(band) < width:
+    if r or pend:
         eobrun += 1
         bits.extend(pend)
     return eobrun
@@ -1172,9 +1157,9 @@ def encode_jpeg(pixels: list, quality: int = 90,
     single- and multi-block MCU paths. ``restart_interval`` > 0 emits
     DRI + RSTn markers every N MCUs."""
     pre = _jpeg_precompute(pixels, quality, subsample)
-    out, frame = _jpeg_header(pre, 0xC0, _AC_STD_TABLES, restart_interval)
-    scan = ((0, 1, 2)[:len(frame["comps"])], 0, 63, 0, 0)
-    out += _encode_scan(pre, frame, scan, _AC_STD_TABLES, restart_interval)
+    out, codes = _jpeg_header(pre, 0xC0, _AC_STD_TABLES, restart_interval)
+    scan = ((0, 1, 2)[:len(pre["frame"]["comps"])], 0, 63, 0, 0)
+    out += _encode_scan(pre, scan, codes, restart_interval)
     return bytes(out + b"\xff\xd9")
 
 
@@ -1188,12 +1173,12 @@ def encode_jpeg_progressive(pixels: list, quality: int = 90,
     EOB runs, ZRL, correction bits, newly-nonzero insertion, interleaved
     and natural block order."""
     pre = _jpeg_precompute(pixels, quality, subsample)
-    out, frame = _jpeg_header(pre, 0xC2, _AC_PROG_TABLES, restart_interval)
+    out, codes = _jpeg_header(pre, 0xC2, _AC_PROG_TABLES, restart_interval)
+    ncomp = len(pre["frame"]["comps"])
     for cis, *rest in _PROG_SCRIPT:
-        cis = tuple(ci for ci in cis if ci < len(frame["comps"]))
+        cis = tuple(ci for ci in cis if ci < ncomp)
         if cis:
-            out += _encode_scan(pre, frame, (cis, *rest), _AC_PROG_TABLES,
-                                restart_interval)
+            out += _encode_scan(pre, (cis, *rest), codes, restart_interval)
     return bytes(out + b"\xff\xd9")
 
 

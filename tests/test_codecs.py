@@ -397,6 +397,8 @@ def test_jpeg_coefficients_equal_the_encoders(w, h, subsample, quality,
             encode(px, quality=quality, subsample=subsample))
         assert len(coefs) == len(want)
         for c, got, ref in zip(frame["comps"], coefs, want):
+            # The encoder pads to the MCU grid the decoder allocates.
+            assert got.shape == ref.shape
             # The natural grid: a non-interleaved progressive AC scan
             # leaves the MCU padding beyond it at zero.
             nbh, nbw = c["nbh"], c["nbw"]
